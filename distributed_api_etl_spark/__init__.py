@@ -17,4 +17,8 @@ Design stance (see README.md):
 
 __version__ = "0.1.0"
 
+from distributed_api_etl_spark.core.runtime import reuse_unchanged_zip_directories
 from distributed_api_etl_spark.session import get_spark  # noqa: F401
+
+# every Python worker that unpickles a library function imports this package
+reuse_unchanged_zip_directories()

@@ -78,7 +78,8 @@ class WorkerTokenProvider:
         # per chunk), while an asyncio.Lock binds to the loop that first awaits
         # it and raises "bound to a different event loop" on the next chunk.
         # The lock is only ever taken inside asyncio.to_thread, so holding it
-        # across the blocking fetch never stalls an event loop.
+        # across the blocking fetch never stalls an event loop. A valid cached
+        # token is read without the lock or the thread hop (get_token).
         self._lock = threading.Lock()
 
     def _fetch(self) -> Token:
@@ -112,6 +113,9 @@ class WorkerTokenProvider:
             return self._token.token_value
 
     async def get_token(self) -> str:
+        token = self._token
+        if token is not None and not token.is_expired(self._margin):
+            return token.token_value
         return await asyncio.to_thread(self._get_token_blocking)
 
 

@@ -75,8 +75,10 @@ class BatchProcessor:
         initial_remaining: int | None = None
         for attempt in range(1, self.max_attempts + 1):
             stats.attempts = attempt
-            todo = self.remaining(source_df, sink_reader())
-            total = todo.count()
+            sink_df = sink_reader()
+            todo = self.remaining(source_df, sink_df)
+            # no sink yet: todo IS source_df, already counted above
+            total = stats.total_rows if sink_df is None else todo.count()
             if initial_remaining is None:
                 initial_remaining = total
             if total == 0:

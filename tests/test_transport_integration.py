@@ -216,6 +216,52 @@ def test_token_provider_survives_event_loop_changes(server):
     assert len(set(first) | set(second)) == 1  # single cached token throughout
 
 
+def test_valid_token_skips_thread_hop_and_expired_token_fetches_once(monkeypatch):
+    """A valid cached token is returned without ``asyncio.to_thread`` (the
+    hop shares the default executor with the blocking sends); concurrent
+    callers holding an expired token share exactly one fetch."""
+    import asyncio
+    import threading
+    import time
+
+    from distributed_api_etl_spark.auth.models import Token
+
+    provider = WorkerTokenProvider({"type": "oauth2_client_credentials", "refresh_margin": 1.0})
+    fetches = []
+    release = threading.Event()
+
+    def fetch():
+        fetches.append(1)
+        release.wait(5)  # hold the lock until every caller is queued on it
+        return Token("fresh", time.time() + 3600)
+
+    monkeypatch.setattr(provider, "_fetch", fetch)
+
+    real_to_thread = asyncio.to_thread
+    hops = []
+
+    async def counting_to_thread(fn, *args):
+        hops.append(fn)
+        return await real_to_thread(fn, *args)
+
+    monkeypatch.setattr(asyncio, "to_thread", counting_to_thread)
+
+    provider._token = Token("cached", time.time() + 3600)
+    assert asyncio.run(provider.get_token()) == "cached"
+    assert hops == [] and fetches == []
+
+    async def contend():
+        calls = [asyncio.ensure_future(provider.get_token()) for _ in range(8)]
+        await asyncio.sleep(0.2)
+        release.set()
+        return await asyncio.gather(*calls)
+
+    provider._token = Token("stale", time.time() - 1)
+    assert asyncio.run(contend()) == ["fresh"] * 8
+    assert len(fetches) == 1
+    assert len(hops) == 8
+
+
 def test_oauth2_fallback_direct_grant_when_rpc_down(server):
     auth = {
         "type": "oauth2_client_credentials",
