@@ -100,7 +100,7 @@ def main() -> None:
     # VERDICT r16 #8: when the first RUNS walls spread >30% the box was
     # loaded mid-query and even the min is suspect — take ONE extra run
     # (still min-of-all, additions-only: the parsed summary line's schema
-    # is unchanged, the detail line declares runs per query)
+    # is unchanged, the detail line's runs_done gives the runs per query)
     RESPREAD_PCT = 30.0
     MAX_RUNS = 3
     timings: dict[str, float] = {}
@@ -166,7 +166,6 @@ def main() -> None:
     detail = {
         "metric": "bench_detail",
         "sf": float(sf),
-        "runs_per_query": RUNS,
         "runs_done": runs_done,
         "respread_extra_run_pct": RESPREAD_PCT,
         "agg": "min",

@@ -34,6 +34,11 @@ RESTRICTED_PORTS = frozenset(
      1433, 1521, 2049, 3306, 3389, 5432, 6379, 6666, 9200, 11211, 27017}
 )
 
+# How often serve_forever checks for shutdown. ``shutdown()`` blocks until the
+# next check, so the default 0.5 s poll added up to half a second to every
+# OAuth2 run's teardown; 50 ms keeps the idle wake-ups negligible.
+SERVE_POLL_INTERVAL_S = 0.05
+
 
 def _probe(host: str, port: int) -> None:
     """Raise OSError until (host, port) accepts connections."""
@@ -150,7 +155,9 @@ class RpcBootstrapper:
         )
         self._server = ThreadingHTTPServer((bind_host, port), handler)
         self._server_thread = threading.Thread(
-            target=self._server.serve_forever, daemon=True
+            target=self._server.serve_forever,
+            kwargs={"poll_interval": SERVE_POLL_INTERVAL_S},
+            daemon=True,
         )
         self._server_thread.start()
         bound_port = self._server.server_address[1]

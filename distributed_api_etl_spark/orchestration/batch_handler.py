@@ -9,12 +9,46 @@ exactly-once upsert when delta-spark is installed.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from distributed_api_etl_spark.core.bronze import BRONZE_SCHEMA
 from distributed_api_etl_spark.orchestration.partition_executor import (
     build_map_in_pandas_fn,
     build_partition_fn,
 )
+
+
+# Formats that bind columns by name: reading them with the one declared column
+# skips schema inference from file footers (a Spark job per read).
+_BY_NAME_FORMATS = frozenset({"parquet", "orc"})
+_SINK_ID_SCHEMA = T.StructType([BRONZE_SCHEMA["request_id"]])
+
+
+def read_sink_ids(spark: SparkSession, sink: dict) -> DataFrame | None:
+    """The sink's ``request_id`` column, or ``None`` when the sink does not
+    exist yet.
+
+    Existence is asked directly (Hadoop ``FileSystem.exists`` for a location,
+    ``catalog.tableExists`` for a name), so a read error on a sink that exists
+    propagates: reading it as "nothing processed yet" would re-send the whole
+    source. parquet and orc are read with the fixed bronze type of
+    ``request_id`` instead of inferring a schema; csv binds columns by
+    position and delta reads its own log, so they keep their own resolution.
+    """
+    location = sink.get("location")
+    if not location:
+        if not spark.catalog.tableExists(sink["name"]):
+            return None
+        return spark.table(sink["name"]).select("request_id")
+    sc = spark.sparkContext
+    path = sc._jvm.org.apache.hadoop.fs.Path(location)  # noqa: SLF001
+    if not path.getFileSystem(sc._jsc.hadoopConfiguration()).exists(path):  # noqa: SLF001
+        return None
+    fmt = sink.get("format", "parquet")
+    reader = spark.read.format(fmt)
+    if fmt in _BY_NAME_FORMATS:
+        reader = reader.schema(_SINK_ID_SCHEMA)
+    return reader.load(location).select("request_id")
 
 
 def delta_available(spark: SparkSession) -> bool:
@@ -107,18 +141,13 @@ class BronzeBatchHandler:
         prunes to the request_id column only; partition the sink (e.g. by
         ingest date) to bound it further, or use Delta where available.
         """
-        location = sink["location"]
-        spark = self._spark
-        try:
-            existing = spark.read.format("parquet").load(location).select("request_id")
-        except Exception:
-            existing = None  # first write: nothing to merge against
-        if existing is not None:
+        existing = read_sink_ids(self._spark, sink)
+        if existing is not None:  # None: first write, nothing to merge against
             result = result.join(existing, "request_id", "left_anti")
         writer = result.write.format("parquet").mode("append")
         if sink.get("partition_by"):
             writer = writer.partitionBy(*sink["partition_by"])
-        writer.save(location)
+        writer.save(sink["location"])
 
     def result_df(self) -> DataFrame | None:
         if not self.collected:

@@ -38,16 +38,31 @@ class BatchRunStats:
     errors: list[str] = field(default_factory=list)
 
 
+def count_source(df: DataFrame, id_column: str = "request_id") -> int:
+    """Row count of ``df``, checking in the same aggregate that every row has
+    a ``request_id``. A null id never matches the sink's anti-join, so it
+    would be re-sent on every attempt; fail before any request instead.
+    ``id_column`` is the source's name for the id, used in the error."""
+    total, with_id = df.agg(F.count(F.lit(1)), F.count("request_id")).first()
+    if with_id != total:
+        raise ValueError(
+            f"id column {id_column!r} is null in {total - with_id} of {total} rows"
+        )
+    return total
+
+
 class BatchProcessor:
     def __init__(
         self,
         batch_size: int = 10_000,
         num_partitions: int | None = None,
         max_attempts: int = 5,
+        id_column: str = "request_id",
     ) -> None:
         self.batch_size = batch_size
         self.num_partitions = num_partitions
         self.max_attempts = max_attempts
+        self.id_column = id_column
 
     @staticmethod
     def remaining(source_df: DataFrame, sink_df: DataFrame | None) -> DataFrame:
@@ -71,7 +86,7 @@ class BatchProcessor:
         sink_reader: Callable[[], DataFrame | None],
     ) -> BatchRunStats:
         stats = BatchRunStats()
-        stats.total_rows = source_df.count()
+        stats.total_rows = count_source(source_df, self.id_column)
         initial_remaining: int | None = None
         for attempt in range(1, self.max_attempts + 1):
             stats.attempts = attempt

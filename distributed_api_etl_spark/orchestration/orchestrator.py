@@ -20,10 +20,14 @@ from pyspark.sql import functions as F
 
 from distributed_api_etl_spark.config.loader import load_config
 from distributed_api_etl_spark.config.models import PipelineConfig, validate_dataframe
-from distributed_api_etl_spark.orchestration.batch_handler import BronzeBatchHandler
+from distributed_api_etl_spark.orchestration.batch_handler import (
+    BronzeBatchHandler,
+    read_sink_ids,
+)
 from distributed_api_etl_spark.orchestration.batch_processor import (
     BatchProcessor,
     BatchRunStats,
+    count_source,
 )
 
 
@@ -138,20 +142,8 @@ class PipelineOrchestrator:
         return sink.model_dump()
 
     def _sink_reader(self):
-        sink = self._sink_dict()
-        spark = self.spark
-
-        def read() -> DataFrame | None:
-            if sink is None:
-                return None
-            try:
-                if sink.get("location"):
-                    return spark.read.format(sink["format"]).load(sink["location"])
-                return spark.table(sink["name"])
-            except Exception:
-                return None  # sink doesn't exist yet
-
-        return read
+        sink, spark = self._sink_dict(), self.spark
+        return lambda: None if sink is None else read_sink_ids(spark, sink)
 
     # -- run -----------------------------------------------------------------
     def run(
@@ -172,8 +164,8 @@ class PipelineOrchestrator:
                 batch_size=ex.batch_size,
                 num_partitions=ex.num_partitions,
                 max_attempts=ex.max_attempts,
+                id_column=source_id or self.config.tables.source.id_column,
             )
-            sink_reader = self._sink_reader() if not dry_run else (lambda: None)
             if dry_run:
                 # single pass, no idempotency loop (nothing is persisted) —
                 # but execution.num_partitions must still bind, exactly as in
@@ -181,7 +173,7 @@ class PipelineOrchestrator:
                 # would hand each partition its own process-scoped resources
                 # (e.g. a fresh RateLimiter bucket), silently voiding
                 # single-partition invariants (ADVICE r8 #1 / VERDICT r9 #2).
-                total = source.count()
+                total = count_source(source, processor.id_column)
                 todo, n = processor.assign_batches(source, total)
                 parts = ex.num_partitions or n
                 for b in range(n):
@@ -199,7 +191,7 @@ class PipelineOrchestrator:
                     total_rows=total, processed_rows=total, attempts=1, batches_ok=n
                 )
             else:
-                stats = processor.process(source, handler.process, sink_reader)
+                stats = processor.process(source, handler.process, self._sink_reader())
             return PipelineResult(stats=stats, bronze_df=handler.result_df())
         finally:
             self._stop_auth_runtime()

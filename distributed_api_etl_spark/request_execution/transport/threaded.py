@@ -1,7 +1,7 @@
 """Thread-bridged HTTP engine built on ``requests`` (stdlib-adjacent, always
-available). The async boundary is ``asyncio.to_thread``: the event loop stays
-responsive while a pooled ``requests.Session`` does blocking I/O in the
-default executor.
+available). The async boundary is ``loop.run_in_executor`` on the engine's own
+thread pool: the event loop stays responsive while a pooled
+``requests.Session`` does blocking I/O.
 
 Why this exists: aiohttp may be absent from the runtime image. The engine
 abstraction keeps the pipeline identical either way; on clusters with
@@ -9,13 +9,16 @@ aiohttp installed, ``transport.engine: aiohttp`` selects the native-async
 path (see aiohttp_engine.py).
 
 Concurrency: the per-partition consumer count (``max_concurrent_requests``,
-default 20) bounds in-flight requests; the session's connection pool is
-sized to match so sockets are reused, not thrashed.
+default 20) bounds in-flight requests. The thread pool and the session's
+connection pool are both sized to ``pool_limit``, so neither caps the
+consumers below that: sockets are reused, not thrashed, and sends do not
+queue behind the loop's default executor (min(32, cores + 4) threads).
 """
 
 from __future__ import annotations
 
 import asyncio
+from concurrent.futures import ThreadPoolExecutor
 
 from distributed_api_etl_spark.request_execution.models import (
     TransportRequest,
@@ -39,6 +42,7 @@ class RequestsEngine(TransportEngine):
         self._verify = verify_tls
         self._cert = client_cert
         self._session = None
+        self._pool: ThreadPoolExecutor | None = None
 
     def _get_session(self):
         if self._session is None:
@@ -57,6 +61,9 @@ class RequestsEngine(TransportEngine):
             if self._cert:
                 s.cert = self._cert
             self._session = s
+            self._pool = ThreadPoolExecutor(
+                max_workers=self._pool_limit, thread_name_prefix="requests-engine"
+            )
         return self._session
 
     def _send_sync(self, request: TransportRequest) -> TransportResponse:
@@ -81,9 +88,14 @@ class RequestsEngine(TransportEngine):
             return TransportResponse(error=f"{type(exc).__name__}: {exc}")
 
     async def send(self, request: TransportRequest) -> TransportResponse:
-        return await asyncio.to_thread(self._send_sync, request)
+        self._get_session()
+        return await asyncio.get_running_loop().run_in_executor(
+            self._pool, self._send_sync, request
+        )
 
     async def aclose(self) -> None:
         if self._session is not None:
             self._session.close()
             self._session = None
+            self._pool.shutdown(wait=False)
+            self._pool = None

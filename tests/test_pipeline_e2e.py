@@ -8,6 +8,8 @@ from pyspark.sql import functions as F
 
 from distributed_api_etl_spark.core.bronze import BRONZE_COLUMNS
 from distributed_api_etl_spark.orchestration import run_pipeline
+from distributed_api_etl_spark.orchestration.batch_handler import read_sink_ids
+from tests.http_server import MockApiServer
 
 
 def base_config(sink_location=None, **execution):
@@ -117,6 +119,94 @@ def test_merge_mode_pipeline_e2e(spark, source, tmp_path):
     sink_df = spark.read.parquet(loc)
     assert sink_df.count() == 100
     assert sink_df.select("request_id").distinct().count() == 100
+
+
+def _job_ids(spark) -> set[int]:
+    return set(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
+
+
+def _files(loc) -> set[str]:
+    import os
+
+    return {os.path.join(d, f) for d, _, fs in os.walk(loc) for f in fs}
+
+
+@pytest.fixture
+def api():
+    srv = MockApiServer().start()
+    yield srv
+    srv.stop()
+
+
+def http_config(api, sink_location=None, **execution):
+    cfg = base_config(sink_location, **execution)
+    cfg["endpoint"]["url"] = f"{api.base_url}/ok"
+    cfg["transport"] = {"engine": "requests", "base_timeout": 5.0}
+    return cfg
+
+
+def test_read_sink_ids_missing_sink_is_none_without_a_job(spark, tmp_path):
+    before = _job_ids(spark)
+    assert read_sink_ids(spark, {"format": "parquet", "location": str(tmp_path / "x")}) is None
+    assert read_sink_ids(spark, {"name": "no_such_bronze_table"}) is None
+    assert _job_ids(spark) == before
+
+
+def test_read_sink_ids_reads_declared_schema_without_a_job(spark, source, tmp_path):
+    """parquet binds columns by name, so the sink read declares the fixed
+    bronze ``request_id`` instead of inferring a schema from file footers
+    (which costs a Spark job on every read)."""
+    loc = str(tmp_path / "bronze")
+    run_pipeline(spark, base_config(sink_location=loc), source_df=source,
+                 source_id="tracking_id")
+    before = _job_ids(spark)
+    ids = read_sink_ids(spark, {"format": "parquet", "location": loc})
+    assert _job_ids(spark) == before
+    assert ids.columns == ["request_id"]
+    assert ids.distinct().count() == 100
+
+
+def test_unreadable_sink_fails_the_run_before_any_request(spark, api, tmp_path):
+    """A read error on a sink that exists is not "nothing processed yet":
+    treating it so would re-send the whole source."""
+    loc = tmp_path / "bronze"
+    loc.mkdir()
+    (loc / "part-0.parquet").write_bytes(b"not a parquet file")
+    src = spark.range(20).select(F.col("id").cast("string").alias("tracking_id"))
+    with pytest.raises(Exception, match="(?i)parquet"):
+        run_pipeline(spark, http_config(api, str(loc)), source_df=src,
+                     source_id="tracking_id")
+    assert api.request_count == 0
+
+
+def test_null_ids_fail_before_any_request(spark, api, tmp_path):
+    """A null id never matches the sink's anti-join: it used to be sent on
+    every attempt and land as request_id 'None' each time."""
+    loc = tmp_path / "bronze"
+    src = spark.createDataFrame([("a",), (None,), ("c",)], "tracking_id string")
+    with pytest.raises(ValueError, match="'tracking_id' is null in 1 of 3 rows"):
+        run_pipeline(spark, http_config(api, str(loc), max_attempts=3),
+                     source_df=src, source_id="tracking_id")
+    with pytest.raises(ValueError, match="tracking_id"):
+        run_pipeline(spark, http_config(api), source_df=src,
+                     source_id="tracking_id", dry_run=True)
+    assert api.request_count == 0
+    assert not loc.exists()
+
+
+def test_partitioned_sink_rerun_is_noop(spark, source, tmp_path):
+    """The sink read declares only request_id; the partition column comes
+    from the directory layout and must not break the idempotency diff."""
+    loc = str(tmp_path / "bronze")
+    cfg = base_config(sink_location=loc)
+    cfg["tables"]["sink"]["partition_by"] = ["method"]
+    run_pipeline(spark, cfg, source_df=source, source_id="tracking_id")
+    written = _files(loc)
+    assert any("method=GET" in f for f in written)
+    r2 = run_pipeline(spark, cfg, source_df=source, source_id="tracking_id")
+    assert r2.stats.processed_rows == 0 and r2.stats.attempts == 1
+    assert _files(loc) == written
+    assert spark.read.parquet(loc).count() == 100
 
 
 def test_dry_run_num_partitions_binds_on_multipartition_source(spark):
