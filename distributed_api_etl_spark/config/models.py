@@ -327,7 +327,6 @@ class ExecutionConfig(BaseModel):
     max_attempts: int = 5
     max_concurrent_requests: int = 20
     max_requests_per_second: float | None = None  # per partition; None => unlimited
-    queue_maxsize_factor: int = 2  # bounded queue = factor * concurrency
     chunk_size: int = 5_000  # rows materialized per asyncio run (memory bound)
 
     @field_validator("batch_size", "max_attempts", "max_concurrent_requests", "chunk_size")

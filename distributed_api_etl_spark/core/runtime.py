@@ -20,6 +20,7 @@ it, so every worker that unpickles a library function has it.
 
 from __future__ import annotations
 
+import asyncio
 import os
 import sys
 import threading
@@ -50,8 +51,15 @@ class ProcessScope:
 
     @classmethod
     def clear(cls) -> None:
+        """Drop every instance, closing those that hold resources (transport
+        engines: sessions, sockets, thread pools) through their ``aclose``.
+        Call it outside a running event loop."""
         with cls._lock:
+            dropped = list(cls._instances.values())
             cls._instances.clear()
+        for inst in dropped:
+            if hasattr(inst, "aclose"):
+                asyncio.run(inst.aclose())
 
 
 class RateLimiter:

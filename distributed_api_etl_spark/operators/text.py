@@ -1005,9 +1005,7 @@ def trigram_logprob_micro_sql(
     )
 
 
-def trigram_logprob_scores(
-    df: DataFrame, id_col: str, text_col: str, extract_kernel: bool = True
-) -> DataFrame:
+def trigram_logprob_scores(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Mean per-token surprisal under a corpus-fit INTERPOLATED TRIGRAM
     LM — one model order above :func:`bigram_logprob_scores`, one closer
     to the KenLM-style 5-gram gate CCNet uses in production.
@@ -1031,37 +1029,14 @@ def trigram_logprob_scores(
     DOUBLE) — n_tokens == the number of scored trigrams, by construction
     of the padding.
     """
-    if extract_kernel:
-        # the r17 Arrow position-stream kernel at order 3 — bit-identical
-        # rows (pinned by test_ngram_stream_kernel_equals_explode at this
-        # order); the bespoke broadcast-interpolation PLAN below is
-        # unchanged, only the extraction runs vectorized (guide §4.2)
-        tri = _ngram_position_stream_kernel(df, id_col, text_col, 3).select(
-            F.col(id_col),
-            F.col("g1").alias("u"),
-            F.col("g2").alias("v"),
-            F.col("g3").alias("w"),
-        )
-    else:
-        t = tokens(F.col(text_col))
-        padded = F.concat(F.array(F.lit(LM_BOS), F.lit(LM_BOS)), t)
-        tri_arr = F.when(
-            F.size(t) >= 1,
-            F.transform(
-                F.sequence(F.lit(1), F.size(t)),
-                lambda i: F.struct(
-                    F.element_at(padded, i).alias("u"),
-                    F.element_at(padded, i + 1).alias("v"),
-                    F.element_at(padded, i + 2).alias("w"),
-                ),
-            ),
-        ).otherwise(F.array().cast("array<struct<u:string,v:string,w:string>>"))
-        tri = df.select(F.col(id_col), F.explode(tri_arr).alias("_g")).select(
-            F.col(id_col),
-            F.col("_g.u").alias("u"),
-            F.col("_g.v").alias("v"),
-            F.col("_g.w").alias("w"),
-        )
+    # the padded position stream comes from the Arrow kernel at order 3;
+    # the broadcast-interpolation plan below is specific to this gate
+    tri = _ngram_position_stream_kernel(df, id_col, text_col, 3).select(
+        F.col(id_col),
+        F.col("g1").alias("u"),
+        F.col("g2").alias("v"),
+        F.col("g3").alias("w"),
+    )
     ct = tri.groupBy("u", "v", "w").agg(F.count("*").alias("c_uvw"))
     # read four times (prefix/tail/unigram rollups + the score join):
     # persist so the corpus-keyed exchange runs once
@@ -1137,10 +1112,10 @@ def _ngram_position_stream_kernel(
     df: DataFrame, id_col: str, text_col: str, order: int
 ) -> DataFrame:
     """The padded position stream ``(id, g1..gN)`` as ONE Arrow kernel —
-    the §4.2 form of the transform/element_at/struct/explode chain in
-    :func:`ngram_logprob_scores` (r17; pinned bit-identical by
-    test_ngram_stream_kernel_equals_explode and the unchanged DuckDB
-    oracle). Per batch everything is vectorized C: one
+    the §4.2 form of a JVM transform/element_at/struct/explode chain (r17;
+    pinned bit-identical to that chain by
+    test_ngram_stream_kernel_equals_explode, and graded by the DuckDB
+    oracles of the trigram and n-gram gates). Per batch everything is vectorized C: one
     ``split_pattern`` tokenization, index arithmetic in numpy, and one
     zero-copy ``take`` per gram column over the flattened token values
     (+1 appended BOS sentinel all out-of-range positions point at) —
@@ -1207,8 +1182,6 @@ def ngram_logprob_scores(
     order: int = 5,
     prune_singletons: bool = True,
     suffix_partitioning: bool = True,
-    fp128_score_join: bool = False,
-    extract_kernel: bool = True,
 ) -> DataFrame:
     """Mean per-token surprisal under a corpus-fit interpolated
     ``order``-gram LM — the generalization the trigram gate's double-BOS
@@ -1276,37 +1249,15 @@ def ngram_logprob_scores(
     if order not in NGRAM_WEIGHTS:
         raise ValueError(f"order must be one of {sorted(NGRAM_WEIGHTS)}")
     gcols = [f"g{i}" for i in range(1, order + 1)]
-    if extract_kernel:
-        # §4.2 Arrow kernel (r17) — bit-identical rows, pinned by
-        # test_ngram_stream_kernel_equals_explode
-        stream = _ngram_position_stream_kernel(df, id_col, text_col, order)
-    else:
-        t = tokens(F.col(text_col))
-        padded = F.concat(F.array(*[F.lit(LM_BOS)] * (order - 1)), t)
-        struct_type = f"array<struct<{','.join(c + ':string' for c in gcols)}>>"
-        arr = F.when(
-            F.size(t) >= 1,
-            F.transform(
-                F.sequence(F.lit(1), F.size(t)),
-                lambda i: F.struct(
-                    *[
-                        F.element_at(padded, i + j).alias(gcols[j])
-                        for j in range(order)
-                    ]
-                ),
-            ),
-        ).otherwise(F.array().cast(struct_type))
-        stream = df.select(F.col(id_col), F.explode(arr).alias("_g")).select(
-            F.col(id_col), *[F.col(f"_g.{c}").alias(c) for c in gcols]
-        )
+    stream = _ngram_position_stream_kernel(df, id_col, text_col, order)
     # ONE corpus exchange. With suffix_partitioning it is keyed on the
     # deepest suffix every s-rollup shares (last two tokens) and the
     # persisted exchanged stream ALSO serves as the probe side of the
     # final score join; without, it is the classic full-key groupBy with
     # map-side combine. Storage cost (ADVICE r9 #4): this persist holds
-    # the full exploded POSITION stream (positions x order token columns)
-    # at MEMORY_AND_DISK — a corpus-sized materialization the unaligned
-    # shape avoids by recomputing the explode per consumer. At 100 TB
+    # the full POSITION stream (positions x order token columns) at
+    # MEMORY_AND_DISK — a corpus-sized materialization the unaligned
+    # shape avoids by recomputing the stream per consumer. At 100 TB
     # that is a deliberate disk-for-shuffle trade: the persist spills to
     # local disk (sequential, node-local) to delete a full cascade of
     # cluster-wide exchanges; executors sized for the shuffle the old
@@ -1384,36 +1335,15 @@ def ngram_logprob_scores(
             )
         )
         pruned = score_table.filter(F.col(f"c_{order}") >= 2).select(*gcols, "micro")
-        if fp128_score_join:
-            # 128-bit fingerprint join key (two independent xxhash64, the
-            # second salted — the passage-dedup idiom; internal key only,
-            # never output; collision odds ~1e-15 at 1e12 distinct grams).
-            # Measured in SCALE.md ("fp128 stream-score join key A/B") and
-            # OFF by default — vetoed on measurement: in the broadcast
-            # regime it narrows an exchange that does not exist (21.43 MB
-            # byte-identical), and in the forced-shuffle regime the
-            # promised severalfold width win collapses to -4.4% because
-            # LZ4 shuffle compression already shrinks low-entropy token
-            # strings to near the 16 incompressible fingerprint bytes.
-            # The string key also keeps the join compatible with the
-            # stream's trailing-bigram partitioning (HashPartitioning on
-            # a subset of the join keys), which the fingerprint destroys.
-            fp = [
-                F.xxhash64(*gcols).alias("_fp1"),
-                F.xxhash64(*gcols, F.lit(-1640531527)).alias("_fp2"),
-            ]
-            nonsing = (
-                stream.select(id_col, *fp)
-                .join(pruned.select(*fp, "micro"), ["_fp1", "_fp2"])
-                .groupBy(id_col)
-                .agg(F.count("*").alias("_n"), F.sum("micro").alias("_m"))
-            )
-        else:
-            nonsing = (
-                stream.join(pruned, gcols)
-                .groupBy(id_col)
-                .agg(F.count("*").alias("_n"), F.sum("micro").alias("_m"))
-            )
+        # the string key keeps this join compatible with the stream's
+        # trailing-bigram partitioning (HashPartitioning on a subset of the
+        # join keys); a 128-bit fingerprint key was measured and rejected
+        # (SCALE.md, "fp128 stream-score join key A/B")
+        nonsing = (
+            stream.join(pruned, gcols)
+            .groupBy(id_col)
+            .agg(F.count("*").alias("_n"), F.sum("micro").alias("_m"))
+        )
         scored = (
             nonsing.unionByName(sing)
             .groupBy(id_col)

@@ -1,4 +1,4 @@
-"""Batch -> mapPartitions(HTTP) -> typed bronze rows -> sink.
+"""Batch -> mapInPandas(HTTP) -> typed bronze rows -> sink.
 
 Reference parity: src/orchestration/batch_handler.py, with typed schema
 construction by name (no positional renaming bug) and a pluggable sink:
@@ -12,10 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from distributed_api_etl_spark.core.bronze import BRONZE_SCHEMA
-from distributed_api_etl_spark.orchestration.partition_executor import (
-    build_map_in_pandas_fn,
-    build_partition_fn,
-)
+from distributed_api_etl_spark.orchestration.partition_executor import build_map_in_pandas_fn
 
 
 # Formats that bind columns by name: reading them with the one declared column
@@ -51,14 +48,6 @@ def read_sink_ids(spark: SparkSession, sink: dict) -> DataFrame | None:
     return reader.load(location).select("request_id")
 
 
-def delta_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.io.delta.tables.DeltaTable  # noqa: SLF001
-        return True
-    except Exception:
-        return False
-
-
 class BronzeBatchHandler:
     def __init__(self, spark: SparkSession, compiled: dict, sink: dict | None) -> None:
         self._spark = spark
@@ -66,21 +55,11 @@ class BronzeBatchHandler:
         self._sink = sink
         self.collected: list[DataFrame] = []  # dry-run mode accumulates here
 
-    def transform(self, batch_df: DataFrame, use_arrow: bool = True) -> DataFrame:
-        """HTTP-execute a batch. Default is the Arrow path (``mapInPandas``):
-        rows arrive as Arrow batches and bronze records leave as Arrow
-        batches — no ``df.rdd`` conversion (~1s driver-side per batch) and
-        no per-row pickling. The RDD path is kept for diagnostics parity."""
-        if use_arrow:
-            return batch_df.mapInPandas(
-                build_map_in_pandas_fn(self._compiled), BRONZE_SCHEMA
-            )
-        fn = build_partition_fn(self._compiled)
-        rdd = batch_df.rdd.mapPartitions(fn)
-        return self._spark.createDataFrame(rdd, BRONZE_SCHEMA)
-
     def process(self, batch_df: DataFrame) -> None:
-        result = self.transform(batch_df)
+        """HTTP-execute a batch and land its bronze rows. Rows reach the
+        worker and leave it as Arrow batches (``mapInPandas``): no ``df.rdd``
+        conversion and no per-row pickling."""
+        result = batch_df.mapInPandas(build_map_in_pandas_fn(self._compiled), BRONZE_SCHEMA)
         if self._sink is None:
             # dry-run: materialize now (localCheckpoint) so a re-run of the
             # lineage doesn't re-fire HTTP requests, then accumulate

@@ -17,7 +17,7 @@ blast radius of a mid-run failure to batch_size rows.
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
@@ -72,12 +72,36 @@ class BatchProcessor:
         processed = sink_df.select("request_id")
         return source_df.join(processed, on="request_id", how="left_anti")
 
-    def assign_batches(self, df: DataFrame, total: int) -> tuple[DataFrame, int]:
+    def batches(self, df: DataFrame, total: int) -> Iterator[tuple[int, DataFrame]]:
+        """Slice ``df`` (``total`` rows) into ``ceil(total / batch_size)``
+        hash batches, each repartitioned for the I/O-bound stage.
+
+        ``batch_size`` also caps the partition count: a batch holds about
+        ``batch_size`` rows, so more partitions than that are dead weight.
+        ``num_partitions`` binds on every run, so a multi-partition source
+        cannot hand each of its partitions its own process-scoped resources
+        (e.g. a fresh RateLimiter bucket)."""
         num_batches = max(1, -(-total // self.batch_size))  # ceil
-        out = df.withColumn(
+        df = df.withColumn(
             "batch_id", F.pmod(F.hash(F.col("request_id")), F.lit(num_batches))
         )
-        return out, num_batches
+        parts = min(self.num_partitions or num_batches, self.batch_size)
+        for batch_id in range(num_batches):
+            yield batch_id, (
+                df.where(F.col("batch_id") == batch_id).drop("batch_id").repartition(parts)
+            )
+
+    def process_once(
+        self, source_df: DataFrame, handler: Callable[[DataFrame], None]
+    ) -> BatchRunStats:
+        """One pass over the source with no sink and no retry (the dry run):
+        the first failing batch raises."""
+        total = count_source(source_df, self.id_column)
+        stats = BatchRunStats(total_rows=total, processed_rows=total, attempts=1)
+        for _, batch_df in self.batches(source_df, total):
+            handler(batch_df)
+            stats.batches_ok += 1
+        return stats
 
     def process(
         self,
@@ -101,14 +125,7 @@ class BatchProcessor:
                 # batch_size (the final partial batch would inflate that).
                 stats.processed_rows = initial_remaining
                 return stats
-            todo, num_batches = self.assign_batches(todo, total)
-            parts = self.num_partitions or num_batches
-            for batch_id in range(num_batches):
-                batch_df = (
-                    todo.where(F.col("batch_id") == batch_id)
-                    .drop("batch_id")
-                    .repartition(min(parts, self.batch_size))
-                )
+            for batch_id, batch_df in self.batches(todo, total):
                 try:
                     handler(batch_df)
                     stats.batches_ok += 1

@@ -1,11 +1,11 @@
 """Worker-side async fan-out: the core non-relational operator.
 
-One Spark task == one partition of request rows. Inside the task we run an
-asyncio producer/consumer pool: a bounded queue (backpressure — the
-reference documents ``maxsize=2*limit`` but ships an unbounded queue;
-here it is actually bounded), ``max_concurrent_requests`` consumers, an
-optional shared token-bucket rate limiter, and a middleware chain ending in
-the HTTP transport.
+One Spark task == one partition of request rows, handed over by
+``mapInPandas`` as Arrow batches. Inside the task we run an asyncio
+producer/consumer pool: a queue bounded at 2 x concurrency (backpressure —
+the reference documents ``maxsize=2*limit`` but ships an unbounded queue),
+``max_concurrent_requests`` consumers, an optional shared token-bucket rate
+limiter, and a middleware chain ending in the HTTP transport.
 
 Memory: rows are processed in chunks of ``execution.chunk_size`` and results
 are yielded incrementally — the whole partition is never materialized (the
@@ -139,7 +139,7 @@ def build_middlewares(compiled: dict, transport_diag: dict | None = None) -> lis
 async def _run_chunk(rows: list[dict[str, Any]], compiled: dict) -> list[dict[str, Any]]:
     execution = compiled["execution"]
     concurrency = max(1, int(execution.get("max_concurrent_requests", 20)))
-    queue_max = concurrency * max(1, int(execution.get("queue_maxsize_factor", 2)))
+    queue_max = 2 * concurrency
     rps = execution.get("max_requests_per_second")
 
     transport_cfg = compiled["transport"]
@@ -216,29 +216,14 @@ def run_rows(rows: Iterable[dict[str, Any]], compiled: dict) -> Iterator[dict[st
         yield from asyncio.run(_run_chunk(chunk, compiled))
 
 
-def build_partition_fn(compiled: dict):
-    """Returns the mapPartitions body: Iterator[Row] -> Iterator[tuple].
-
-    Output tuples follow BRONZE_COLUMNS order for createDataFrame(schema).
-    """
-    from distributed_api_etl_spark.core.bronze import BRONZE_COLUMNS
-
-    def partition_fn(rows) -> Iterator[tuple]:
-        dict_rows = (r.asDict() if hasattr(r, "asDict") else dict(r) for r in rows)
-        for record in run_rows(dict_rows, compiled):
-            yield tuple(record[c] for c in BRONZE_COLUMNS)
-
-    return partition_fn
-
-
 def build_map_in_pandas_fn(compiled: dict):
     """Returns the mapInPandas body: Iterator[pd.DataFrame] -> same, with
     BRONZE_COLUMNS output.
 
-    The Arrow path: no ``df.rdd`` conversion (which costs ~1s of driver-side
-    plan analysis per batch) and no per-row pickle — input rows arrive as
-    Arrow batches and bronze records leave as Arrow batches. numpy scalars
-    are unboxed so request params/json serialize as plain Python values.
+    No ``df.rdd`` conversion (which costs ~1s of driver-side plan analysis
+    per batch) and no per-row pickle — input rows arrive as Arrow batches
+    and bronze records leave as Arrow batches. numpy scalars are unboxed so
+    request params/json serialize as plain Python values.
     """
     from distributed_api_etl_spark.core.bronze import BRONZE_COLUMNS
 

@@ -17,21 +17,17 @@ NextCall = Callable[[RequestExchange], Awaitable[RequestExchange]]
 Middleware = Callable[[RequestExchange, NextCall], Awaitable[RequestExchange]]
 
 
+def _link(mw: Middleware, nxt: NextCall) -> NextCall:
+    return lambda exchange: mw(exchange, nxt)
+
+
 class MiddlewarePipeline:
     def __init__(self, middlewares: list[Middleware], terminal: NextCall) -> None:
-        self._middlewares = list(middlewares)
-        self._terminal = terminal
+        # composed once: every request reuses the same chain of closures
+        chain = terminal
+        for mw in reversed(middlewares):
+            chain = _link(mw, chain)
+        self._chain = chain
 
     async def execute(self, exchange: RequestExchange) -> RequestExchange:
-        return await self._compose(0)(exchange)
-
-    def _compose(self, index: int) -> NextCall:
-        if index >= len(self._middlewares):
-            return self._terminal
-        mw = self._middlewares[index]
-        nxt = self._compose(index + 1)
-
-        async def call(exchange: RequestExchange) -> RequestExchange:
-            return await mw(exchange, nxt)
-
-        return call
+        return await self._chain(exchange)

@@ -21,12 +21,13 @@ from __future__ import annotations
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from distributed_api_etl_spark.config.loader import load_config
 from distributed_api_etl_spark.config.models import PipelineConfig
 from distributed_api_etl_spark.orchestration.batch_handler import BronzeBatchHandler
-from distributed_api_etl_spark.orchestration.orchestrator import PipelineOrchestrator
+from distributed_api_etl_spark.orchestration.orchestrator import (
+    PipelineOrchestrator,
+    prepare_source,
+)
 
 
 def run_streaming_pipeline(
@@ -40,36 +41,21 @@ def run_streaming_pipeline(
     """Start the streaming pipeline; returns the StreamingQuery.
 
     ``stream_df`` is any streaming DataFrame containing ``source_id`` plus
-    the mapped columns. ``trigger`` defaults to availableNow (drain-and-stop,
-    the batch-parity mode); pass {"processingTime": "10 seconds"} for
-    continuous micro-batches.
+    the mapped columns. It goes through the same source step as a batch run
+    (``prepare_source``), once, before the query starts. ``trigger``
+    defaults to availableNow (drain-and-stop, the batch-parity mode); pass
+    {"processingTime": "10 seconds"} for continuous micro-batches.
     """
-    if not isinstance(config, PipelineConfig):
-        config = load_config(config)
-    orch = PipelineOrchestrator(spark, config)
-    compiled = orch.compile()
-    sink = orch._sink_dict()  # noqa: SLF001 - same-package orchestration
-    if sink is None:
-        raise ValueError("streaming pipeline requires a configured sink")
-    handler = BronzeBatchHandler(spark, compiled, sink)
-    ep = config.endpoint
-    needed = {
-        m.source_column for m in ep.param_mapping + ep.json_body_mapping
-    } | ep.template_columns()
+    orch = PipelineOrchestrator.from_config(spark, config)
+    handler = BronzeBatchHandler(spark, orch.compile(), orch.sink_spec())
+    source = prepare_source(stream_df, orch.config, source_id)
+    n = orch.config.execution.num_partitions or spark.sparkContext.defaultParallelism
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        df = batch_df
-        if source_id != "request_id":
-            df = df.withColumnRenamed(source_id, "request_id")
-        cols = [c for c in df.columns if c in needed | {"request_id"}]
-        df = df.select(*cols).withColumn(
-            "request_id", F.col("request_id").cast("string")
-        )
-        n = config.execution.num_partitions or spark.sparkContext.defaultParallelism
-        handler.process(df.repartition(n))
+        handler.process(batch_df.repartition(n))
 
     writer = (
-        stream_df.writeStream.foreachBatch(process_batch)
+        source.writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("update")
     )

@@ -2245,25 +2245,16 @@ def test_fivegram_knobs_are_output_invariant(spark, sf_dir):
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     variants = {}
-    combos = [(ps, sp, False) for ps in (False, True) for sp in (False, True)]
-    combos.append((True, True, True))  # the fp128 join key (r10 A/B knob)
-    for ps, sp, fp in combos:
-        rows = ngram_logprob_scores(
-            docs, "doc_id", "text", order=5,
-            prune_singletons=ps, suffix_partitioning=sp, fp128_score_join=fp,
-        ).collect()
-        variants[(ps, sp, fp)] = sorted(
-            (r.doc_id, r.n_tokens, r.surprisal_micro_sum) for r in rows
-        )
-    # the r17 extraction kernel is a fourth physical knob: the JVM
-    # explode path must agree with the Arrow stream kernel end-to-end
-    rows = ngram_logprob_scores(
-        docs, "doc_id", "text", order=5, extract_kernel=False
-    ).collect()
-    variants[("explode",)] = sorted(
-        (r.doc_id, r.n_tokens, r.surprisal_micro_sum) for r in rows
-    )
-    baseline = variants[(False, False, False)]
+    for ps in (False, True):
+        for sp in (False, True):
+            rows = ngram_logprob_scores(
+                docs, "doc_id", "text", order=5,
+                prune_singletons=ps, suffix_partitioning=sp,
+            ).collect()
+            variants[(ps, sp)] = sorted(
+                (r.doc_id, r.n_tokens, r.surprisal_micro_sum) for r in rows
+            )
+    baseline = variants[(False, False)]
     assert len(baseline) > 0
     for knobs, rows in variants.items():
         assert rows == baseline, knobs

@@ -1,15 +1,17 @@
 """Partition executor tested directly on Python iterators (the reference's
-integration-test strategy: the mapPartitions fn needs no cluster)."""
+integration-test strategy: the mapInPandas fn needs no cluster)."""
 
 from __future__ import annotations
 
 import asyncio
 import time
 
+import pytest
+
 from distributed_api_etl_spark.core.bronze import BRONZE_COLUMNS
 from distributed_api_etl_spark.core.runtime import ProcessScope, RateLimiter
 from distributed_api_etl_spark.orchestration.partition_executor import (
-    build_partition_fn,
+    build_map_in_pandas_fn,
     run_rows,
 )
 
@@ -27,7 +29,6 @@ def compiled(**over):
         "middleware": [{"type": "timing"}, {"type": "worker_identity"}],
         "execution": {
             "max_concurrent_requests": 8,
-            "queue_maxsize_factor": 2,
             "chunk_size": 50,
         },
         "fixed_time": "2024-01-01T00:00:00",
@@ -123,9 +124,45 @@ def test_retry_with_injected_failures_end_to_end():
 
 
 def test_partition_fn_emits_bronze_tuples():
-    fn = build_partition_fn(compiled())
-    out = list(fn(iter(rows(5))))
+    """The mapInPandas body: pandas batches in, bronze-column batches out;
+    numpy scalars (an int64 source column) reach request_params unboxed."""
+    import numpy as np
+    import pandas as pd
+
+    cfg = compiled(endpoint={
+        "method": "GET",
+        "url": "http://mock.local/x",
+        "param_mapping": [
+            {"endpoint_param": "id", "source_column": "request_id"},
+            {"endpoint_param": "n", "source_column": "n"},
+        ],
+    })
+    src = pd.DataFrame({"request_id": [str(i) for i in range(5)],
+                        "n": np.arange(5, dtype=np.int64) * 10})
+    out = pd.concat(build_map_in_pandas_fn(cfg)(iter([src.iloc[:2], src.iloc[2:]])))
+    assert list(out.columns) == list(BRONZE_COLUMNS)
     assert len(out) == 5
-    assert all(len(t) == len(BRONZE_COLUMNS) for t in out)
-    idx = BRONZE_COLUMNS.index("status_code")
-    assert all(t[idx] == 200 for t in out)
+    assert set(out["status_code"]) == {200}
+    params = dict(zip(out["request_id"], out["request_params"]))
+    assert params == {str(i): {"id": str(i), "n": str(10 * i)} for i in range(5)}
+
+
+def test_clear_closes_process_scoped_engines():
+    """ProcessScope.clear() closes what it drops: a used RequestsEngine ends
+    with its session closed and its thread pool shut down."""
+    from distributed_api_etl_spark.request_execution.models import TransportRequest
+    from distributed_api_etl_spark.request_execution.transport.threaded import (
+        RequestsEngine,
+    )
+
+    engine = ProcessScope.get("transport:test", RequestsEngine)
+    # a refused connection still opens the session and the pool
+    resp = asyncio.run(engine.send(TransportRequest(method="GET", url="http://127.0.0.1:9/")))
+    assert resp.error is not None
+    session, pool = engine._session, engine._pool
+    assert session is not None and pool is not None
+    ProcessScope.clear()
+    assert engine._session is None and engine._pool is None
+    assert all(not a.poolmanager.pools for a in session.adapters.values())
+    with pytest.raises(RuntimeError, match="shutdown"):
+        pool.submit(print)

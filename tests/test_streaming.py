@@ -90,6 +90,47 @@ def test_streaming_pipeline_foreach_batch(spark, tmp_path, stream_source):
     assert spark.read.parquet(sink).count() == 50
 
 
+def test_streaming_pipeline_binds_mapping_on_id_column(spark, tmp_path, stream_source):
+    """A param_mapping whose source_column IS the source id column must send
+    that value on every streamed row, exactly as the batch run does: both
+    runs share one source step, which keeps the id column when a mapping
+    binds it (the streaming front-end used to rename it away, so every
+    request went out without the parameter)."""
+    sink = str(tmp_path / "bronze")
+    cfg = {
+        "endpoint": {
+            "method": "GET",
+            "url": "http://mock.local/api/things",
+            "param_mapping": [{"endpoint_param": "id", "source_column": "tracking_id"}],
+        },
+        "transport": {"engine": "mock"},
+        "execution": {"num_partitions": 2, "max_concurrent_requests": 8},
+    }
+    q = run_streaming_pipeline(
+        spark, {**cfg, "tables": {"sink": {"location": sink}}}, stream_source,
+        source_id="tracking_id", checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    assert q.awaitTermination(120)
+
+    from distributed_api_etl_spark.orchestration import run_pipeline
+
+    batch_src = spark.range(50).select(F.col("id").cast("string").alias("tracking_id"))
+    batch = run_pipeline(spark, cfg, source_df=batch_src, source_id="tracking_id",
+                         dry_run=True).bronze_df
+
+    def rows(df):
+        return sorted(
+            (r.request_id, sorted(r.request_params.items()), r.body_text, r.status_code)
+            for r in df.select("request_id", "request_params", "body_text", "status_code")
+            .collect()
+        )
+
+    streamed = rows(spark.read.parquet(sink))
+    assert [p for _, p, _, _ in streamed] == [[("id", i)] for i, *_ in streamed]
+    assert streamed == rows(batch)
+    assert len(streamed) == 50
+
+
 def _events_stream(spark, sf_dir, tmp_path):
     # re-materialize events (ts normalized) as a file stream source
     from distributed_api_etl_spark.queries.registry import table

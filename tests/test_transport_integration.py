@@ -372,7 +372,6 @@ def test_concurrency_hides_io_latency():
                 "middleware": [],
                 "execution": {
                     "max_concurrent_requests": conc,
-                    "queue_maxsize_factor": 2,
                     "chunk_size": 1000,
                 },
             }
