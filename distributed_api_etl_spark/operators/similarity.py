@@ -21,10 +21,11 @@ embedding-based dedup operator.
 from __future__ import annotations
 
 import random
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from distributed_api_etl_spark.functions.vectors import cosine_fold_udf, cosine_similarity
@@ -184,6 +185,57 @@ def embedding_lsh_pairs(
     )
 
 
+def _rank_per_query(
+    scored: DataFrame,
+    score_col: str,
+    n: int,
+    rank_col: str = "rnk",
+    ascending: bool = False,
+    query_col: str = "query_id",
+    id_col: str = "neighbor_id",
+) -> DataFrame:
+    """The one per-query cut: ``row_number`` over ``query_col`` ordered by
+    (score — best first, descending unless ``ascending`` — then the lowest
+    id), keeping ranks ``<= n`` in ``rank_col``. Every candidate cut and
+    final top-k in this module goes through it, so the tie-break is one
+    contract, not one copy per operator."""
+    order = F.asc(score_col) if ascending else F.desc(score_col)
+    w = Window.partitionBy(query_col).orderBy(order, F.asc(id_col))
+    return scored.withColumn(rank_col, F.row_number().over(w)).where(
+        F.col(rank_col) <= n
+    )
+
+
+def _topk_by_cosine(scored: DataFrame, k: int) -> DataFrame:
+    """Final top-k: ``(query_id, neighbor_id, rnk, cosine)`` with the cosine
+    rounded to 6 places — the output schema of every top-k head."""
+    return _rank_per_query(scored, "cosine", k).select(
+        "query_id", "neighbor_id", "rnk", F.round("cosine", 6).alias("cosine")
+    )
+
+
+def _cut(
+    scored: DataFrame, score_col: str, k_cand: int, ascending: bool = False
+) -> DataFrame:
+    """Candidate cut: the top-``k_cand`` ``(query_id, neighbor_id)`` pairs
+    per query by a cheap tier's score, the input of :func:`_exact_rerank`."""
+    return _rank_per_query(scored, score_col, k_cand, "crnk", ascending).select(
+        "query_id", "neighbor_id"
+    )
+
+
+def _query_rows(df: DataFrame, queries: DataFrame, id_col: str) -> DataFrame:
+    """The rows of ``df`` whose id is a query id (broadcast query side)."""
+    return df.join(F.broadcast(queries.select(id_col)), id_col)
+
+
+def _lowest_ids(df: DataFrame, id_col: str, n: int) -> DataFrame:
+    """The ``n`` lowest-id rows — the deterministic centroid (and codebook
+    seed) convention, reproducible by any engine, that every IVF head
+    without learned centroids uses."""
+    return df.orderBy(F.col(id_col)).limit(n)
+
+
 def bruteforce_topk(
     emb: DataFrame,
     queries: DataFrame,
@@ -204,14 +256,7 @@ def bruteforce_topk(
         c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
         .withColumn("cosine", cosine_similarity("qv", "nv"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "rnk", F.round("cosine", 6).alias("cosine"))
-    )
+    return _topk_by_cosine(scored, k)
 
 
 def truncated_rerank_topk(
@@ -246,24 +291,22 @@ def truncated_rerank_topk(
     tr = emb.select(
         F.col(id_col), F.slice(F.col(vec_col), 1, dim).alias("tvec")
     )
-    qq = tr.join(F.broadcast(queries.select(id_col)), id_col)
-    cands = bruteforce_topk(tr, qq, id_col, "tvec", k_cand).select(
-        "query_id", "neighbor_id"
-    )
-    nv = emb.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nv"))
-    qv = emb.join(F.broadcast(queries.select(id_col)), id_col).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
-    scored = (
-        nv.join(F.broadcast(cands), "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .withColumn("cosine", cosine_similarity("qv", "nv"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "rnk", F.round("cosine", 6).alias("cosine"))
+    cands = bruteforce_topk(
+        tr, _query_rows(tr, queries, id_col), id_col, "tvec", k_cand
+    ).select("query_id", "neighbor_id")
+    return _exact_rerank(emb, queries, cands, id_col, vec_col, k)
+
+
+def _centroid_array(centroids: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """The centroid table as ONE broadcastable row: ``_cents``, a
+    cid-sorted array<struct{cid, cv}> (the assignment and probe folds'
+    input)."""
+    return centroids.agg(
+        F.array_sort(
+            F.collect_list(
+                F.struct(F.col(id_col).alias("cid"), F.col(vec_col).alias("cv"))
+            )
+        ).alias("_cents")
     )
 
 
@@ -282,13 +325,7 @@ def ivf_assign(
     1000x-inflated shuffle; this form is one projection.
     """
     cid_type = centroids.schema[id_col].dataType.simpleString()
-    cents = centroids.agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(F.col(id_col).alias("cid"), F.col(vec_col).alias("cv"))
-            )
-        ).alias("_cents")
-    )
+    cents = _centroid_array(centroids, id_col, vec_col)
     init = F.struct(
         F.lit(-2.0).cast("double").alias("cos"),
         F.lit(None).cast(cid_type).alias("cid"),
@@ -334,22 +371,26 @@ def ivf_bucket_topk(
         ),
         "query_id",
     )
+    return _probed_bucket_topk(assigned, q, id_col, vec_col, k)
+
+
+def _probed_bucket_topk(
+    assigned: DataFrame, probes: DataFrame, id_col: str, vec_col: str, k: int
+) -> DataFrame:
+    """Full-precision top-k over the buckets ``probes`` name
+    (``(query_id, qv, centroid_id)``, broadcast): the bucket equi-join,
+    self-exclusion and exact cosine of the float IVF heads."""
     cand = assigned.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("nv"),
         F.col("centroid_id"),
     )
     scored = (
-        cand.join(F.broadcast(q), "centroid_id")
+        cand.join(F.broadcast(probes), "centroid_id")
         .where(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("cosine", cosine_similarity("qv", "nv"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "rnk", F.round("cosine", 6).alias("cosine"))
-    )
+    return _topk_by_cosine(scored, k)
 
 
 def ivf_topk(
@@ -364,7 +405,7 @@ def ivf_topk(
 
     Deterministic centroid set = the n_centroids lowest-id vectors.
     """
-    centroids = emb.orderBy(F.col(id_col)).limit(n_centroids)
+    centroids = _lowest_ids(emb, id_col, n_centroids)
     assigned = ivf_assign(emb, centroids, id_col, vec_col)
     return ivf_bucket_topk(assigned, queries, id_col, vec_col, k)
 
@@ -395,6 +436,56 @@ def _qvec_expr(vec_col: str, levels: int):
     amax = F.array_max(F.transform(v, lambda x: F.abs(x)))
     scale = F.when(amax > 0, amax / levels).otherwise(F.lit(1.0))
     return scale, F.transform(v, lambda x: F.round(x / scale).cast("int"))
+
+
+def _check_carry(fn: str, carry_cols: tuple[str, ...], *reserved: str) -> None:
+    """Fail fast when a carried metadata column would shadow one of the
+    index's own columns — silently shadowing them corrupts the layout."""
+    bad = set(reserved).intersection(carry_cols)
+    if bad:
+        raise ValueError(
+            f"{fn}: carry_cols {sorted(bad)} collide with index columns "
+            f"({' / '.join(reserved)})"
+        )
+
+
+def _int8_centroids(
+    emb: DataFrame,
+    id_col: str,
+    vec_col: str,
+    n_centroids: int,
+    levels: int,
+    centroids: DataFrame | None = None,
+) -> DataFrame:
+    """``(id_col, qvec)`` routing centroids of every stored-IVF layout: the
+    ``n_centroids`` lowest-id vectors, or the full-precision ``centroids``
+    table when given (its row count then governs), quantized with the
+    corpus ``levels`` so ingest assignment and query probing share one
+    int8 space."""
+    if centroids is not None:
+        return quantize_embeddings(centroids, id_col, vec_col, levels).select(
+            id_col, "qvec"
+        )
+    quant = quantize_embeddings(emb, id_col, vec_col, levels)
+    return _lowest_ids(quant, id_col, n_centroids).select(id_col, "qvec")
+
+
+def _int8_assign(
+    emb: DataFrame,
+    cents_q: DataFrame,
+    id_col: str,
+    vec_col: str,
+    levels: int,
+    keep: tuple[str, ...] = (),
+) -> DataFrame:
+    """``(id_col, *keep, qvec, centroid_id)``: quantize inline, then
+    :func:`ivf_assign` in the int8 space — one map-side projection and
+    one fold over a broadcast centroid-array row, zero shuffle. The
+    bucketing step of every stored-IVF ingest path (int8, PQ and
+    residual PQ; build and append alike)."""
+    _, qvec = _qvec_expr(vec_col, levels)
+    withq = emb.select(F.col(id_col), *[F.col(c) for c in keep], qvec.alias("qvec"))
+    return ivf_assign(withq, cents_q, id_col, "qvec")
 
 
 def dequantize(qvec_col: str = "qvec", scale_col: str = "scale"):
@@ -430,25 +521,10 @@ def quantized_rerank_topk(
     recall@k the ann_quantized_recall_at_k head grades.
     """
     quant = quantize_embeddings(emb, id_col, vec_col, levels)
-    qq = quant.join(F.broadcast(queries.select(id_col)), id_col)
-    cands = bruteforce_topk(quant, qq, id_col, "qvec", k_cand).select(
-        "query_id", "neighbor_id"
-    )
-    nv = emb.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nv"))
-    qv = emb.join(F.broadcast(queries.select(id_col)), id_col).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
-    scored = (
-        nv.join(F.broadcast(cands), "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .withColumn("cosine", cosine_similarity("qv", "nv"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "rnk", F.round("cosine", 6).alias("cosine"))
-    )
+    cands = bruteforce_topk(
+        quant, _query_rows(quant, queries, id_col), id_col, "qvec", k_cand
+    ).select("query_id", "neighbor_id")
+    return _exact_rerank(emb, queries, cands, id_col, vec_col, k)
 
 
 def ivf_int8_multiprobe_topk(
@@ -492,10 +568,31 @@ def ivf_int8_multiprobe_topk(
     serving path (the brute-force tier this composes AGAINST in the recall
     head is the only non-equi join, and it is the labeled verifier).
     """
-    index, centroids = build_ivf_int8_index(emb, id_col, vec_col, n_centroids, levels)
+    return _inline_int8_topk(
+        emb, id_col, vec_col, n_centroids, queries, k, k_cand, nprobe, levels
+    )
+
+
+def _inline_int8_topk(
+    emb: DataFrame,
+    id_col: str,
+    vec_col: str,
+    n_centroids: int,
+    queries: DataFrame,
+    k: int,
+    k_cand: int,
+    nprobe: int,
+    levels: int,
+    centroids: DataFrame | None = None,
+) -> DataFrame:
+    """Build the int8 index in-plan (around ``centroids`` when given) and
+    serve from it — the inline half of every int8 IVF composition."""
+    index, cents = build_ivf_int8_index(
+        emb, id_col, vec_col, n_centroids, levels, centroids=centroids
+    )
     return ivf_int8_topk_from_index(
         index,
-        centroids,
+        cents,
         emb,
         queries,
         id_col,
@@ -514,9 +611,7 @@ def ivf_int8_multiprobe_topk(
         # lookup join would scan every index file.
         prune_partitions=False,
         levels=levels,
-        qvecs=index.join(
-            F.broadcast(queries.select(id_col)), id_col
-        ).select(id_col, "qvec"),
+        qvecs=_query_rows(index, queries, id_col).select(id_col, "qvec"),
     )
 
 
@@ -569,31 +664,12 @@ def build_ivf_int8_index(
     column from the index scan itself, because joining a corpus-sized
     attribute table onto the candidates would re-shuffle what the
     partitioned layout exists to avoid
-    (:func:`ivf_int8_filtered_topk_from_index` consumes it).
+    (:func:`ivf_int8_topk_from_index` ``filter_col`` consumes it).
     """
-    reserved = {"qvec", "centroid_id", id_col}
-    bad = reserved.intersection(carry_cols)
-    if bad:
-        # silently shadowing the index's own columns would corrupt the
-        # layout (the fused-gate carry guard, applied to the index build)
-        raise ValueError(
-            f"build_ivf_int8_index: carry_cols {sorted(bad)} collide with "
-            "index columns (qvec / centroid_id / the id column)"
-        )
-    _, qvec = _qvec_expr(vec_col, levels)
-    quant = emb.select(
-        F.col(id_col), qvec.alias("qvec"), *[F.col(c) for c in carry_cols]
-    )
-    if centroids is None:
-        cents = quant.orderBy(F.col(id_col)).limit(n_centroids).select(
-            id_col, "qvec"
-        )
-    else:
-        cents = quantize_embeddings(centroids, id_col, vec_col, levels).select(
-            id_col, "qvec"
-        )
-    index = ivf_assign(quant, cents, id_col, "qvec").select(
-        id_col, "qvec", "centroid_id", *[F.col(c) for c in carry_cols]
+    _check_carry("build_ivf_int8_index", carry_cols, "qvec", "centroid_id", id_col)
+    cents = _int8_centroids(emb, id_col, vec_col, n_centroids, levels, centroids)
+    index = _int8_assign(emb, cents, id_col, vec_col, levels, carry_cols).select(
+        id_col, "qvec", "centroid_id", *carry_cols
     )
     return index, cents
 
@@ -622,8 +698,7 @@ def assign_to_ivf_int8_index(
     bucket-size distribution informs — re-training rewrites the layout,
     appending never does.
     """
-    quant = quantize_embeddings(new_emb, id_col, vec_col, levels)
-    return ivf_assign(quant, centroids, id_col, "qvec").select(
+    return _int8_assign(new_emb, centroids, id_col, vec_col, levels).select(
         id_col, "qvec", "centroid_id"
     )
 
@@ -682,51 +757,140 @@ def ivf_index_stats(
     )
 
 
-def ivf_int8_candidate_scores(
+class IvfCodec(NamedTuple):
+    """How the stored-IVF serving skeleton (:func:`ivf_candidate_scores`)
+    reads and scores one payload encoding — a plain value, not a class
+    hierarchy: ``cols`` are the index columns the candidate scan reads,
+    ``luts`` an optional per-query frame broadcast-joined on ``query_id``
+    before scoring, ``score`` the candidate score and ``name`` its output
+    column (higher is better)."""
+
+    cols: tuple
+    luts: DataFrame | None
+    score: Column
+    name: str
+
+
+def int8_codec() -> IvfCodec:
+    """The int8 payload: the stored ``qvec`` scored by cosine against the
+    quantized query vector ``qv`` the probes carry."""
+    return IvfCodec(
+        (F.col("qvec").alias("nqv"),), None, cosine_similarity("qv", "nqv"), "qcos"
+    )
+
+
+def pq_codec(luts: DataFrame, m: int, residual: bool = False) -> IvfCodec:
+    """The PQ payload: the stored m-byte ``codes`` scored by LUT-ADC
+    (:func:`_adc_sum`) against the :func:`_pq_luts` frame. ``residual``
+    codes approximate ``v - c(v)``, so their score adds the per-(query,
+    bucket) ``qc = dot(q, c)`` term the probes carry
+    (:func:`ivf_rpq_topk_from_index`)."""
+    adc = _adc_sum(m)
+    return IvfCodec(
+        (F.col("codes"),), luts, F.col("qc") + adc if residual else adc, "adc"
+    )
+
+
+def _probed_ids(probes: DataFrame) -> list:
+    """The sorted distinct probed bucket ids — a bounded metadata collect
+    (<= n_queries x nprobe ids, never corpus-scaling, like
+    orchestration/backfill.py's package collect)."""
+    return sorted(
+        r["centroid_id"] for r in probes.select("centroid_id").distinct().collect()
+    )
+
+
+def ivf_candidate_scores(
     index: DataFrame,
     probes: DataFrame,
     id_col: str,
+    codec: IvfCodec,
     prune_partitions: bool = True,
     probed_ids: list | None = None,
     tombstones: DataFrame | None = None,
+    filter_col: str | None = None,
     carry_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """``(query_id, neighbor_id, qcos, *carry_cols)`` — every candidate
-    pair induced by ``probes`` over a stored IVF+int8 index, int8-scored.
+    """``(query_id, neighbor_id, <codec.name>, *carry_cols)`` — every
+    candidate pair ``probes`` induce over a stored IVF index, scored by
+    ``codec``: the one candidate step of the int8, PQ and residual-PQ
+    serving paths. In order:
 
-    The shared-scoring half of :func:`ivf_int8_topk_from_index` (which
-    consumes it via ``qscored``): a recall sweep computes this ONCE at
-    max(nprobe) with the probe rank in ``carry_cols``, then derives every
-    tier as a ``probe_rnk <= n`` filter — valid because a pair exists in
-    tier n iff its probed centroid ranks <= n for that query, and its
-    score depends only on the pair, never on the tier. ``probes`` must
-    carry ``(query_id, qv, centroid_id, *carry_cols)``."""
+      * **prune**: with ``prune_partitions`` the probed bucket ids
+        (:func:`_probed_ids` unless ``probed_ids`` is given) become a
+        static ``centroid_id IN (...)`` filter, so a layout written
+        ``partitionBy("centroid_id")`` skips unprobed buckets at the FILE
+        level (``PartitionFilters`` in the scan);
+      * **delete**: ``tombstones`` (``(id_col)``) are broadcast
+        left-anti-joined out of the pruned scan — stored files are never
+        rewritten per delete; compaction reclaims them;
+      * **join**: the broadcast bucket equi-join with ``probes``
+        (``(query_id, centroid_id[, qflt], *carry_cols)`` plus what the
+        score reads), then the ``neighbor_id != query_id`` exclusion;
+      * **filter**: with ``filter_col`` (stored in the index rows) only
+        candidates whose value EQUALS the query's ``qflt`` survive;
+      * **score**: ``codec.luts`` joins broadcast on ``query_id`` and
+        ``codec.score`` is projected.
+
+    A recall sweep runs this ONCE at max(nprobe) with ``probe_rnk`` in
+    ``carry_cols`` and derives each tier as a ``probe_rnk <= n`` filter:
+    a pair's score never depends on the tier. The corpus never
+    shuffles."""
     cand_src = index
     if prune_partitions:
-        probed = (
-            sorted(probed_ids)
-            if probed_ids is not None
-            else sorted(
-                r["centroid_id"]
-                for r in probes.select("centroid_id").distinct().collect()
-            )
-        )
-        cand_src = index.where(F.col("centroid_id").isin(probed))
+        ids = _probed_ids(probes) if probed_ids is None else sorted(probed_ids)
+        cand_src = index.where(F.col("centroid_id").isin(ids))
     if tombstones is not None:
         cand_src = cand_src.join(
             F.broadcast(tombstones.select(id_col)), id_col, "left_anti"
         )
-    cand = cand_src.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col("qvec").alias("nqv"),
-        "centroid_id",
-    )
-    return (
-        cand.join(F.broadcast(probes), "centroid_id")
+    flt = [F.col(filter_col).alias("nflt")] if filter_col is not None else []
+    pairs = (
+        cand_src.select(
+            F.col(id_col).alias("neighbor_id"), *codec.cols, "centroid_id", *flt
+        )
+        .join(F.broadcast(probes), "centroid_id")
         .where(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("qcos", cosine_similarity("qv", "nqv"))
-        .select("query_id", "neighbor_id", "qcos", *carry_cols)
     )
+    if filter_col is not None:
+        pairs = pairs.where(F.col("nflt") == F.col("qflt"))
+    if codec.luts is not None:
+        pairs = pairs.join(F.broadcast(codec.luts), "query_id")
+    return pairs.select(
+        "query_id", "neighbor_id", codec.score.alias(codec.name), *carry_cols
+    )
+
+
+def _query_probes(
+    emb: DataFrame,
+    queries: DataFrame,
+    centroids: DataFrame,
+    id_col: str,
+    vec_col: str,
+    nprobe: int,
+    levels: int,
+    filter_col: str | None = None,
+    qvecs: DataFrame | None = None,
+) -> DataFrame:
+    """``(query_id, qv, centroid_id[, qflt])`` — each query's
+    top-``nprobe`` buckets in the int8 routing space
+    (:func:`ivf_probe_assign`). Query vectors quantize HERE from the
+    embeddings side (per-row deterministic, so equal to the stored
+    ``qvec`` bit-exactly) unless ``qvecs`` (``(id_col, qvec)``) is given:
+    a lookup join against a stored layout would scan every index file
+    and defeat the pruning. ``filter_col`` carries the query's own value
+    as ``qflt`` for the filtered candidate step."""
+    if qvecs is None:
+        qvecs = quantize_embeddings(
+            _query_rows(emb, queries, id_col), id_col, vec_col, levels
+        ).select(id_col, "qvec")
+    probes = ivf_probe_assign(qvecs, centroids, id_col, "qvec", nprobe)
+    if filter_col is not None:
+        qflt = _query_rows(emb, queries, id_col).select(
+            F.col(id_col).alias("query_id"), F.col(filter_col).alias("qflt")
+        )
+        probes = probes.join(F.broadcast(qflt), "query_id")
+    return probes
 
 
 def ivf_int8_topk_from_index(
@@ -743,7 +907,7 @@ def ivf_int8_topk_from_index(
     levels: int = 127,
     qvecs: DataFrame | None = None,
     tombstones: DataFrame | None = None,
-    probes: DataFrame | None = None,
+    filter_col: str | None = None,
     qscored: DataFrame | None = None,
 ) -> DataFrame:
     """Serve top-k from a STORED IVF+int8 index
@@ -751,94 +915,50 @@ def ivf_int8_topk_from_index(
     with full-precision rerank — the deployed form of
     :func:`ivf_int8_multiprobe_topk`, identical output.
 
-    ``tombstones`` (a 1-column ``(id_col)`` frame) implements DELETES the
-    way immutable stored layouts actually do: the index files are never
-    rewritten per delete — deleted ids are anti-joined out of the PRUNED
-    candidate scan (broadcast left-anti, riding the same scan the probes
-    already pruned), and the periodic compaction/rebuild is what
-    physically reclaims them. Serving with tombstones is row-identical to
-    serving from an index rebuilt without those rows as long as the
-    deleted ids are not centroid seeds (assignment depends only on
-    (vector, centroid table) — the append==rebuild argument run in
-    reverse; tests assert it). The tombstone set is deletes-since-last-
-    compaction: bounded and broadcastable by operational construction.
+    Probe (:func:`_query_probes`) -> prune, score
+    (:func:`ivf_candidate_scores` with :func:`int8_codec`) -> cut the
+    top-``k_cand`` -> :func:`_exact_rerank`. With ``prune_partitions``
+    (default) the only scan of the index layout in the served plan is the
+    file-pruned candidate scan. ``tombstones`` masks deleted ids out of
+    it. A caller that already holds the quantized query vectors (the
+    inline composition, whose index is an in-plan subtree shared with the
+    candidate scan) passes them via ``qvecs`` and skips the embeddings
+    scan.
 
-    With ``prune_partitions`` (default), the bounded probed-bucket set —
-    ``<= n_queries x nprobe`` distinct centroid ids, METADATA-bounded
-    like orchestration/backfill.py's package collect, never
-    corpus-scaling — is collected and applied as a static
-    ``centroid_id IN (...)`` filter BEFORE the bucket join, so a
-    centroid-partitioned parquet layout prunes unprobed buckets at the
-    FILE level (``PartitionFilters`` in the scan, asserted in
-    tests/test_operators.py): the scan reads ~nprobe/n_centroids of the
-    index's FILES, not just of its rows. This is how the query router of
-    a 100-TB deployment turns probe selection into I/O savings — without
-    it the filter is still correct but relies on the join to discard
-    rows after they are read.
+    ``filter_col`` is metadata-FILTERED serving — the production axis
+    every real vector store exposes (tenant, language, label): per query,
+    rank only candidates whose ``filter_col`` equals the query's own
+    value. ``index`` must carry the column (:func:`build_ivf_int8_index`
+    ``carry_cols``). This is PRE-filter semantics (filter before the
+    ``k_cand`` cut): every survivor already satisfies the predicate, so
+    selectivity costs CANDIDATES, not slots — post-filtering (cut first,
+    then drop non-matching survivors) silently returns fewer than ``k``
+    whenever selectivity < k/k_cand. At selectivity ``s`` a probed bucket
+    holds ~``s`` times fewer eligible candidates, so nprobe stays the
+    compensating recall knob, exactly like unfiltered IVF.
 
-    Query vectors are by default quantized HERE from the embeddings side
-    (:func:`quantize_embeddings` is per-row deterministic, so
-    re-quantizing with the build-time ``levels`` reproduces the stored
-    ``qvec`` bit-exactly) rather than looked up from the index — a
-    lookup join against the stored layout would scan every index file
-    for the probe-assignment subtree and defeat the pruning this
-    function exists to provide. With the lookup gone, the ONLY scan of
-    the index layout in the served plan is the pruned candidate scan.
-    A caller that already holds the quantized query vectors (the inline
-    composition, whose index is an in-plan subtree shared with the
-    candidate scan) passes them via ``qvecs`` (``(id_col, qvec)``) and
-    skips the extra embeddings scan.
-
-    ``probes`` lets a recall-sweep caller share ONE probe ranking across
-    nprobe tiers (each tier is a prefix of the same sort — see
-    :func:`ivf_probe_assign` ``with_rank``): a precomputed
-    ``(query_id, qv, centroid_id)`` frame for THIS nprobe — ``qv`` is the
-    quantized query vector, used by the candidate scoring join.
-    ``qscored`` goes one step further (guide §1.2 step 1): a precomputed
-    ``(query_id, neighbor_id, qcos)`` candidate-score frame for THIS
-    nprobe (:func:`ivf_int8_candidate_scores` at max(nprobe), filtered by
-    the carried probe rank) — the candidate scan + scoring join then run
-    ONCE per sweep instead of once per tier; only the bounded
-    window + rerank stay per-tier. Semantics are unchanged; the
-    defaults compute exactly what a caller would pass.
+    ``qscored`` lets a recall sweep pass a precomputed ``(query_id,
+    neighbor_id, qcos)`` frame for THIS nprobe
+    (:func:`ivf_candidate_scores` at max(nprobe), filtered by the carried
+    probe rank) — the candidate scan + scoring join then run ONCE per
+    sweep; only the bounded cut + rerank stay per tier. The defaults
+    compute exactly what a caller would pass.
     """
     if qscored is None:
-        if qvecs is None:
-            qvecs = quantize_embeddings(
-                emb.join(F.broadcast(queries.select(id_col)), id_col),
-                id_col,
-                vec_col,
-                levels,
-            ).select(id_col, "qvec")
-        if probes is None:
-            probes = ivf_probe_assign(qvecs, centroids, id_col, "qvec", nprobe)
-        qscored = ivf_int8_candidate_scores(
+        probes = _query_probes(
+            emb, queries, centroids, id_col, vec_col, nprobe, levels, filter_col, qvecs
+        )
+        qscored = ivf_candidate_scores(
             index,
             probes,
             id_col,
-            prune_partitions=prune_partitions,
+            int8_codec(),
+            prune_partitions,
             tombstones=tombstones,
+            filter_col=filter_col,
         )
-    wc = Window.partitionBy("query_id").orderBy(F.desc("qcos"), F.asc("neighbor_id"))
-    cands = (
-        qscored.withColumn("crnk", F.row_number().over(wc))
-        .where(F.col("crnk") <= k_cand)
-        .select("query_id", "neighbor_id")
-    )
-    nv = emb.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nv"))
-    qv = emb.join(F.broadcast(queries.select(id_col)), id_col).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
-    scored = (
-        nv.join(F.broadcast(cands), "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .withColumn("cosine", cosine_similarity("qv", "nv"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "rnk", F.round("cosine", 6).alias("cosine"))
+    return _exact_rerank(
+        emb, queries, _cut(qscored, "qcos", k_cand), id_col, vec_col, k
     )
 
 
@@ -871,93 +991,7 @@ def bruteforce_filtered_topk(
         (F.col("query_id") != F.col("neighbor_id"))
         & (F.col("qflt") == F.col("nflt")),
     ).withColumn("cosine", cosine_similarity("qv", "nv"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "rnk", F.round("cosine", 6).alias("cosine"))
-    )
-
-
-def ivf_int8_filtered_topk_from_index(
-    index: DataFrame,
-    centroids: DataFrame,
-    emb: DataFrame,
-    queries: DataFrame,
-    id_col: str,
-    vec_col: str,
-    filter_col: str,
-    k: int,
-    k_cand: int,
-    nprobe: int = 2,
-    prune_partitions: bool = True,
-    levels: int = 127,
-) -> DataFrame:
-    """Metadata-FILTERED serving from a stored IVF+int8 index — the
-    production axis every real vector store exposes (tenant, language,
-    label predicates): per query, rank only candidates whose
-    ``filter_col`` equals the query's own value, then full-precision
-    rerank. ``index`` must carry ``filter_col``
-    (:func:`build_ivf_int8_index` with ``carry_cols``) — the predicate is
-    evaluated on the INDEX SCAN's own columns, never by joining a
-    corpus-sized attribute table onto candidates.
-
-    This is PRE-filter semantics (filter before the ``k_cand`` cut): all
-    ``k_cand`` ADC/int8 survivors already satisfy the predicate, so
-    selectivity costs CANDIDATES, not slots — the alternative (post-filter:
-    cut first, then drop non-matching survivors) silently returns fewer
-    than ``k`` whenever selectivity < k/k_cand. The scale trade the recall
-    head prices: at selectivity ``s``, a probed bucket holds ~``s`` times
-    fewer eligible candidates, so filtered queries need proportionally
-    more probes to reach the same recall — nprobe is the compensating
-    knob, exactly like unfiltered IVF.
-
-    Plan shape is :func:`ivf_int8_topk_from_index` unchanged: probe
-    selection map-side, the bounded probed-bucket collect -> static
-    partition-pruning IN filter, the per-query equality filter riding the
-    broadcast bucket join (no extra exchange anywhere), bounded rerank
-    equi-joins. The corpus never shuffles.
-    """
-    qvecs = quantize_embeddings(
-        emb.join(F.broadcast(queries.select(id_col)), id_col),
-        id_col,
-        vec_col,
-        levels,
-    ).select(id_col, "qvec")
-    probes = ivf_probe_assign(qvecs, centroids, id_col, "qvec", nprobe)
-    qflt = emb.join(F.broadcast(queries.select(id_col)), id_col).select(
-        F.col(id_col).alias("query_id"), F.col(filter_col).alias("qflt")
-    )
-    probes = probes.join(F.broadcast(qflt), "query_id")
-    cand_src = index
-    if prune_partitions:
-        # bounded metadata collect: <= n_queries x nprobe distinct ids
-        probed = sorted(
-            r["centroid_id"]
-            for r in probes.select("centroid_id").distinct().collect()
-        )
-        cand_src = index.where(F.col("centroid_id").isin(probed))
-    cand = cand_src.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col("qvec").alias("nqv"),
-        F.col(filter_col).alias("nflt"),
-        "centroid_id",
-    )
-    qscored = (
-        cand.join(F.broadcast(probes), "centroid_id")
-        .where(
-            (F.col("neighbor_id") != F.col("query_id"))
-            & (F.col("nflt") == F.col("qflt"))
-        )
-        .withColumn("qcos", cosine_similarity("qv", "nqv"))
-    )
-    wc = Window.partitionBy("query_id").orderBy(F.desc("qcos"), F.asc("neighbor_id"))
-    cands = (
-        qscored.withColumn("crnk", F.row_number().over(wc))
-        .where(F.col("crnk") <= k_cand)
-        .select("query_id", "neighbor_id")
-    )
-    return _exact_rerank(emb, queries, cands, id_col, vec_col, k)
+    return _topk_by_cosine(scored, k)
 
 
 def kmeans_centroids(
@@ -983,7 +1017,7 @@ def kmeans_centroids(
     (centroid_id, pos) — a k x dim aggregate; nothing is collected to the
     driver. A cluster that loses all members drops out (both engines).
     """
-    cents = emb.orderBy(F.col(id_col)).limit(k).select(
+    cents = _lowest_ids(emb, id_col, k).select(
         F.col(id_col),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias(vec_col),
     )
@@ -1068,29 +1102,9 @@ def ivf_kmeans_int8_topk(
     stage is the already-graded operator.
     """
     cents_f = kmeans_centroids(emb, id_col, vec_col, n_centroids, iters)
-    index, cents_q = build_ivf_int8_index(
-        emb, id_col, vec_col, n_centroids, levels, centroids=cents_f
-    )
-    return ivf_int8_topk_from_index(
-        index,
-        cents_q,
-        emb,
-        queries,
-        id_col,
-        vec_col,
-        k,
-        k_cand,
-        nprobe,
-        # inline composition (no stored layout) — nothing to file-prune
-        prune_partitions=False,
-        levels=levels,
-        # the index is an in-plan subtree shared with the candidate scan:
-        # look the query vectors up from it (computed once via subtree
-        # reuse) instead of paying the emb-side re-quantization's extra
-        # scan + broadcast — the same reasoning as ivf_int8_multiprobe_topk
-        qvecs=index.join(
-            F.broadcast(queries.select(id_col)), id_col
-        ).select(id_col, "qvec"),
+    return _inline_int8_topk(
+        emb, id_col, vec_col, n_centroids, queries, k, k_cand, nprobe, levels,
+        centroids=cents_f,
     )
 
 
@@ -1141,36 +1155,6 @@ def semantic_representatives(
     )
 
 
-def ivf_kmeans_topk_ml(
-    emb: DataFrame,
-    id_col: str,
-    vec_col: str,
-    n_centroids: int,
-    queries: DataFrame,
-    k: int,
-    max_iter: int = 5,
-    seed: int = 7,
-) -> DataFrame:
-    """pyspark.ml KMeans variant (k-means|| init, not cross-engine
-    reproducible — use where oracle parity is not required)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    train = emb.select(
-        array_to_vector(
-            F.transform(F.col(vec_col), lambda x: x.cast("double"))
-        ).alias("features")
-    )
-    model = KMeans(k=n_centroids, maxIter=max_iter, seed=seed).fit(train)
-    centers = [list(map(float, c)) for c in model.clusterCenters()]
-    spark = emb.sparkSession
-    cdf = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(centers)], f"{id_col} bigint, {vec_col} array<double>"
-    )
-    assigned = ivf_assign(emb, cdf, id_col, vec_col)
-    return ivf_bucket_topk(assigned, queries, id_col, vec_col, k)
-
-
 def ivf_probe_assign(
     qvecs: DataFrame,
     centroids: DataFrame,
@@ -1191,13 +1175,7 @@ def ivf_probe_assign(
     smaller tier as a ``probe_rnk <= n`` filter on the shared (persisted)
     frame instead of re-running the whole probe chain per tier.
     """
-    cents = centroids.agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(F.col(id_col).alias("cid"), F.col(vec_col).alias("cv"))
-            )
-        ).alias("_cents")
-    )
+    cents = _centroid_array(centroids, id_col, vec_col)
     scored = F.transform(
         F.col("_cents"),
         lambda c: F.struct(
@@ -1205,25 +1183,18 @@ def ivf_probe_assign(
             c["cid"].alias("cid"),
         ),
     )
-    probes = F.slice(F.array_sort(scored), 1, nprobe)
-    if with_rank:
-        return qvecs.crossJoin(F.broadcast(cents)).select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qv"),
-            F.posexplode(F.transform(probes, lambda p: p["cid"])).alias(
-                "pos", "centroid_id"
-            ),
-        ).select(
-            "query_id",
-            "qv",
-            "centroid_id",
-            (F.col("pos") + 1).cast("int").alias("probe_rnk"),
-        )
-    return qvecs.crossJoin(F.broadcast(cents)).select(
+    probes = F.transform(F.slice(F.array_sort(scored), 1, nprobe), lambda p: p["cid"])
+    exploded = qvecs.crossJoin(F.broadcast(cents)).select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("qv"),
-        F.explode(F.transform(probes, lambda p: p["cid"])).alias("centroid_id"),
+        F.posexplode(probes).alias("pos", "centroid_id")
+        if with_rank
+        else F.explode(probes).alias("centroid_id"),
     )
+    if not with_rank:
+        return exploded
+    rank = (F.col("pos") + 1).cast("int").alias("probe_rnk")
+    return exploded.select("query_id", "qv", "centroid_id", rank)
 
 
 def ivf_multiprobe_topk(
@@ -1244,28 +1215,13 @@ def ivf_multiprobe_topk(
     Each corpus vector lives in exactly one bucket, so probed buckets are
     disjoint and no candidate dedup is needed before the final top-k.
     """
-    centroids = emb.orderBy(F.col(id_col)).limit(n_centroids)
+    centroids = _lowest_ids(emb, id_col, n_centroids)
     assigned = ivf_assign(emb, centroids, id_col, vec_col)
     qvecs = queries.select(id_col).join(
         emb.select(id_col, vec_col), id_col
     )
     probes = ivf_probe_assign(qvecs, centroids, id_col, vec_col, nprobe)
-    cand = assigned.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("nv"),
-        "centroid_id",
-    )
-    scored = (
-        cand.join(F.broadcast(probes), "centroid_id")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cosine", cosine_similarity("qv", "nv"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "rnk", F.round("cosine", 6).alias("cosine"))
-    )
+    return _probed_bucket_topk(assigned, probes, id_col, vec_col, k)
 
 
 def lsh_params_for(
@@ -1326,16 +1282,13 @@ def _sub_slice(vec_col: str, s, d_sub: int):
     )
 
 
-def _collect_codebook(codebook: DataFrame) -> dict:
-    """``{s: (codes int64[k], centers float64[k, d_sub])}`` off a codebook
-    frame, rows sorted by code within each subspace — the SAME bounded
-    m x k_codes rows :func:`_cb_array` broadcasts, collected once so the
-    numpy assignment kernels ship it in their closure."""
-    import numpy as np
-
+def _group_codebook(rows) -> dict:
+    """``(s, code, cw)`` rows -> ``{s: (codes int64[k], centers float64[k,
+    d_sub])}``, rows sorted by code within each subspace — the form the
+    numpy assignment kernels (:func:`_argmin_codes`) consume."""
     by_s: dict[int, list] = {}
-    for r in codebook.select("s", "code", "cw").collect():
-        by_s.setdefault(int(r["s"]), []).append((int(r["code"]), list(r["cw"])))
+    for s, code, cw in rows:
+        by_s.setdefault(int(s), []).append((int(code), list(cw)))
     out = {}
     for s, lst in by_s.items():
         lst.sort()
@@ -1344,6 +1297,27 @@ def _collect_codebook(codebook: DataFrame) -> dict:
             np.array([cw for _, cw in lst], dtype=np.float64),
         )
     return out
+
+
+def _collect_codebook(codebook: DataFrame) -> dict:
+    """:func:`_group_codebook` off a codebook frame — the SAME bounded
+    m x k_codes rows :func:`_cb_array` broadcasts, collected once so the
+    numpy assignment kernels ship it in their closure."""
+    return _group_codebook(codebook.select("s", "code", "cw").collect())
+
+
+def _seed_codebook(seed_rows, dim: int, m: int) -> dict:
+    """The iteration-0 codebook: the subvectors of the (lowest-id) seed
+    vectors, codes dense 0..k-1 by seed-id rank."""
+    d_sub = dim // m
+    seed_mat = np.array([list(r[1])[:dim] for r in seed_rows], dtype=np.float64)
+    return {
+        s: (
+            np.arange(len(seed_rows), dtype=np.int64),
+            seed_mat[:, s * d_sub : (s + 1) * d_sub].copy(),
+        )
+        for s in range(m)
+    }
 
 
 def _argmin_codes(V, codes, cents):
@@ -1393,19 +1367,10 @@ def _pq_train_driver(
     expression via a LocalRelation projection (ConvertToLocalRelation
     folds it on the driver — zero jobs), so the graded float grid is the
     engine's, not a Python reimplementation of java's HALF_UP."""
-    import numpy as np
-
     d_sub = dim // m
     rows = sorted(rows, key=lambda r: r[0])
     V = np.array([list(r[1])[:dim] for r in rows], dtype=np.float64)
-    seed_mat = V[:k_codes]
-    cb = {
-        s: (
-            np.arange(min(k_codes, len(rows)), dtype=np.int64),
-            seed_mat[:, s * d_sub : (s + 1) * d_sub].copy(),
-        )
-        for s in range(m)
-    }
+    cb = _seed_codebook(rows[:k_codes], dim, m)
     cents_rows = None
     for _ in range(iters):
         raw = []  # (s, code, pos, unrounded mean)
@@ -1433,16 +1398,7 @@ def _pq_train_driver(
             (s, c, [v for _, v in sorted(pv)])
             for (s, c), pv in sorted(by_key.items())
         ]
-        by_s: dict[int, list] = {}
-        for s, code, cw in cents_rows:
-            by_s.setdefault(s, []).append((code, cw))
-        cb = {}
-        for s, lst in by_s.items():
-            lst.sort()
-            cb[s] = (
-                np.array([c for c, _ in lst], dtype=np.int64),
-                np.array([cw for _, cw in lst], dtype=np.float64),
-            )
+        cb = _group_codebook(cents_rows)
     return spark.createDataFrame(cents_rows, "s int, code int, cw array<double>")
 
 
@@ -1483,8 +1439,6 @@ def pq_train(
     """
     spark = emb.sparkSession
     d_sub = dim // m
-    import numpy as np
-
     valid = emb.select(id_col, vec_col).where(
         F.col(vec_col).isNotNull() & (F.size(F.col(vec_col)) >= dim)
     )
@@ -1492,14 +1446,18 @@ def pq_train(
     # per-iteration distributed kernel passes when the valid corpus fits —
     # limit(cap+1) bounds driver memory without a separate count job; a
     # larger corpus falls through to the distributed loop below, paying
-    # only this one truncated scan extra
+    # only this one truncated scan extra. So does a null id: Python cannot
+    # order None against ids, while the loop's ORDER BY puts nulls first
+    # (the graph.py CC driver gate's rule)
     if (
         driver_max_rows > 0
         and emb.schema[id_col].dataType.simpleString()
         in _PQ_DRIVER_SAFE_ID_TYPES
     ):
         bounded = valid.limit(driver_max_rows + 1).collect()
-        if len(bounded) <= driver_max_rows:
+        if len(bounded) <= driver_max_rows and all(
+            r[0] is not None for r in bounded
+        ):
             return _pq_train_driver(
                 spark, bounded, dim, m, k_codes, iters, round_decimals
             )
@@ -1510,15 +1468,7 @@ def pq_train(
     # (null/short vectors would crash the numpy seed matrix; the HOF form
     # degrades to null codewords there — ADVICE r16 #2 picks the filter).
     # _sub_slice casts components to double; float32 widens exactly.
-    seed_rows = valid.orderBy(F.col(id_col)).limit(k_codes).collect()
-    seed_mat = np.array([list(r[1])[:dim] for r in seed_rows], dtype=np.float64)
-    cb = {
-        s: (
-            np.arange(len(seed_rows), dtype=np.int64),
-            seed_mat[:, s * d_sub : (s + 1) * d_sub].copy(),
-        )
-        for s in range(m)
-    }
+    cb = _seed_codebook(_lowest_ids(valid, id_col, k_codes).collect(), dim, m)
     subv = _explode_subvectors(emb, id_col, vec_col, m, d_sub)
     cents_rows = None
     for _ in range(iters):
@@ -1543,16 +1493,7 @@ def pq_train(
         # iteration boundary: bounded m x k_codes collect feeds the next
         # round's kernel closure (and the returned LocalRelation)
         cents_rows = [(int(r["s"]), int(r["code"]), list(r["cw"])) for r in cents.collect()]
-        by_s: dict[int, list] = {}
-        for s, code, cw in cents_rows:
-            by_s.setdefault(s, []).append((code, cw))
-        cb = {}
-        for s, lst in by_s.items():
-            lst.sort()
-            cb[s] = (
-                np.array([c for c, _ in lst], dtype=np.int64),
-                np.array([cw for _, cw in lst], dtype=np.float64),
-            )
+        cb = _group_codebook(cents_rows)
     return spark.createDataFrame(
         cents_rows, "s int, code int, cw array<double>"
     )
@@ -1670,19 +1611,7 @@ def pq_train_hof(
     the independent reference implementation :func:`pq_train`'s numpy
     kernel is pinned against.
     """
-    d_sub = dim // m
-    sub_entries = F.array(
-        *[
-            F.struct(
-                F.lit(s).cast("int").alias("s"),
-                _sub_slice(vec_col, s, d_sub).alias("sv"),
-            )
-            for s in range(m)
-        ]
-    )
-    subv = emb.select(F.col(id_col), F.explode(sub_entries).alias("e")).select(
-        F.col(id_col), F.col("e.s").alias("s"), F.col("e.sv").alias("sv")
-    )
+    subv = _explode_subvectors(emb, id_col, vec_col, m, dim // m)
     # seeds = the k_codes LOWEST-id vectors' subvectors (the ivf_topk /
     # kmeans_centroids convention — works for any id distribution, not
     # just 0..n dense), REMAPPED to dense codes 0..k_codes-1 by seed-id
@@ -1692,11 +1621,8 @@ def pq_train_hof(
     # row_number window runs over exactly k_codes rows — a single tiny
     # partition, not a corpus sort.
     seed_w = Window.orderBy(F.col(id_col))
-    seed_ids = (
-        emb.select(id_col)
-        .orderBy(F.col(id_col))
-        .limit(k_codes)
-        .select(id_col, (F.row_number().over(seed_w) - 1).cast("int").alias("code"))
+    seed_ids = _lowest_ids(emb.select(id_col), id_col, k_codes).select(
+        id_col, (F.row_number().over(seed_w) - 1).cast("int").alias("code")
     )
     cents = subv.join(F.broadcast(seed_ids), id_col).select(
         "s", "code", F.col("sv").alias("cw")
@@ -1889,13 +1815,9 @@ def pq_adc_topk(
         F.col(id_col).alias("neighbor_id"),
         _adc_sum(m).alias("adc"),
     )
-    wc = Window.partitionBy("query_id").orderBy(F.desc("adc"), F.asc("neighbor_id"))
-    cands = (
-        scored.withColumn("crnk", F.row_number().over(wc))
-        .where(F.col("crnk") <= k_cand)
-        .select("query_id", "neighbor_id")
+    return _exact_rerank(
+        emb, queries, _cut(scored, "adc", k_cand), id_col, vec_col, k
     )
-    return _exact_rerank(emb, queries, cands, id_col, vec_col, k)
 
 
 def _pq_luts(
@@ -1913,7 +1835,7 @@ def _pq_luts(
     query against the broadcast codebook (m x k_codes entries), the
     asymmetric half of ADC (queries stay full-precision)."""
     d_sub = dim // m
-    qv_src = emb.join(F.broadcast(queries.select(id_col)), id_col)
+    qv_src = _query_rows(emb, queries, id_col)
     return qv_src.crossJoin(F.broadcast(_cb_array(codebook))).select(
         F.col(id_col).alias("query_id"),
         F.map_from_entries(
@@ -1923,25 +1845,24 @@ def _pq_luts(
                     (c["s"].cast("bigint") * PQ_KEY_STRIDE + c["code"]).alias(
                         "key"
                     ),
-                    F.floor(
-                        F.aggregate(
-                            F.zip_with(
-                                _sub_slice(vec_col, c["s"], d_sub),
-                                c["cw"],
-                                lambda x, y: x * y,
-                            ),
-                            F.lit(0.0),
-                            lambda acc, x: acc + x,
-                        )
-                        * F.expr(PQ_ADC_SCALE)
-                        + F.lit(0.5)
-                    )
-                    .cast("bigint")
-                    .alias("value"),
+                    _adc_dot(_sub_slice(vec_col, c["s"], d_sub), c["cw"]).alias(
+                        "value"
+                    ),
                 ),
             )
         ).alias("lut"),
     )
+
+
+def _adc_dot(a, b) -> Column:
+    """``floor(dot(a, b) * 1e9 + 0.5)`` as a bigint — the ADC fixed point of
+    every LUT entry and residual ``qc`` term. The dot is a sequential fold,
+    ((0+t1)+t2)+... exactly, matching DuckDB's list_reduce term for term
+    (the :func:`_sq_l2` discipline)."""
+    dot = F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
+    )
+    return F.floor(dot * F.expr(PQ_ADC_SCALE) + F.lit(0.5)).cast("bigint")
 
 
 def _adc_sum(m: int) -> Column:
@@ -1971,7 +1892,7 @@ def _exact_rerank(
     back onto the corpus scan — full-width vectors touched for
     n_queries x k_cand rows), per-query top-k."""
     nv = emb.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nv"))
-    qv = emb.join(F.broadcast(queries.select(id_col)), id_col).select(
+    qv = _query_rows(emb, queries, id_col).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
     )
     rescored = (
@@ -1979,12 +1900,7 @@ def _exact_rerank(
         .join(F.broadcast(qv), "query_id")
         .withColumn("cosine", cosine_similarity("qv", "nv"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        rescored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "rnk", F.round("cosine", 6).alias("cosine"))
-    )
+    return _topk_by_cosine(rescored, k)
 
 
 def build_ivf_pq_index(
@@ -2010,8 +1926,8 @@ def build_ivf_pq_index(
     :func:`build_ivf_int8_index`'s layout, so probe selection prunes at
     the FILE level and ADC scans only the probed buckets' codes.
 
-    Bucketing runs in the shared int8 space (:func:`_qvec_expr` inline +
-    :func:`ivf_assign` fold over one broadcast centroid-array row — the
+    Bucketing runs in the shared int8 space (:func:`_int8_assign`: inline
+    quantization + an :func:`ivf_assign` fold over one broadcast row — the
     same convention as the stored int8 index, so router code and oracle
     CTEs are shared); codes come from :func:`pq_encode`'s m argmin folds
     over one broadcast codebook row. Both projections run in ONE corpus
@@ -2030,37 +1946,15 @@ def build_ivf_pq_index(
     ``carry_cols`` stores metadata columns in the index rows for
     filtered serving (the :func:`build_ivf_int8_index` contract).
     """
-    # "qvec"/vec_col must be reserved too (the build_ivf_int8_index guard):
-    # the assignment subtree projects a qvec column, so a carried duplicate
-    # would fail later inside ivf_assign with AMBIGUOUS_REFERENCE — exactly
-    # the unactionable failure this guard exists to pre-empt.
-    bad = {"codes", "centroid_id", "qvec", vec_col, id_col}.intersection(carry_cols)
-    if bad:
-        raise ValueError(
-            f"build_ivf_pq_index: carry_cols {sorted(bad)} collide with "
-            "index columns (codes / centroid_id / qvec / the vector or id column)"
-        )
+    # "qvec"/vec_col are reserved too: the assignment subtree projects a
+    # qvec column, so a carried duplicate would fail later inside
+    # ivf_assign with AMBIGUOUS_REFERENCE
+    reserved = ("codes", "centroid_id", "qvec", vec_col, id_col)
+    _check_carry("build_ivf_pq_index", carry_cols, *reserved)
     if codebook is None:
         codebook = pq_train(emb, id_col, vec_col, dim, m, k_codes, iters)
-    if centroids is None:
-        cents = (
-            quantize_embeddings(emb, id_col, vec_col, levels)
-            .orderBy(F.col(id_col))
-            .limit(n_centroids)
-            .select(id_col, "qvec")
-        )
-    else:
-        cents = quantize_embeddings(centroids, id_col, vec_col, levels).select(
-            id_col, "qvec"
-        )
-    _, qvec = _qvec_expr(vec_col, levels)
-    withq = emb.select(
-        F.col(id_col),
-        F.col(vec_col),
-        qvec.alias("qvec"),
-        *[F.col(c) for c in carry_cols],
-    )
-    assigned = ivf_assign(withq, cents, id_col, "qvec")
+    cents = _int8_centroids(emb, id_col, vec_col, n_centroids, levels, centroids)
+    assigned = _int8_assign(emb, cents, id_col, vec_col, levels, (vec_col, *carry_cols))
     index = pq_encode(
         assigned,
         codebook,
@@ -2071,60 +1965,6 @@ def build_ivf_pq_index(
         extra_cols=("centroid_id", *carry_cols),
     )
     return index, cents, codebook
-
-
-def ivf_pq_candidate_scores(
-    index: DataFrame,
-    probes: DataFrame,
-    luts: DataFrame,
-    id_col: str,
-    m: int,
-    prune_partitions: bool = True,
-    probed_ids: list | None = None,
-    tombstones: DataFrame | None = None,
-    filter_col: str | None = None,
-    carry_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """``(query_id, neighbor_id, adc, *carry_cols)`` — every candidate
-    pair induced by ``probes`` over a stored IVF-PQ index, LUT-ADC-scored.
-
-    The shared-scoring half of :func:`ivf_pq_topk_from_index` (which
-    consumes it via ``scored``): a recall sweep computes this ONCE at
-    max(nprobe) with the probe rank in ``carry_cols``, then derives every
-    tier as a ``probe_rnk <= n`` filter — valid because a pair exists in
-    tier n iff its probed centroid ranks <= n for that query, and the ADC
-    value depends only on (query LUT, candidate codes), never on the
-    tier. ``probes`` must carry ``(query_id, centroid_id[, qflt]
-    [, *carry_cols])``."""
-    cand_src = index
-    if prune_partitions:
-        # bounded metadata collect: <= n_queries x nprobe distinct ids
-        probed = (
-            sorted(probed_ids)
-            if probed_ids is not None
-            else sorted(
-                r["centroid_id"]
-                for r in probes.select("centroid_id").distinct().collect()
-            )
-        )
-        cand_src = index.where(F.col("centroid_id").isin(probed))
-    if tombstones is not None:
-        cand_src = cand_src.join(
-            F.broadcast(tombstones.select(id_col)), id_col, "left_anti"
-        )
-    flt_cols = [F.col(filter_col).alias("nflt")] if filter_col is not None else []
-    scored = (
-        cand_src.select(
-            F.col(id_col).alias("neighbor_id"), "codes", "centroid_id", *flt_cols
-        )
-        .join(F.broadcast(probes), "centroid_id")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-    )
-    if filter_col is not None:
-        scored = scored.where(F.col("nflt") == F.col("qflt"))
-    return scored.join(F.broadcast(luts), "query_id").select(
-        "query_id", "neighbor_id", _adc_sum(m).alias("adc"), *carry_cols
-    )
 
 
 def ivf_pq_topk_from_index(
@@ -2143,10 +1983,6 @@ def ivf_pq_topk_from_index(
     prune_partitions: bool = True,
     levels: int = 127,
     filter_col: str | None = None,
-    tombstones: DataFrame | None = None,
-    probes: DataFrame | None = None,
-    probed_ids: list | None = None,
-    luts: DataFrame | None = None,
     scored: DataFrame | None = None,
 ) -> DataFrame:
     """Serve top-k from a STORED IVF-PQ index
@@ -2154,86 +1990,44 @@ def ivf_pq_topk_from_index(
     — the full production composition of every graded scale axis:
 
       * **scan fraction**: probe selection in the int8 space
-        (:func:`ivf_probe_assign`) + the bounded probed-bucket collect
-        applied as a static ``centroid_id IN (...)`` filter, so the
+        (:func:`_query_probes`) + the probed-bucket IN filter, so the
         partitioned layout prunes unprobed buckets at the FILE level
-        (same machinery as :func:`ivf_int8_topk_from_index`);
+        (the shared :func:`ivf_candidate_scores` step);
       * **I/O width**: the scanned tier is the m-BYTE ``codes`` column —
         8x narrower than int8, 32x than float32 at dim=64/m=8 — and ADC
-        scoring (:func:`_adc_sum`) is m map lookups + an order-free
+        scoring (:func:`pq_codec`) is m map lookups + an order-free
         integer sum per candidate, independent of ``dim``;
       * **ranking fidelity**: top-``k_cand`` ADC survivors get exact
         full-precision rerank (:func:`_exact_rerank`), full-width vectors
         touched for only n_queries x k_cand rows.
 
     Every query-side frame (probes, integer LUTs, candidate ids) is
-    broadcast; the corpus never shuffles. Query vectors quantize from the
-    embeddings side (the stored layout holds no qvec and a lookup join
-    would scan every index file, defeating the pruning); LUTs are built
-    once per query against the broadcast codebook. A true neighbor is
-    lost only to bucket pruning (not probed) or ADC distortion (dropped
-    below ``k_cand``) — exactly the two axes the graded recall head
-    sweeps.
+    broadcast; the corpus never shuffles. LUTs are built once per query
+    against the broadcast codebook. A true neighbor is lost only to
+    bucket pruning (not probed) or ADC distortion (dropped below
+    ``k_cand``) — exactly the two axes the graded recall head sweeps.
 
-    ``filter_col`` enables metadata-filtered serving: the index must
-    carry the column (:func:`build_ivf_pq_index` ``carry_cols``) and
-    only candidates whose value EQUALS the query's own are ADC-scored —
-    pre-filter semantics riding the bucket equi-join, the
-    :func:`ivf_int8_filtered_topk_from_index` contract on the PQ copy.
-    ``tombstones`` masks deleted ids out of the pruned candidate scan
-    (broadcast left-anti — the :func:`ivf_int8_topk_from_index` delete
-    contract on the PQ copy; compaction reclaims physically).
-
-    ``probes`` / ``probed_ids`` / ``luts`` let a recall-sweep caller share
-    the (identical-across-tiers) probe ranking, its bounded collect, and
-    the per-query LUT frame across nprobe tiers instead of rebuilding the
-    whole query-side chain per tier: ``probes`` is a precomputed
-    ``(query_id, centroid_id)`` frame for THIS nprobe, ``probed_ids`` the
-    matching sorted distinct centroid ids (skips the per-tier collect),
-    ``luts`` the :func:`_pq_luts` output. ``scored`` goes one step
-    further (guide §1.2 step 1): a precomputed ``(query_id, neighbor_id,
-    adc)`` frame for THIS nprobe (:func:`ivf_pq_candidate_scores` at
+    ``filter_col`` is metadata-filtered serving on the PQ copy (the
+    :func:`ivf_int8_topk_from_index` contract; the index must carry the
+    column via :func:`build_ivf_pq_index` ``carry_cols``). ``scored``
+    lets a recall sweep pass a precomputed ``(query_id, neighbor_id,
+    adc)`` frame for THIS nprobe (:func:`ivf_candidate_scores` at
     max(nprobe), filtered by the carried probe rank), so the pruned
     candidate scan + ADC join run ONCE per sweep instead of once per
-    tier. Semantics are unchanged — the defaults compute exactly what
-    the caller would pass.
+    tier. The defaults compute exactly what the caller would pass.
     """
     if scored is None:
-        if probes is None:
-            qvecs = quantize_embeddings(
-                emb.join(F.broadcast(queries.select(id_col)), id_col),
-                id_col,
-                vec_col,
-                levels,
-            ).select(id_col, "qvec")
-            probes = ivf_probe_assign(
-                qvecs, centroids, id_col, "qvec", nprobe
-            ).select("query_id", "centroid_id")
-        if filter_col is not None:
-            qflt = emb.join(F.broadcast(queries.select(id_col)), id_col).select(
-                F.col(id_col).alias("query_id"), F.col(filter_col).alias("qflt")
-            )
-            probes = probes.join(F.broadcast(qflt), "query_id")
-        if luts is None:
-            luts = _pq_luts(emb, queries, codebook, id_col, vec_col, dim, m)
-        scored = ivf_pq_candidate_scores(
-            index,
-            probes,
-            luts,
-            id_col,
-            m,
-            prune_partitions=prune_partitions,
-            probed_ids=probed_ids,
-            tombstones=tombstones,
+        probes = _query_probes(
+            emb, queries, centroids, id_col, vec_col, nprobe, levels, filter_col
+        )
+        luts = _pq_luts(emb, queries, codebook, id_col, vec_col, dim, m)
+        scored = ivf_candidate_scores(
+            index, probes, id_col, pq_codec(luts, m), prune_partitions,
             filter_col=filter_col,
         )
-    wc = Window.partitionBy("query_id").orderBy(F.desc("adc"), F.asc("neighbor_id"))
-    cands = (
-        scored.withColumn("crnk", F.row_number().over(wc))
-        .where(F.col("crnk") <= k_cand)
-        .select("query_id", "neighbor_id")
+    return _exact_rerank(
+        emb, queries, _cut(scored, "adc", k_cand), id_col, vec_col, k
     )
-    return _exact_rerank(emb, queries, cands, id_col, vec_col, k)
 
 
 def assign_to_ivf_pq_index(
@@ -2264,19 +2058,9 @@ def assign_to_ivf_pq_index(
     (:func:`ivf_index_stats` for bucket skew); re-training rewrites the
     layout, appending never does.
     """
-    _, qvec = _qvec_expr(vec_col, levels)
-    withq = new_emb.select(F.col(id_col), F.col(vec_col), qvec.alias("qvec"))
-    assigned = ivf_assign(withq, centroids, id_col, "qvec")
+    assigned = _int8_assign(new_emb, centroids, id_col, vec_col, levels, (vec_col,))
     return pq_encode(
         assigned, codebook, id_col, vec_col, dim, m, extra_cols=("centroid_id",)
-    )
-
-
-def _dot(a, b) -> Column:
-    """Sequential-fold dot product — ((0+t1)+t2)+... exactly, matching
-    DuckDB's list_reduce term for term (the _sq_l2 discipline)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
     )
 
 
@@ -2293,9 +2077,7 @@ def _residual_frame(
     shared int8 space (one broadcast centroid-array fold); the subtraction
     joins the tiny full-precision centroid table broadcast — still one
     corpus scan, zero shuffle."""
-    _, qvec = _qvec_expr(vec_col, levels)
-    withq = emb.select(F.col(id_col), F.col(vec_col), qvec.alias("qvec"))
-    assigned = ivf_assign(withq, cents_q, id_col, "qvec")
+    assigned = _int8_assign(emb, cents_q, id_col, vec_col, levels, (vec_col,))
     return assigned.join(F.broadcast(cents_full), "centroid_id").select(
         F.col(id_col),
         F.col(vec_col),
@@ -2336,15 +2118,10 @@ def build_ivf_rpq_index(
     table) inside the same single corpus scan; training aggregates the
     residual frame exactly as pq_train aggregates raw vectors.
     """
-    quant = quantize_embeddings(emb, id_col, vec_col, levels)
-    cents_q = quant.orderBy(F.col(id_col)).limit(n_centroids).select(id_col, "qvec")
-    cents_full = (
-        emb.orderBy(F.col(id_col))
-        .limit(n_centroids)
-        .select(
-            F.col(id_col).alias("centroid_id"),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("cv"),
-        )
+    cents_q = _int8_centroids(emb, id_col, vec_col, n_centroids, levels)
+    cents_full = _lowest_ids(emb, id_col, n_centroids).select(
+        F.col(id_col).alias("centroid_id"),
+        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("cv"),
     )
     resid = _residual_frame(emb, cents_q, cents_full, id_col, vec_col, levels)
     codebook = pq_train(resid, id_col, "rvec", dim, m, k_codes, iters)
@@ -2377,20 +2154,15 @@ def ivf_rpq_topk_from_index(
     values, broadcast with the probes) plus the same m LUT lookups as
     raw PQ (the codebook is global over residuals, so the per-query LUT
     is built ONCE, not per bucket). Candidate cost is therefore identical
-    to :func:`ivf_pq_topk_from_index`; the residual form changes WHAT the
-    codes approximate, not what serving pays. Exact full-precision rerank
+    to :func:`ivf_pq_topk_from_index` — the same candidate step with the
+    residual :func:`pq_codec`; the residual form changes WHAT the codes
+    approximate, not what serving pays. Exact full-precision rerank
     on the top-``k_cand`` as everywhere in the family.
     """
-    qvecs = quantize_embeddings(
-        emb.join(F.broadcast(queries.select(id_col)), id_col),
-        id_col,
-        vec_col,
-        levels,
-    ).select(id_col, "qvec")
-    probes = ivf_probe_assign(qvecs, cents_q, id_col, "qvec", nprobe).select(
-        "query_id", "centroid_id"
-    )
-    qfull = emb.join(F.broadcast(queries.select(id_col)), id_col).select(
+    probes = _query_probes(
+        emb, queries, cents_q, id_col, vec_col, nprobe, levels
+    ).select("query_id", "centroid_id")
+    qfull = _query_rows(emb, queries, id_col).select(
         F.col(id_col).alias("query_id"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("qv_full"),
     )
@@ -2400,40 +2172,23 @@ def ivf_rpq_topk_from_index(
         .select(
             "query_id",
             "centroid_id",
-            F.floor(_dot(F.col("qv_full"), F.col("cv")) * F.expr(PQ_ADC_SCALE) + F.lit(0.5))
-            .cast("bigint")
-            .alias("qc"),
+            _adc_dot(F.col("qv_full"), F.col("cv")).alias("qc"),
         )
     )
-    cand_src = index
-    if prune_partitions:
-        # bounded metadata collect: <= n_queries x nprobe distinct ids
-        probed = sorted(
-            r["centroid_id"]
-            for r in probes.select("centroid_id").distinct().collect()
-        )
-        cand_src = index.where(F.col("centroid_id").isin(probed))
     luts = _pq_luts(emb, queries, codebook, id_col, vec_col, dim, m)
-    scored = (
-        cand_src.select(
-            F.col(id_col).alias("neighbor_id"), "codes", "centroid_id"
-        )
-        .join(F.broadcast(probes_qc), "centroid_id")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .join(F.broadcast(luts), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            (F.col("qc") + _adc_sum(m)).alias("adc"),
-        )
+    scored = ivf_candidate_scores(
+        index,
+        probes_qc,
+        id_col,
+        pq_codec(luts, m, residual=True),
+        prune_partitions,
+        # the bucket ids come from the bare probes: collecting the qc join
+        # would run its two broadcasts a second time for nothing
+        probed_ids=_probed_ids(probes) if prune_partitions else None,
     )
-    wc = Window.partitionBy("query_id").orderBy(F.desc("adc"), F.asc("neighbor_id"))
-    cands = (
-        scored.withColumn("crnk", F.row_number().over(wc))
-        .where(F.col("crnk") <= k_cand)
-        .select("query_id", "neighbor_id")
+    return _exact_rerank(
+        emb, queries, _cut(scored, "adc", k_cand), id_col, vec_col, k
     )
-    return _exact_rerank(emb, queries, cands, id_col, vec_col, k)
 
 
 #: 32 sign bits per packed word (values stay below 2^32 in a BIGINT —
@@ -2493,7 +2248,7 @@ def binary_hamming_topk(
     """
     n_words = (dim + BINARY_WORD_BITS - 1) // BINARY_WORD_BITS
     bq = binary_quantize(emb, id_col, vec_col, dim)
-    qb = bq.join(F.broadcast(queries.select(id_col)), id_col).select(
+    qb = _query_rows(bq, queries, id_col).select(
         F.col(id_col).alias("query_id"), F.col("bwords").alias("qwords")
     )
     ham = None
@@ -2512,14 +2267,7 @@ def binary_hamming_topk(
             ham.cast("bigint").alias("hamming"),
         )
     )
-    wc = Window.partitionBy("query_id").orderBy(
-        F.asc("hamming"), F.asc("neighbor_id")
-    )
-    cands = (
-        scored.withColumn("crnk", F.row_number().over(wc))
-        .where(F.col("crnk") <= k_cand)
-        .select("query_id", "neighbor_id")
-    )
+    cands = _cut(scored, "hamming", k_cand, ascending=True)
     return _exact_rerank(emb, queries, cands, id_col, vec_col, k)
 
 
@@ -2659,7 +2407,7 @@ def knn_graph_bucket(
     fold and the DuckDB oracle. Task grain is one bucket — the operator
     already requires buckets sized to the quadratic budget (n/k_c rows),
     which is exactly the per-task memory bound the kernel needs."""
-    centroids = emb.orderBy(F.col(id_col)).limit(n_centroids)
+    centroids = _lowest_ids(emb, id_col, n_centroids)
     assigned = ivf_assign(emb, centroids, id_col, vec_col)
     probes = ivf_probe_assign(
         emb.select(F.col(id_col), F.col(vec_col)),
@@ -2723,12 +2471,9 @@ def knn_graph_bucket(
         .cogroup(b.groupBy("centroid_id"))
         .applyInPandas(_bucket_topk, out_schema)
     )
-    w = Window.partitionBy("src").orderBy(F.desc("cosine"), F.asc("dst"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select("src", "dst", "rnk", F.round("cosine", 6).alias("cosine"))
-    )
+    return _rank_per_query(
+        scored, "cosine", k, query_col="src", id_col="dst"
+    ).select("src", "dst", "rnk", F.round("cosine", 6).alias("cosine"))
 
 
 def exact_knn_pairs(
@@ -2889,7 +2634,7 @@ def mmr_topk(
     k ~ 50 in an interactive path — for deep diversity reranks, pull
     the bounded candidate frame to a single-node reranker instead.
     """
-    q = emb.join(F.broadcast(queries.select(id_col)), id_col).select(
+    q = _query_rows(emb, queries, id_col).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
     )
     c = emb.select(F.col(id_col).alias("d"), F.col(vec_col).alias("dv"))
@@ -2900,11 +2645,8 @@ def mmr_topk(
         c.join(F.broadcast(q), F.col("query_id") != F.col("d"))
         .select("query_id", "d", "dv", rel_e6.alias("rel_e6"))
     )
-    wc = Window.partitionBy("query_id").orderBy(F.desc("rel_e6"), F.asc("d"))
     cands = scoped_persist(
-        scored.withColumn("crnk", F.row_number().over(wc))
-        .where(F.col("crnk") <= k_cand)
-        .drop("crnk")
+        _rank_per_query(scored, "rel_e6", k_cand, "crnk", id_col="d").drop("crnk")
     )
     c1 = cands.select("query_id", F.col("d").alias("d1"), F.col("dv").alias("v1"))
     c2 = cands.select("query_id", F.col("d").alias("d2"), F.col("dv").alias("v2"))

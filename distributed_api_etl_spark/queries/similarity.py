@@ -493,10 +493,11 @@ def ann_ivf_int8_rerank_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFra
     # is a probe_rnk filter over this persisted frame, so the bucket join
     # + int8 scoring fold run once per sweep instead of once per tier.
     qscored_max = scoped_persist(
-        S.ivf_int8_candidate_scores(
+        S.ivf_candidate_scores(
             index,
             ranked,
             "vec_id",
+            S.int8_codec(),
             prune_partitions=False,
             carry_cols=("probe_rnk",),
         )
@@ -1934,12 +1935,11 @@ def ann_ivf_pq_rerank_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame
     # pruned-scan + ADC join (previously len(NPROBE_SWEEP) scan+score
     # passes totalling ~sum(nprobe)/max(nprobe) = ~2x the max tier's work).
     scored_max = scoped_persist(
-        S.ivf_pq_candidate_scores(
+        S.ivf_candidate_scores(
             stored,
             ranked,
-            luts,
             "vec_id",
-            PQ_M,
+            S.pq_codec(luts, PQ_M),
             prune_partitions=True,
             probed_ids=sorted({c for c, _ in probe_rows}),
             carry_cols=("probe_rnk",),
@@ -2605,7 +2605,7 @@ def _filtered_serving_oracle_sql() -> str:
 )
 def ann_ivf_filtered_serving_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Metadata-FILTERED serving from the stored IVF+int8 layout
-    (operators/similarity.py:ivf_int8_filtered_topk_from_index): each
+    (operators/similarity.py:ivf_int8_topk_from_index filter_col=): each
     query returns top-{IVF_K} among neighbors sharing ITS OWN ``label``
     (the multi-tenant equality predicate), with the label stored IN the
     index rows (build_ivf_int8_index carry_cols) — filtering reads the
@@ -2638,18 +2638,18 @@ def ann_ivf_filtered_serving_topk(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     index.write.mode("overwrite").partitionBy("centroid_id").parquet(out)
     stored = spark.read.parquet(out)
-    return S.ivf_int8_filtered_topk_from_index(
+    return S.ivf_int8_topk_from_index(
         stored,
         cents,
         emb,
         queries,
         "vec_id",
         "embedding",
-        FILTER_COL,
         IVF_K,
         K_CAND_IVF,
         nprobe=IVF_NPROBE_SERVE,
         prune_partitions=True,
+        filter_col=FILTER_COL,
     )
 
 
@@ -2768,7 +2768,7 @@ def ann_filtered_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """What a metadata predicate does to the recall/nprobe curve — the
     sizing question filtered ANN raises in production. Grades
     recall@{IVF_K} of the filtered IVF+int8+rerank path
-    (operators/similarity.py:ivf_int8_filtered_topk_from_index) at nprobe
+    (operators/similarity.py:ivf_int8_topk_from_index filter_col=) at nprobe
     in {NPROBE_SWEEP} against the FILTERED brute-force truth
     (bruteforce_filtered_topk), on the same query window, k, and k_cand
     as ann_ivf_int8_rerank_recall_at_k's unfiltered curve — the two
@@ -2801,20 +2801,20 @@ def ann_filtered_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tiers = []
     for np_ in NPROBE_SWEEP:
-        topk = S.ivf_int8_filtered_topk_from_index(
+        topk = S.ivf_int8_topk_from_index(
             index,
             cents,
             emb,
             queries.select("vec_id"),
             "vec_id",
             "embedding",
-            FILTER_COL,
             IVF_K,
             K_CAND_IVF,
             nprobe=np_,
             # inline composition: the index is an in-plan subtree, nothing
             # to file-prune (the stored form is graded by the serving head)
             prune_partitions=False,
+            filter_col=FILTER_COL,
         ).select("query_id", "neighbor_id")
         hits = (
             topk.join(truth, ["query_id", "neighbor_id"])

@@ -2471,6 +2471,30 @@ def test_pq_train_kernel_equals_hof(spark, sf_dir):
     )
 
 
+def test_pq_train_null_id_takes_distributed_loop(spark, sf_dir):
+    """A null id under the driver-gate cap must not crash the driver
+    Lloyd's (Python cannot order None against ids): pq_train falls
+    through to the distributed loop, whose ORDER BY puts the null first,
+    so the default call equals the forced distributed one row for row."""
+    from distributed_api_etl_spark.operators.similarity import pq_train
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+        "vec_id", "embedding"
+    )
+    one = emb.where(F.col("vec_id") == 5).select(
+        F.lit(None).cast(emb.schema["vec_id"].dataType).alias("vec_id"), "embedding"
+    )
+    with_null = emb.unionByName(one)
+
+    def rows(df):
+        return sorted((r.s, r.code, tuple(r.cw)) for r in df.collect())
+
+    kw = dict(m=4, k_codes=8, iters=2)
+    assert rows(pq_train(with_null, "vec_id", "embedding", 64, **kw)) == rows(
+        pq_train(with_null, "vec_id", "embedding", 64, driver_max_rows=0, **kw)
+    )
+
+
 def test_pq_encode_kernel_equals_hof(spark, sf_dir):
     """The numpy PQ encode kernel (r16) must emit the exact codes of the
     m interpreted argmin folds it replaces — real corpus + a trained
@@ -2684,6 +2708,54 @@ def test_ivf_rpq_residuals_share_bucketing_and_zero_at_centroids(spark, sf_dir):
             assert (s, code) in valid
 
 
+def test_ivf_rpq_stored_index_partition_pruning(spark, tmp_path, sf_dir):
+    """Residual IVF-PQ served from its stored layout: the index written
+    partitionBy(centroid_id) and served with prune_partitions=True must
+    (a) carry a centroid_id PartitionFilter on every scan of the layout
+    and (b) return exactly the prune_partitions=False rows."""
+    import re
+
+    from distributed_api_etl_spark.operators.similarity import (
+        build_ivf_rpq_index,
+        ivf_rpq_topk_from_index,
+    )
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    queries = emb.where(F.col("vec_id") < 4).select("vec_id")
+    index, cents_q, cents_full, cb = build_ivf_rpq_index(
+        emb, "vec_id", "embedding", 64, 8, m=4, k_codes=8, iters=1
+    )
+    path = str(tmp_path / "ivf_rpq_index")
+    index.write.partitionBy("centroid_id").parquet(path)
+    stored = spark.read.parquet(path)
+
+    def serve(prune):
+        return ivf_rpq_topk_from_index(
+            stored, cents_q, cents_full, cb, emb, queries, "vec_id",
+            "embedding", 64, 4, 3, 10, nprobe=2, prune_partitions=prune,
+        )
+
+    served = serve(True)
+    rows = lambda df: {tuple(r) for r in df.collect()}  # noqa: E731
+    assert rows(served) == rows(serve(False))
+
+    jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+        "formatted"
+    )
+    plan = served._jdf.queryExecution().explainString(jmode)
+    idx_pfs, loc = [], ""
+    for line in plan.splitlines():
+        s = line.strip()
+        if s.startswith("Location:"):
+            loc = s
+        m2 = re.search(r"PartitionFilters: \[([^\]]*)\]", s)
+        if m2 and "ivf_rpq_index" in loc:
+            idx_pfs.append(m2.group(1))
+            loc = ""
+    assert idx_pfs, plan
+    assert all("centroid_id" in pf for pf in idx_pfs), plan
+
+
 def test_ivf_pq_with_learned_centroids_degenerates_to_brute_adc(spark, tmp_path, sf_dir):
     """build_ivf_pq_index composes with kmeans_centroids exactly like the
     int8 index does (centroids= quantizes the learned table with the
@@ -2881,7 +2953,7 @@ def test_filtered_topk_pre_filter_semantics(spark, sf_dir):
     from distributed_api_etl_spark.operators.similarity import (
         build_ivf_int8_index,
         bruteforce_filtered_topk,
-        ivf_int8_filtered_topk_from_index,
+        ivf_int8_topk_from_index,
     )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -2891,18 +2963,18 @@ def test_filtered_topk_pre_filter_semantics(spark, sf_dir):
     )
     assert "label" in index.columns  # carry_cols stores the predicate column
 
-    served = ivf_int8_filtered_topk_from_index(
-        index, cents, emb, queries, "vec_id", "embedding", "label",
-        3, 10, nprobe=2, prune_partitions=False,
+    served = ivf_int8_topk_from_index(
+        index, cents, emb, queries, "vec_id", "embedding",
+        3, 10, nprobe=2, prune_partitions=False, filter_col="label",
     )
     lab = {r.vec_id: r.label for r in emb.select("vec_id", "label").collect()}
     for r in served.collect():
         assert lab[r.neighbor_id] == lab[r.query_id], r
 
     # exhaustive probing == filtered brute truth (the recall ceiling)
-    full = ivf_int8_filtered_topk_from_index(
-        index, cents, emb, queries, "vec_id", "embedding", "label",
-        3, 10**6, nprobe=8, prune_partitions=False,
+    full = ivf_int8_topk_from_index(
+        index, cents, emb, queries, "vec_id", "embedding",
+        3, 10**6, nprobe=8, prune_partitions=False, filter_col="label",
     )
     truth = bruteforce_filtered_topk(
         emb, emb.join(queries, "vec_id"), "vec_id", "embedding", "label", 3
@@ -2918,7 +2990,7 @@ def test_filtered_serving_stored_equals_inline(spark, tmp_path, sf_dir):
     files)."""
     from distributed_api_etl_spark.operators.similarity import (
         build_ivf_int8_index,
-        ivf_int8_filtered_topk_from_index,
+        ivf_int8_topk_from_index,
     )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -2930,13 +3002,13 @@ def test_filtered_serving_stored_equals_inline(spark, tmp_path, sf_dir):
     index.write.partitionBy("centroid_id").parquet(path)
     stored = spark.read.parquet(path)
 
-    inline = ivf_int8_filtered_topk_from_index(
-        index, cents, emb, queries, "vec_id", "embedding", "label",
-        3, 10, nprobe=2, prune_partitions=False,
+    inline = ivf_int8_topk_from_index(
+        index, cents, emb, queries, "vec_id", "embedding",
+        3, 10, nprobe=2, prune_partitions=False, filter_col="label",
     )
-    served = ivf_int8_filtered_topk_from_index(
-        stored, cents, emb, queries, "vec_id", "embedding", "label",
-        3, 10, nprobe=2, prune_partitions=True,
+    served = ivf_int8_topk_from_index(
+        stored, cents, emb, queries, "vec_id", "embedding",
+        3, 10, nprobe=2, prune_partitions=True, filter_col="label",
     )
     rows = lambda df: {tuple(r) for r in df.collect()}  # noqa: E731
     assert rows(served) == rows(inline)
