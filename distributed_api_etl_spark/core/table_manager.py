@@ -212,6 +212,49 @@ class TableManager:
         w.saveAsTable(table_name)
 
 
+# The in-place rewrites here (compact_files, upsert_parquet,
+# layout.optimize_zorder) share one swap protocol: the new layout is
+# written to ``<location>__<op>_tmp``, the live layout is renamed to
+# ``<location>__<op>_old``, the new one is renamed into place and the old
+# one is deleted. recover_scratch resolves what a crash leaves behind.
+_SWAP_OPS = ("compact", "upsert", "zorder")
+SCRATCH_SUFFIXES = tuple(
+    f"__{op}_{stage}" for op in _SWAP_OPS for stage in ("tmp", "old")
+)
+
+
+def hadoop_fs(spark: SparkSession, location: str):
+    """``(FileSystem, Path)`` of ``location``: the Hadoop FileSystem that
+    resolves it (file:, hdfs:, s3a:, ...) and the JVM Path constructor."""
+    sc = spark.sparkContext
+    jvm_path = sc._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
+    fs = jvm_path(location).getFileSystem(sc._jsc.hadoopConfiguration())  # noqa: SLF001
+    return fs, jvm_path
+
+
+def swap_in_rewrite(spark: SparkSession, location: str, op: str, write) -> None:
+    """Replace the layout at ``location`` with the one ``write(tmp)``
+    writes, by the two-rename swap.
+
+    A crash leaves either the old or the new layout, never a mix, but
+    there IS a brief no-sink window between the two renames: serialize
+    against concurrent readers (on object stores rename is copy+delete and
+    the window is longer — prefer Delta OPTIMIZE there). A failed second
+    rename puts the old layout back before raising ``OSError``.
+    """
+    assert op in _SWAP_OPS, op
+    fs, path = hadoop_fs(spark, location)
+    base = location.rstrip("/")
+    tmp, old = base + f"__{op}_tmp", base + f"__{op}_old"
+    write(tmp)
+    if not fs.rename(path(location), path(old)):
+        raise OSError(f"{op} swap: rename {location} -> {old} failed")
+    if not fs.rename(path(tmp), path(location)):
+        fs.rename(path(old), path(location))
+        raise OSError(f"{op} swap: rename {tmp} -> {location} failed")
+    fs.delete(path(old), True)
+
+
 def compact_files(
     spark: SparkSession,
     location: str,
@@ -240,16 +283,10 @@ def compact_files(
     compacting); a bucket larger than the target should stay multi-file
     and skip compaction.
 
-    The rewrite goes through a temp dir, then two Hadoop FileSystem
-    ``rename`` calls (location -> old, tmp -> location) and a recursive
-    ``delete`` of the old layout — the same FileSystem that resolved the
-    location, so the swap works on any scheme (file:, hdfs:, s3a:), not
-    just local POSIX paths. A crash leaves either the old or the new
-    layout, never a mix, but there IS a brief no-sink window between the
-    two renames: serialize against concurrent readers (on object stores
-    rename is copy+delete and the window is longer — prefer Delta
-    OPTIMIZE there). Returns {files_before, files_after, bytes,
-    rows_dropped}.
+    The rewrite is swapped in by :func:`swap_in_rewrite` through the
+    Hadoop FileSystem that resolves the location, so it works on any
+    scheme (file:, hdfs:, s3a:), not just local POSIX paths. Returns
+    {files_before, files_after, bytes, rows_dropped}.
 
     ``drop_ids`` (a 1-column frame of ``drop_id_col`` values) makes the
     rewrite a VACUUM: tombstoned rows are excluded (broadcast left-anti
@@ -261,9 +298,7 @@ def compact_files(
     """
     import math
 
-    sc = spark.sparkContext
-    jvm_path = sc._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
-    fs = jvm_path(location).getFileSystem(sc._jsc.hadoopConfiguration())  # noqa: SLF001
+    fs, jvm_path = hadoop_fs(spark, location)
     df = spark.read.format(fmt).load(location)
     # capture the pre-join file census from the location-only frame: after
     # the left-anti join below, inputFiles() would also count the tombstone
@@ -284,8 +319,6 @@ def compact_files(
     summary = fs.getContentSummary(jvm_path(location))
     total_bytes = summary.getLength()
     n_out = max(1, math.ceil(total_bytes / (target_file_mb * 1024 * 1024)))
-    tmp = location.rstrip("/") + "__compact_tmp"
-    old = location.rstrip("/") + "__compact_old"
     if partition_by:
         writer = (
             df.repartition(n_out, *[df[c] for c in partition_by])
@@ -294,14 +327,7 @@ def compact_files(
         )
     else:
         writer = df.repartition(n_out).write.format(fmt)
-    writer.mode("overwrite").save(tmp)
-    if not fs.rename(jvm_path(location), jvm_path(old)):
-        raise OSError(f"compact_files: rename {location} -> {old} failed")
-    if not fs.rename(jvm_path(tmp), jvm_path(location)):
-        # restore the original layout before failing
-        fs.rename(jvm_path(old), jvm_path(location))
-        raise OSError(f"compact_files: rename {tmp} -> {location} failed")
-    fs.delete(jvm_path(old), True)
+    swap_in_rewrite(spark, location, "compact", writer.mode("overwrite").save)
     files_after = sum(1 for _ in spark.read.format(fmt).load(location).inputFiles())
     return {
         "files_before": files_before,
@@ -324,8 +350,8 @@ def upsert_parquet(
     src/orchestration/batch_handler.py:47).
 
     Plan: one left-anti join (sink rows whose key is NOT updated) unioned
-    with the updates, rewritten to a temp dir, then the same two-rename
-    swap as :func:`compact_files` — a crash leaves the old or the new
+    with the updates, rewritten to a temp dir, then the two-rename swap
+    (:func:`swap_in_rewrite`) — a crash leaves the old or the new
     layout, never a mix. Concurrent writers must be externally serialized
     (no log to detect conflicts); at scale partition the sink so the
     rewrite touches only affected partitions, or use Delta/Iceberg where
@@ -339,9 +365,7 @@ def upsert_parquet(
     ``<location>__upsert_old`` with no live ``location`` — run
     :func:`recover_scratch` (both snapshots are complete, never a mix).
     """
-    sc = spark.sparkContext
-    jvm_path = sc._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
-    fs = jvm_path(location).getFileSystem(sc._jsc.hadoopConfiguration())  # noqa: SLF001
+    fs, jvm_path = hadoop_fs(spark, location)
     if not fs.exists(jvm_path(location)):
         updates.write.format("parquet").mode("overwrite").save(location)
         n = updates.count()
@@ -359,15 +383,9 @@ def upsert_parquet(
         )
     kept = existing.join(updates.select(key_col), key_col, "left_anti")
     merged = kept.unionByName(updates)
-    tmp = location.rstrip("/") + "__upsert_tmp"
-    old = location.rstrip("/") + "__upsert_old"
-    merged.write.format("parquet").mode("overwrite").save(tmp)
-    if not fs.rename(jvm_path(location), jvm_path(old)):
-        raise OSError(f"upsert_parquet: rename {location} -> {old} failed")
-    if not fs.rename(jvm_path(tmp), jvm_path(location)):
-        fs.rename(jvm_path(old), jvm_path(location))
-        raise OSError(f"upsert_parquet: rename {tmp} -> {location} failed")
-    fs.delete(jvm_path(old), True)
+    swap_in_rewrite(
+        spark, location, "upsert", merged.write.format("parquet").mode("overwrite").save
+    )
     rows_after = spark.read.parquet(location).count()
     rows_inserted = rows_after - rows_before
     updates.unpersist()
@@ -377,43 +395,6 @@ def upsert_parquet(
         "rows_updated": n_updates - rows_inserted,
         "rows_inserted": rows_inserted,
     }
-
-
-def read_with_evolution(
-    spark: SparkSession, location: str, expected_schema=None
-) -> "DataFrame":
-    """Read a parquet location whose files span SCHEMA VERSIONS.
-
-    Long-lived sinks accumulate files written under evolving schemas
-    (columns added over time). A plain read takes ONE file's footer as the
-    schema and silently drops newer columns; ``mergeSchema`` unions the
-    footers so added columns surface everywhere, null-filled for files
-    that predate them — the additive-evolution read contract
-    (validate_schema governs what writes are ALLOWED; this is the read
-    side). At 100 TB footer-merging costs one metadata pass over file
-    footers, not data; pin ``expected_schema`` to also project/order
-    columns deterministically for downstream contracts.
-    """
-    df = spark.read.option("mergeSchema", "true").parquet(location)
-    if expected_schema is not None:
-        from pyspark.sql import functions as F
-
-        cols = []
-        have = {f.name for f in df.schema.fields}
-        for f in expected_schema.fields:
-            if f.name in have:
-                cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
-            else:
-                cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-        df = df.select(*cols)
-    return df
-
-
-SCRATCH_SUFFIXES = (
-    "__compact_tmp", "__compact_old",
-    "__upsert_tmp", "__upsert_old",
-    "__zorder_tmp", "__zorder_old",
-)
 
 
 def recover_scratch(spark: SparkSession, location: str) -> dict:
@@ -428,9 +409,7 @@ def recover_scratch(spark: SparkSession, location: str) -> dict:
     layout). Run before reading a location that might have died mid-
     maintenance; idempotent. Returns {restored, deleted}.
     """
-    sc = spark.sparkContext
-    jvm_path = sc._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
-    fs = jvm_path(location).getFileSystem(sc._jsc.hadoopConfiguration())  # noqa: SLF001
+    fs, jvm_path = hadoop_fs(spark, location)
     base = location.rstrip("/")
     live = fs.exists(jvm_path(base))
     restored, deleted = [], []

@@ -91,7 +91,3 @@ def dec(col: Column | str, precision: int = 12, scale: int = 2) -> Column:
     """Exact-decimal cast for cross-engine-stable aggregation."""
     c = F.col(col) if isinstance(col, str) else col
     return c.cast(DecimalType(precision, scale))
-
-
-def dec_sql(expr: str, precision: int = 12, scale: int = 2) -> str:
-    return f"CAST(({expr}) AS DECIMAL({precision},{scale}))"

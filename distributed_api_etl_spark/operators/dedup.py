@@ -235,17 +235,6 @@ def jaccard_pairs(
     )
 
 
-def minhash_signatures(sh: DataFrame, id_col: str) -> DataFrame:
-    """k min-hash values per doc in ONE aggregation (no pivot, no explode of
-    hash functions — each h_i is its own agg expression)."""
-    xh = portable_hash32(F.col("s"))
-    aggs = [
-        F.min((F.lit(MINHASH_A[i]) * xh + F.lit(MINHASH_B[i])) % MINHASH_P).alias(f"h{i}")
-        for i in range(N_HASHES)
-    ]
-    return sh.groupBy(id_col).agg(*aggs)
-
-
 def band_long_table(sigs: DataFrame, id_col: str) -> DataFrame:
     """(id, band_idx, band_val) long form of the banded signatures — the
     join-ready bucket representation shared by self-join and incremental
@@ -296,9 +285,8 @@ def minhash_signatures_from_sets(base: DataFrame, id_col: str) -> DataFrame:
 
     Docs with an EMPTY shingle set (shorter than n tokens) are excluded:
     their signature would be all-null, and null signatures must never reach
-    the banding path (see band_long_table). This matches the explode-based
-    :func:`minhash_signatures`, where empty docs contribute no rows. The
-    size predicate runs ABOVE the persisted shingle-set frame, so it reads
+    the banding path (see band_long_table). The size predicate runs ABOVE
+    the persisted shingle-set frame, so it reads
     the cached array — it does not duplicate the shingling kernel."""
     # size on the CACHED shs column — size("xhs") would re-evaluate the
     # per-shingle hash transform (HOFs sit outside codegen CSE) just to
@@ -563,8 +551,8 @@ def simhash_pairs(
     pair within distance d agrees exactly on >=1 block (d differing bits
     cannot land in all d+1 blocks), so block-bucket equi-joins have recall
     1.0 by construction; the Hamming verify on the candidate union gives
-    precision. Property-tested equal to :func:`simhash_pairs_exhaustive`
-    (tests/test_properties.py).
+    precision. Property-tested equal to the all-pairs cross join in
+    tests/reference_forms.py (tests/test_properties.py).
 
     Scale: candidates per block are sum-of-squared bucket sizes at
     ``bits/(d+1)`` block bits. For 100 TB corpora raise ``bits`` (e.g. a
@@ -599,23 +587,6 @@ def simhash_pairs(
     return (
         cands.join(sig_only.select(F.col(id_col).alias("d1"), F.col("simhash").alias("sig1")), "d1")
         .join(sig_only.select(F.col(id_col).alias("d2"), F.col("simhash").alias("sig2")), "d2")
-        .where(ham <= max_hamming)
-        .select("d1", "d2", ham.alias("hamming"))
-    )
-
-
-def simhash_pairs_exhaustive(
-    df: DataFrame, id_col: str, text_col: str, max_hamming: int = 6
-) -> DataFrame:
-    """Exact variant: full self-join on signatures (use for graded
-    correctness and moderate cardinalities; the blocked variant scales)."""
-    sigs = simhash_signatures(df, id_col, text_col)
-    a = sigs.select(F.col(id_col).alias("d1"), F.col("simhash").alias("sig1"))
-    b = sigs.select(F.col(id_col).alias("d2"), F.col("simhash").alias("sig2"))
-    ham = F.bit_count(F.col("sig1").bitwiseXOR(F.col("sig2")))
-    return (
-        a.crossJoin(b)
-        .where(F.col("d1") < F.col("d2"))
         .where(ham <= max_hamming)
         .select("d1", "d2", ham.alias("hamming"))
     )

@@ -261,7 +261,14 @@ def _connected_components_loop(
         # star-contraction algorithm, which converges on any graph shape.
         # ``edges`` is still persisted, so the upstream LSH pipeline is not
         # re-run; two_phase checkpoints its own state before we release it.
-        out = connected_components_two_phase(edges, src, dst)
+        # Star contraction drops self-loop-only and null-endpoint nodes
+        # (its canonical pairs keep p != q), so its labels are joined back
+        # onto the loop's node set: such a node labels itself, as it does
+        # when the loop converges.
+        comp = connected_components_two_phase(edges, src, dst)
+        out = labels.join(comp, "node", "left").select(
+            "node", F.coalesce(F.col("cluster_id"), F.col("node")).alias("cluster_id")
+        )
         edges.unpersist()
         return out
     edges.unpersist()

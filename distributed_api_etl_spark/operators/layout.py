@@ -134,81 +134,30 @@ def optimize_zorder(
     one rewrite).
 
     File count derives from total bytes (the compact_files sizing rule);
-    the swap is the same two-rename protocol as compact_files /
-    upsert_parquet through the Hadoop FileSystem of the location (works on
-    file:/hdfs:/s3a:; a crash leaves old or new, never a mix — see
-    core/table_manager.compact_files for the concurrency caveats).
-    Returns {files_before, files_after, bytes}.
+    the swap is core/table_manager.swap_in_rewrite (works on
+    file:/hdfs:/s3a:; a crash leaves old or new, never a mix — see its
+    concurrency caveats). Returns {files_before, files_after, bytes}.
     """
     import math
 
-    sc = spark.sparkContext
-    jvm_path = sc._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
-    fs = jvm_path(location).getFileSystem(sc._jsc.hadoopConfiguration())  # noqa: SLF001
+    from distributed_api_etl_spark.core.table_manager import hadoop_fs, swap_in_rewrite
+
+    fs, jvm_path = hadoop_fs(spark, location)
     df = spark.read.parquet(location)
     files_before = len(df.inputFiles())
     total_bytes = fs.getContentSummary(jvm_path(location)).getLength()
     n_out = max(1, math.ceil(total_bytes / (target_file_mb * 1024 * 1024)))
-    tmp = location.rstrip("/") + "__zorder_tmp"
-    old = location.rstrip("/") + "__zorder_old"
-    write_zordered(df, tmp, x_col, y_col, n_files=n_out, bucket_bits=bucket_bits)
-    if not fs.rename(jvm_path(location), jvm_path(old)):
-        raise OSError(f"optimize_zorder: rename {location} -> {old} failed")
-    if not fs.rename(jvm_path(tmp), jvm_path(location)):
-        fs.rename(jvm_path(old), jvm_path(location))
-        raise OSError(f"optimize_zorder: rename {tmp} -> {location} failed")
-    fs.delete(jvm_path(old), True)
+    swap_in_rewrite(
+        spark,
+        location,
+        "zorder",
+        lambda tmp: write_zordered(
+            df, tmp, x_col, y_col, n_files=n_out, bucket_bits=bucket_bits
+        ),
+    )
     files_after = len(spark.read.parquet(location).inputFiles())
     return {
         "files_before": files_before,
         "files_after": files_after,
         "bytes": int(total_bytes),
     }
-
-
-def file_bounding_boxes(spark, location: str, cols: list[str]) -> DataFrame:
-    """Per-file min/max manifest for the given columns — the data-skipping
-    statistics a scan planner consults (parquet keeps these per row group;
-    this surfaces them per FILE for layout auditing and external indexes).
-
-    One aggregation grouped by ``input_file_name()`` (map-side combinable;
-    no shuffle of data columns beyond the audited ones). The quality of a
-    layout is literally visible here: after ``write_zordered`` each file's
-    box covers a small rectangle of the clustered dimensions, while a
-    single-column sort leaves the other dimension's boxes spanning the
-    whole domain — quantified as ``coverage`` (box width / global width,
-    averaged over files; lower prunes better).
-    """
-    from pyspark.sql import functions as F
-
-    df = spark.read.parquet(location)
-    aggs = []
-    for c in cols:
-        aggs += [F.min(c).alias(f"min_{c}"), F.max(c).alias(f"max_{c}")]
-    per_file = (
-        df.withColumn("_file", F.input_file_name()).groupBy("_file").agg(*aggs)
-    )
-    bounds = df.agg(
-        *[
-            a
-            for c in cols
-            for a in (F.min(c).alias(f"gmin_{c}"), F.max(c).alias(f"gmax_{c}"))
-        ]
-    )
-    out = per_file.crossJoin(F.broadcast(bounds))
-    for c in cols:
-        out = out.withColumn(
-            f"coverage_{c}",
-            # a constant column has a zero-width global range: every file
-            # trivially spans it — 1.0, not a NULL that poisons averages
-            F.when(
-                F.col(f"gmax_{c}") == F.col(f"gmin_{c}"), F.lit(1.0)
-            ).otherwise(
-                (F.col(f"max_{c}") - F.col(f"min_{c}"))
-                / (F.col(f"gmax_{c}") - F.col(f"gmin_{c}"))
-            ),
-        )
-    return out.select(
-        F.col("_file").alias("file"),
-        *[x for c in cols for x in (f"min_{c}", f"max_{c}", f"coverage_{c}")],
-    )

@@ -1,5 +1,4 @@
-"""Data-quality expectations: declarative row rules -> violation report,
-plus a quarantine split.
+"""Data-quality expectations: declarative row rules -> violation report.
 
 Extends the reference's schema/contract validation (which checks shape,
 config/models.py parity) to row-level CONTENT checks — the gate a 100 TB
@@ -101,24 +100,3 @@ def fk_violations(
         F.count("*").cast("bigint").alias("n_violations"),
         ppm.alias("violation_ppm"),
     )
-
-
-def quarantine_split(
-    df: DataFrame, rules: list[Rule]
-) -> tuple[DataFrame, DataFrame]:
-    """(valid, quarantined) split: a row quarantines if ANY rule fails;
-    quarantined rows carry ``_failed_rules`` (array of rule names) for
-    triage. Both sides derive from one predicate projection — callers that
-    need both should persist the parent."""
-    failed = F.array_compact(
-        F.array(
-            *[
-                F.when(r.cond.isNull() | ~r.cond, F.lit(r.name))
-                for r in rules
-            ]
-        )
-    )
-    tagged = df.withColumn("_failed_rules", failed)
-    valid = tagged.where(F.size("_failed_rules") == 0).drop("_failed_rules")
-    quarantined = tagged.where(F.size("_failed_rules") > 0)
-    return valid, quarantined

@@ -71,8 +71,3 @@ def snapshot_diff(
     if not include_unchanged:
         out = out.where(F.col("change_type") != "unchanged")
     return out
-
-
-def diff_summary(diff: DataFrame) -> DataFrame:
-    """(change_type, n) rollup of a snapshot_diff result."""
-    return diff.groupBy("change_type").agg(F.count("*").alias("n"))

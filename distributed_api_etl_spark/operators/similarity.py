@@ -488,13 +488,6 @@ def _int8_assign(
     return ivf_assign(withq, cents_q, id_col, "qvec")
 
 
-def dequantize(qvec_col: str = "qvec", scale_col: str = "scale"):
-    """Column expression: approximate reconstruction v[j] ~= q[j] * scale."""
-    return F.transform(
-        F.col(qvec_col), lambda q: q.cast("double") * F.col(scale_col)
-    )
-
-
 def quantized_rerank_topk(
     emb: DataFrame,
     queries: DataFrame,
@@ -1253,16 +1246,6 @@ def lsh_params_for(
 # lookup tables (ADC, asymmetric distance computation).
 
 
-def _sq_l2(a, b) -> Column:
-    """Sequential-fold squared L2 distance — ((0+t1)+t2)+... exactly, which
-    DuckDB's list_reduce reproduces term for term (0+t1 == t1 in IEEE)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def _cb_array(codebook: DataFrame) -> DataFrame:
     """Collapse a codebook to ONE broadcastable row holding the
     (s, code)-sorted array<struct{s, code, cw}> — the ivf_assign shape."""
@@ -1322,11 +1305,11 @@ def _seed_codebook(seed_rows, dim: int, m: int) -> dict:
 
 def _argmin_codes(V, codes, cents):
     """Per-row nearest code of ``V`` (n x d_sub float64) under EXACTLY the
-    HOF fold's semantics: squared-L2 terms ``(x-y)*(x-y)`` accumulated in
-    component order into a float64 (the :func:`_sq_l2` sequence, so
-    distances are BIT-IDENTICAL), strictly-less comparison keeping the
-    lowest code on exact ties (rows sorted by code; argmin returns the
-    first minimum)."""
+    interpreted fold's semantics (tests/reference_forms.py): squared-L2
+    terms ``(x-y)*(x-y)`` accumulated in component order into a float64
+    (the ((0+t1)+t2)+... sequence, so distances are BIT-IDENTICAL),
+    strictly-less comparison keeping the lowest code on exact ties (rows
+    sorted by code; argmin returns the first minimum)."""
     import numpy as np
 
     acc = np.zeros((V.shape[0], cents.shape[0]), dtype=np.float64)
@@ -1413,16 +1396,26 @@ def pq_train(
     round_decimals: int = 6,
     driver_max_rows: int = PQ_TRAIN_DRIVER_MAX_ROWS,
 ) -> DataFrame:
-    """Deterministic PQ codebook — the Arrow-kernel form of
-    :func:`pq_train_hof` (output pinned identical by
-    test_pq_train_kernel_equals_hof; the docstring there holds verbatim).
+    """Deterministic PQ codebook: per subspace s (the s-th ``dim//m``
+    consecutive components), Lloyd's k-means with MIN-SQUARED-L2
+    assignment (ties -> lowest code id; L2 is the standard PQ training
+    objective — it bounds the inner-product quantization error ADC
+    serving cares about). Init = the subvectors of the ``k_codes``
+    lowest-id vectors, with code ids remapped DENSE (0..k_codes-1 by
+    seed-id rank) so the ADC LUT keys ``s*PQ_KEY_STRIDE+code`` never
+    collide for any id distribution; cluster means rounded to
+    ``round_decimals`` each iteration so an independent engine reproduces
+    every centroid float exactly (the :func:`kmeans_centroids`
+    discipline). Returns ``(s, code, cw)``. Output pinned identical to
+    the interpreted JVM fold chain in tests/reference_forms.py by
+    test_pq_train_kernel_equals_hof.
 
     Per iteration the corpus-side assignment AND the cluster partial sums
     run as ONE numpy pass per Arrow batch (:func:`_argmin_codes` —
     bit-identical distances and tie-breaks to the interpreted
     k_codes x d_sub JVM fold it replaces, guide §4.2) against the
     collected codebook (bounded m x k_codes rows, an iteration boundary
-    the driver already pays in spirit: the HOF form's lazy 2-iteration
+    the driver already pays in spirit: the fold form's lazy 2-iteration
     chain re-executed per consumer until the caller persisted it, and the
     collect also truncates the repeated subtree lineage). The means
     reduction (VERDICT r16 #4) aggregates the kernel's per-batch
@@ -1432,7 +1425,7 @@ def pq_train(
     not corpus size. Partial sums accumulate in numpy (pairwise) rather
     than the JVM avg's sequential order; ``round_decimals`` absorbs the
     reordering exactly as it absorbs partition-order differences — pinned
-    bit-identical to the HOF form on real corpora and hash-graded by the
+    bit-identical to the fold form on real corpora and hash-graded by the
     DuckDB oracle on every PQ head. The returned frame is rebuilt from
     the final collected rows (exact doubles), so consumers read a 1-line
     LocalRelation instead of the whole training chain.
@@ -1463,9 +1456,9 @@ def pq_train(
             )
 
     # seeds: the k_codes LOWEST-id VALID vectors (bounded collect), dense
-    # codes 0..k-1 by id rank — identical to the rows the HOF form
+    # codes 0..k-1 by id rank — identical to the rows the fold form
     # broadcast-joins on any corpus where the lowest-id vectors are valid
-    # (null/short vectors would crash the numpy seed matrix; the HOF form
+    # (null/short vectors would crash the numpy seed matrix; the fold form
     # degrades to null codewords there — ADVICE r16 #2 picks the filter).
     # _sub_slice casts components to double; float32 widens exactly.
     cb = _seed_codebook(_lowest_ids(valid, id_col, k_codes).collect(), dim, m)
@@ -1582,92 +1575,6 @@ def _pq_assign_sum_kernel(subv: DataFrame, cb: dict) -> DataFrame:
     return subv.select("s", "sv").mapInPandas(_batches, out_schema)
 
 
-def pq_train_hof(
-    emb: DataFrame,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    m: int = 8,
-    k_codes: int = 16,
-    iters: int = 2,
-    round_decimals: int = 6,
-) -> DataFrame:
-    """Deterministic PQ codebook: per subspace s (the s-th ``dim//m``
-    consecutive components), Lloyd's k-means with MIN-SQUARED-L2
-    assignment (ties -> lowest code id; L2 is the standard PQ training
-    objective — it bounds the inner-product quantization error ADC
-    serving cares about). Init = the subvectors of the ``k_codes``
-    lowest-id vectors, with code ids remapped DENSE (0..k_codes-1 by
-    seed-id rank) so the ADC LUT keys ``s*PQ_KEY_STRIDE+code`` never
-    collide for any id distribution; cluster means rounded to ``round_decimals`` each
-    iteration so an independent engine reproduces every centroid float
-    exactly (the :func:`kmeans_centroids` discipline). Returns
-    ``(s, code, cw)``.
-
-    Scale: one exploded (corpus x m) frame per iteration for the means
-    (a k*m*d_sub-cell aggregate — tiny), assignment via one broadcast
-    codebook-array row folded inside the scan; at 100 TB train on a
-    ``.sample`` — the iteration loop is unchanged. This all-JVM form is
-    the independent reference implementation :func:`pq_train`'s numpy
-    kernel is pinned against.
-    """
-    subv = _explode_subvectors(emb, id_col, vec_col, m, dim // m)
-    # seeds = the k_codes LOWEST-id vectors' subvectors (the ivf_topk /
-    # kmeans_centroids convention — works for any id distribution, not
-    # just 0..n dense), REMAPPED to dense codes 0..k_codes-1 by seed-id
-    # rank: raw seed ids as codes would collide across subspaces in the
-    # ADC map keys (key = s*PQ_KEY_STRIDE + code) whenever a corpus's
-    # lowest ids reach PQ_KEY_STRIDE, silently corrupting top-k. The
-    # row_number window runs over exactly k_codes rows — a single tiny
-    # partition, not a corpus sort.
-    seed_w = Window.orderBy(F.col(id_col))
-    seed_ids = _lowest_ids(emb.select(id_col), id_col, k_codes).select(
-        id_col, (F.row_number().over(seed_w) - 1).cast("int").alias("code")
-    )
-    cents = subv.join(F.broadcast(seed_ids), id_col).select(
-        "s", "code", F.col("sv").alias("cw")
-    )
-    for _ in range(iters):
-        assigned = _pq_assign_subv(subv, cents)
-        comps = assigned.select(
-            "s", "code", F.posexplode(F.col("sv")).alias("pos", "x")
-        )
-        means = comps.groupBy("s", "code", "pos").agg(
-            F.round(F.avg("x"), round_decimals).alias("v")
-        )
-        cents = means.groupBy("s", "code").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "v"))),
-                lambda t: t["v"],
-            ).alias("cw")
-        )
-    return cents
-
-
-def _pq_assign_subv(subv: DataFrame, codebook: DataFrame) -> DataFrame:
-    """(id, s, sv) -> + ``code``: min-squared-L2 code within the row's own
-    subspace, via one broadcast codebook-array row (strictly-less keeps
-    the lowest code on exact ties because the array is (s, code)-sorted)."""
-    init = F.struct(
-        F.lit(float("inf")).alias("d"), F.lit(None).cast("int").alias("code")
-    )
-
-    def chooser(acc, c):
-        cand = F.struct(
-            _sq_l2(F.col("sv"), c["cw"]).alias("d"), c["code"].alias("code")
-        )
-        return F.when(cand["d"] < acc["d"], cand).otherwise(acc)
-
-    return subv.crossJoin(F.broadcast(_cb_array(codebook))).select(
-        *[c for c in subv.columns],
-        F.aggregate(
-            F.filter(F.col("_cb"), lambda c: c["s"] == F.col("s")),
-            init,
-            chooser,
-        )["code"].alias("code"),
-    )
-
-
 def pq_encode(
     emb: DataFrame,
     codebook: DataFrame,
@@ -1679,12 +1586,16 @@ def pq_encode(
 ) -> DataFrame:
     """Encode each vector as its m nearest-codeword ids —
     ``(id_col, codes array<int>, *extra_cols)`` with position = subspace.
-    The Arrow-kernel form of :func:`pq_encode_hof` (output pinned
-    identical by test_pq_encode_kernel_equals_hof): still ENTIRELY
-    MAP-SIDE and zero-shuffle, but the m interpreted argmin folds per row
-    run as ONE numpy pass per Arrow batch (:func:`_argmin_codes` —
-    bit-identical distances and tie-breaks, guide §4.2) against the
-    collected codebook (bounded m x k_codes rows). A null or
+    Output pinned identical to the interpreted JVM argmin folds in
+    tests/reference_forms.py by test_pq_encode_kernel_equals_hof. ENTIRELY
+    MAP-SIDE and zero-shuffle: the ingest projection a 100-TB system runs
+    once at write time and stores as the m-byte serving copy
+    (:func:`build_ivf_pq_index` passes ``centroid_id`` through
+    ``extra_cols`` so assignment + encode stay ONE scan). The m argmin
+    searches per row run as ONE numpy pass per Arrow batch
+    (:func:`_argmin_codes` — bit-identical distances and tie-breaks,
+    guide §4.2) against the collected codebook (bounded m x k_codes
+    rows). A null or
     shorter-than-``dim`` vector encodes to an all-null codes array (the
     fold's null-propagation contract). Only (id, vec, extra) columns
     cross the Python boundary."""
@@ -1724,50 +1635,6 @@ def pq_encode(
 
     return emb.select(id_col, vec_col, *extra_cols).mapInPandas(
         _batches, out_schema
-    )
-
-
-def pq_encode_hof(
-    emb: DataFrame,
-    codebook: DataFrame,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    m: int = 8,
-    extra_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Encode each vector as its m nearest-codeword ids —
-    ``(id_col, codes array<int>)`` with position = subspace. ENTIRELY
-    MAP-SIDE: m argmin folds over one broadcast codebook-array row inside
-    the corpus scan, no explode, no shuffle — this is the ingest
-    projection a 100-TB system runs once at write time and stores as the
-    m-byte serving copy (alongside ``centroid_id`` when composed with
-    IVF — :func:`build_ivf_pq_index` passes it through ``extra_cols`` so
-    assignment + encode stay ONE scan). This all-JVM form is the
-    independent reference implementation :func:`pq_encode`'s numpy
-    kernel is pinned against."""
-    d_sub = dim // m
-    init = F.struct(
-        F.lit(float("inf")).alias("d"), F.lit(None).cast("int").alias("code")
-    )
-
-    def code_for(s: int):
-        sv = _sub_slice(vec_col, s, d_sub)
-
-        def chooser(acc, c):
-            cand = F.struct(
-                _sq_l2(sv, c["cw"]).alias("d"), c["code"].alias("code")
-            )
-            return F.when(cand["d"] < acc["d"], cand).otherwise(acc)
-
-        return F.aggregate(
-            F.filter(F.col("_cb"), lambda c: c["s"] == F.lit(s)), init, chooser
-        )["code"]
-
-    return emb.crossJoin(F.broadcast(_cb_array(codebook))).select(
-        F.col(id_col),
-        F.array(*[code_for(s) for s in range(m)]).alias("codes"),
-        *[F.col(c) for c in extra_cols],
     )
 
 
@@ -1858,7 +1725,7 @@ def _adc_dot(a, b) -> Column:
     """``floor(dot(a, b) * 1e9 + 0.5)`` as a bigint — the ADC fixed point of
     every LUT entry and residual ``qc`` term. The dot is a sequential fold,
     ((0+t1)+t2)+... exactly, matching DuckDB's list_reduce term for term
-    (the :func:`_sq_l2` discipline)."""
+    (0+t1 == t1 in IEEE)."""
     dot = F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
     )

@@ -847,9 +847,7 @@ def gopher_quality_flags(df: DataFrame, id_col: str, text_col: str) -> DataFrame
 
 def _gopher_quality_base_cols(text_col: str) -> list[Column]:
     """The four per-row base statistics of the Gopher quality gate — one
-    fold each over the row's own token array, shared by
-    :func:`gopher_quality_flags` and the fused
-    :func:`gopher_combined_gate` scan."""
+    fold each over the row's own token array."""
     t = tokens(F.coalesce(F.col(text_col), F.lit("")))
     total_chars = F.aggregate(
         F.transform(t, lambda w: F.length(w)),
@@ -1180,8 +1178,6 @@ def ngram_logprob_scores(
     id_col: str,
     text_col: str,
     order: int = 5,
-    prune_singletons: bool = True,
-    suffix_partitioning: bool = True,
 ) -> DataFrame:
     """Mean per-token surprisal under a corpus-fit interpolated
     ``order``-gram LM — the generalization the trigram gate's double-BOS
@@ -1201,11 +1197,12 @@ def ngram_logprob_scores(
     The 4/5-gram heads live here; the 2/3 heads keep the bespoke shape by
     measurement (SCALE.md, n-gram order sweep).
 
-    Round-9 structure (both knobs measured in SCALE.md, "singleton
-    pruning + suffix-aligned cascade"):
+    Two structural choices are fixed (both measured in SCALE.md,
+    "singleton pruning + suffix-aligned cascade"; the A/B forms were
+    output-identical):
 
-    ``suffix_partitioning`` — the r8 breakdown probe showed the rollup
-    CASCADE, not the corpus exchange, dominates the counter (27 of
+    Suffix-aligned partitioning — the r8 breakdown probe showed the
+    rollup CASCADE, not the corpus exchange, dominates the counter (27 of
     40.36 MB at order 5 / sf0.1): every s/x rollup re-exchanged a
     near-table-sized frame on its own key set. HashPartitioning on a
     SUBSET of the grouping keys satisfies ClusteredDistribution, so
@@ -1213,16 +1210,13 @@ def ngram_logprob_scores(
     makes every suffix rollup down to s2 exchange-free, and keying x_N's
     exchange on (g_{N-3+1}..g_{N-1}) makes the x-chain (x_k rolls up
     from x_{k+1} by summing out ITS first column — same identity as the
-    s-chain) free down to x3. Cost: the corpus exchange loses map-side
-    combine (raw positions instead of distinct grams — +9% rows on this
-    corpus; on dup-heavy corpora where combine compresses well, set
-    False) and the partitioning key is a token bigram, so corpora with a
-    pathologically hot trailing bigram inherit that skew in the cascade
-    stage (AQE splits join skew, not aggregate skew — the escape hatch
-    is ``suffix_partitioning=False``, which restores per-rollup
-    exchanges with full-key balance).
+    s-chain) free down to x3. The price: the corpus exchange loses
+    map-side combine (raw positions instead of distinct grams — +9% rows
+    on this corpus), and the partitioning key is a token bigram, so a
+    corpus with a pathologically hot trailing bigram inherits that skew
+    in the cascade stage (AQE splits join skew, not aggregate skew).
 
-    ``prune_singletons`` — 94% of distinct 5-grams on diverse text are
+    Singleton pruning — 94% of distinct 5-grams on diverse text are
     singletons (c_N = 1), and a singleton gram occurs at EXACTLY ONE
     corpus position in exactly one doc. Carrying min(id) through the
     corpus aggregation therefore lets the singleton rows' per-doc
@@ -1232,13 +1226,13 @@ def ngram_logprob_scores(
     it stays broadcastable far further up the scale curve, and when it
     finally does shuffle, Catalyst's runtime bloom filter (enabled in
     session.py) has a small, selective build side to prune the stream
-    scan with. Output is hash-identical BY CONSTRUCTION: the score
-    build is one chain over ALL grams (identical joins, identical
-    shared micro-nat SQL on identical bigint inputs), split only
-    AFTERWARD into disjoint c_N=1 / c_N>=2 subsets whose per-doc
-    partial sums (exact integers) recombine under an order-free sum —
-    asserted hash-identical against the unpruned shape in
-    tests/test_operators.py and by the unchanged DuckDB oracle.
+    scan with. Output is hash-identical to the unpruned shape BY
+    CONSTRUCTION: the score build is one chain over ALL grams (identical
+    joins, identical shared micro-nat SQL on identical bigint inputs),
+    split only AFTERWARD into disjoint c_N=1 / c_N>=2 subsets whose
+    per-doc partial sums (exact integers) recombine under an order-free
+    sum — and graded by the DuckDB oracle, which scores every position
+    directly.
 
     The cost that grows with order is the TABLE, not the pass count
     (measured curve and singleton shares in SCALE.md). Same output
@@ -1250,35 +1244,33 @@ def ngram_logprob_scores(
         raise ValueError(f"order must be one of {sorted(NGRAM_WEIGHTS)}")
     gcols = [f"g{i}" for i in range(1, order + 1)]
     stream = _ngram_position_stream_kernel(df, id_col, text_col, order)
-    # ONE corpus exchange. With suffix_partitioning it is keyed on the
-    # deepest suffix every s-rollup shares (last two tokens) and the
-    # persisted exchanged stream ALSO serves as the probe side of the
-    # final score join; without, it is the classic full-key groupBy with
-    # map-side combine. Storage cost (ADVICE r9 #4): this persist holds
-    # the full POSITION stream (positions x order token columns) at
-    # MEMORY_AND_DISK — a corpus-sized materialization the unaligned
-    # shape avoids by recomputing the stream per consumer. At 100 TB
-    # that is a deliberate disk-for-shuffle trade: the persist spills to
-    # local disk (sequential, node-local) to delete a full cascade of
-    # cluster-wide exchanges; executors sized for the shuffle the old
-    # shape did would hold the same bytes anyway, just on the wire.
+    # ONE corpus exchange, keyed on the deepest suffix every s-rollup
+    # shares (last two tokens); the persisted exchanged stream ALSO serves
+    # as the probe side of the final score join. Storage cost (ADVICE r9
+    # #4): this persist holds the full POSITION stream (positions x order
+    # token columns) at MEMORY_AND_DISK — a corpus-sized materialization.
+    # At 100 TB that is a deliberate disk-for-shuffle trade: the persist
+    # spills to local disk (sequential, node-local) to delete a full
+    # cascade of cluster-wide exchanges; executors sized for the shuffle
+    # an unaligned shape would do hold the same bytes anyway, just on the
+    # wire.
     s_part = gcols[max(0, order - 2) :]
-    if suffix_partitioning:
-        stream = scoped_persist(stream.repartition(*s_part))
+    stream = scoped_persist(stream.repartition(*s_part))
     # s[order] carries min(id): for a singleton gram (c_N = 1) this IS the
-    # one doc holding its one occurrence — the column the pruned shape's
-    # table-side per-doc aggregation keys on. min() is map-side combinable
-    # so the extra column never changes the exchange structure.
+    # one doc holding its one occurrence — the column the table-side
+    # per-doc aggregation keys on. min() is map-side combinable so the
+    # extra column never changes the exchange structure.
     s: dict[int, DataFrame] = {}
     # lazy persist suffices: a suspected cache race between the parallel
     # broadcast job and the rollup stages was A/B-measured at order 5 and
     # does not exist — shuffle is byte-identical with and without an eager
     # materialize (the apparent win came from a flawed probe whose pruned
     # output columns dropped the context tables; SCALE.md, order sweep)
-    aggs = [F.count("*").alias(f"c_{order}")]
-    if prune_singletons:
-        aggs.append(F.min(id_col).alias("_one_doc"))
-    s[order] = scoped_persist(stream.groupBy(*gcols).agg(*aggs))
+    s[order] = scoped_persist(
+        stream.groupBy(*gcols).agg(
+            F.count("*").alias(f"c_{order}"), F.min(id_col).alias("_one_doc")
+        )
+    )
     for k in range(order - 1, 0, -1):
         keys = gcols[order - k :]
         s[k] = scoped_persist(
@@ -1287,13 +1279,13 @@ def ngram_logprob_scores(
     # prefix-context counts: x_k sums c_k over the suffix's LAST token, so
     # x[order] aggregates s[order] and — because summing out x_{k+1}'s
     # FIRST column yields exactly x_k — every lower x rolls up from its
-    # parent x. With suffix_partitioning, x[order]'s one exchange is keyed
-    # on the two tokens every x-rollup's keys share (ending at g_{N-1}),
-    # making the x-chain exchange-free below it.
+    # parent x. x[order]'s one exchange is keyed on the two tokens every
+    # x-rollup's keys share (ending at g_{N-1}), making the x-chain
+    # exchange-free below it.
     x: dict[int, DataFrame] = {}
     xN = s[order].select(*gcols[:-1], f"c_{order}")
     x_part = gcols[max(0, order - 3) : order - 1]
-    if suffix_partitioning and x_part:
+    if x_part:
         xN = xN.repartition(*x_part)
     x[order] = scoped_persist(
         xN.groupBy(*gcols[:-1]).agg(F.sum(f"c_{order}").alias(f"x_{order}"))
@@ -1305,62 +1297,47 @@ def ngram_logprob_scores(
         )
     total = s[1].agg(F.sum("c_1").alias("total_tok"))
     # score each DISTINCT order-gram once, in ONE chain over ALL grams
-    # (identical inputs whether pruning or not — the hash-identity proof
-    # rests on this): table-vs-table interpolation joins, then the shared
-    # micro-nat expression.
+    # (the hash-identity of the singleton split rests on this):
+    # table-vs-table interpolation joins, then the shared micro-nat
+    # expression.
     score_table = s[order]
     for k in range(order, 1, -1):
         score_table = score_table.join(x[k], gcols[order - k : order - 1])
     for k in range(order - 1, 0, -1):
         score_table = score_table.join(s[k], gcols[order - k :])
-    keep = [*gcols, f"c_{order}", "_one_doc", "micro"] if prune_singletons else [
-        *gcols,
-        "micro",
-    ]
-    score_table = (
+    score_table = scoped_persist(
         score_table.crossJoin(F.broadcast(total))
         .withColumn("micro", F.expr(ngram_logprob_micro_sql(order)))
-        .select(*keep)
+        .select(*gcols, f"c_{order}", "_one_doc", "micro")
     )
-    if prune_singletons:
-        score_table = scoped_persist(score_table)
-        # singleton tail: per-doc contribution aggregated table-side —
-        # these positions never join the stream
-        sing = (
-            score_table.filter(F.col(f"c_{order}") == 1)
-            .groupBy(F.col("_one_doc").alias(id_col))
-            .agg(
-                F.count("*").alias("_n"),
-                F.sum("micro").alias("_m"),
-            )
+    # singleton tail: per-doc contribution aggregated table-side — these
+    # positions never join the stream
+    sing = (
+        score_table.filter(F.col(f"c_{order}") == 1)
+        .groupBy(F.col("_one_doc").alias(id_col))
+        .agg(
+            F.count("*").alias("_n"),
+            F.sum("micro").alias("_m"),
         )
-        pruned = score_table.filter(F.col(f"c_{order}") >= 2).select(*gcols, "micro")
-        # the string key keeps this join compatible with the stream's
-        # trailing-bigram partitioning (HashPartitioning on a subset of the
-        # join keys); a 128-bit fingerprint key was measured and rejected
-        # (SCALE.md, "fp128 stream-score join key A/B")
-        nonsing = (
-            stream.join(pruned, gcols)
-            .groupBy(id_col)
-            .agg(F.count("*").alias("_n"), F.sum("micro").alias("_m"))
+    )
+    pruned = score_table.filter(F.col(f"c_{order}") >= 2).select(*gcols, "micro")
+    # the string key keeps this join compatible with the stream's
+    # trailing-bigram partitioning (HashPartitioning on a subset of the
+    # join keys); a 128-bit fingerprint key was measured and rejected
+    # (SCALE.md, "fp128 stream-score join key A/B")
+    nonsing = (
+        stream.join(pruned, gcols)
+        .groupBy(id_col)
+        .agg(F.count("*").alias("_n"), F.sum("micro").alias("_m"))
+    )
+    scored = (
+        nonsing.unionByName(sing)
+        .groupBy(id_col)
+        .agg(
+            F.sum("_n").alias("n_tokens"),
+            F.sum("_m").alias("surprisal_micro_sum"),
         )
-        scored = (
-            nonsing.unionByName(sing)
-            .groupBy(id_col)
-            .agg(
-                F.sum("_n").alias("n_tokens"),
-                F.sum("_m").alias("surprisal_micro_sum"),
-            )
-        )
-    else:
-        scored = (
-            stream.join(score_table.select(*gcols, "micro"), gcols)
-            .groupBy(id_col)
-            .agg(
-                F.count("*").alias("n_tokens"),
-                F.sum("micro").alias("surprisal_micro_sum"),
-            )
-        )
+    )
     return scored.select(
         id_col,
         F.col("n_tokens").cast("bigint").alias("n_tokens"),
@@ -1386,96 +1363,6 @@ GOPHER_REP_MAX_DUP_NGRAM_CHAR_PPM = {
 }
 
 
-def _sum_len(arr: Column) -> Column:
-    """bigint sum of string lengths over an array column (one fold)."""
-    return F.aggregate(
-        arr, F.lit(0).cast("bigint"), lambda acc, x: acc + F.length(x)
-    )
-
-
-def _top_gram_num(grams: Column) -> Column:
-    """``count(most frequent gram) * length(that gram)`` as bigint.
-
-    Sorted-runs fold: after ``array_sort`` equal grams are adjacent, so
-    one O(G) pass tracks the current run and keeps the best strictly-
-    greater run — count ties therefore resolve to the lexicographically
-    SMALLEST gram (its run completes first in sorted order), which the
-    oracle mirrors with ``ORDER BY c DESC, g``. Empty input -> 0.
-    O(G log G) per row with zero shuffle, vs the exploded
-    groupBy(doc, gram) alternative that exchanges the whole gram table.
-
-    A top gram occurring ONCE is not repetition — its numerator is 0 (a
-    short document would otherwise fail the char-share bound on a gram
-    that never repeats; Gopher's rule targets repeated boilerplate).
-    """
-    init = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        F.lit(0).cast("bigint").alias("run"),
-        F.lit(0).cast("bigint").alias("bc"),
-        F.lit(0).cast("bigint").alias("bl"),
-    )
-
-    def step(acc, x):
-        # x == NULL-prev is NULL -> otherwise(1): a fresh run
-        run2 = F.when(x == acc["prev"], acc["run"] + 1).otherwise(
-            F.lit(1).cast("bigint")
-        )
-        better = run2 > acc["bc"]
-        return F.struct(
-            x.alias("prev"),
-            run2.alias("run"),
-            F.when(better, run2).otherwise(acc["bc"]).alias("bc"),
-            F.when(better, F.length(x).cast("bigint"))
-            .otherwise(acc["bl"])
-            .alias("bl"),
-        )
-
-    return F.aggregate(
-        F.array_sort(grams),
-        init,
-        step,
-        lambda acc: F.when(acc["bc"] >= 2, acc["bc"] * acc["bl"]).otherwise(
-            F.lit(0).cast("bigint")
-        ),
-    )
-
-
-def _dup_gram_chars(grams: Column) -> Column:
-    """Chars in ALL occurrences of grams that occur more than once
-    (``sum over grams with count>1 of count*length``), as one sorted-runs
-    fold: when a run reaches its 2nd element both occurrences enter the
-    sum, each further element adds itself."""
-    init = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        F.lit(0).cast("bigint").alias("run"),
-        F.lit(0).cast("bigint").alias("dc"),
-    )
-
-    def step(acc, x):
-        eq = x == acc["prev"]
-        run2 = F.when(eq, acc["run"] + 1).otherwise(F.lit(1).cast("bigint"))
-        add = (
-            F.when(eq & (acc["run"] == 1), F.length(x).cast("bigint") * 2)
-            .when(eq, F.length(x).cast("bigint"))
-            .otherwise(F.lit(0).cast("bigint"))
-        )
-        return F.struct(
-            x.alias("prev"), run2.alias("run"), (acc["dc"] + add).alias("dc")
-        )
-
-    return F.aggregate(F.array_sort(grams), init, step, lambda acc: acc["dc"])
-
-
-def _ppm_expr(num: str, den: str) -> Column:
-    """Truncating fixed-point ppm over exact non-negative bigints —
-    ``div`` truncates toward zero in Spark exactly as ``//`` does in
-    DuckDB, so the fraction grades bit-exactly on both engines."""
-    return F.expr(
-        f"CAST(CASE WHEN {den} > 0 THEN div(1000000 * {num}, {den}) "
-        f"ELSE 0 END AS BIGINT)"
-    )
-
-
 def gopher_repetition_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Gopher repetition rules (Rae et al. 2021 Table A1): duplicate-line
     and duplicate-paragraph fractions (row and character weighted),
@@ -1498,10 +1385,11 @@ def gopher_repetition_stats(df: DataFrame, id_col: str, text_col: str) -> DataFr
       joined string length (Gopher leaves tokenizer/char accounting
       unspecified — this choice is exact-integer on any engine).
     * ties for "most frequent n-gram" resolve to the lexicographically
-      smallest gram so the numerator is engine-independent.
+      smallest gram so the numerator is engine-independent; a top gram
+      occurring ONCE is not repetition (numerator 0).
 
     Entirely MAP-SIDE like :func:`gopher_quality_flags` — every metric is
-    an ``array_sort`` + one fold over per-row arrays (O(G log G) per doc,
+    computed per row by one Arrow kernel pass (:func:`_gate_row_stats`,
     zero exchanges); at 100 TB the gate runs at parquet scan speed, and no
     corpus-wide gram table is ever shuffled. All fractions are truncating
     integer ppm, so the grade is bit-exact on any engine.
@@ -1511,8 +1399,8 @@ def gopher_repetition_stats(df: DataFrame, id_col: str, text_col: str) -> DataFr
     top-2/3/4-gram chars, 128..4096 dup-5..10-gram chars.
     """
     # Arrow kernel (one native pass per batch; identical integers) — the
-    # JVM fold-chain reference lives in :func:`gopher_repetition_stats_hof`
-    # and the equality is pinned by test_gopher_repetition_arrow_equals_hof.
+    # JVM fold-chain reference lives in tests/reference_forms.py and the
+    # equality is pinned by test_gopher_repetition_arrow_equals_hof.
     import pandas as pd
 
     from pyspark.sql.types import BooleanType, LongType, StructField, StructType
@@ -1557,141 +1445,17 @@ def gopher_repetition_stats(df: DataFrame, id_col: str, text_col: str) -> DataFr
     return df.select(id_col, text_col).mapInPandas(_batches, out_schema)
 
 
-def gopher_repetition_stats_hof(
-    df: DataFrame, id_col: str, text_col: str
-) -> DataFrame:
-    """The original all-JVM repetition chain — the independent reference
-    implementation :func:`gopher_repetition_stats`'s Arrow kernel is
-    pinned against."""
-    derived = _gopher_rep_derived(df, id_col, text_col)
-    return derived.withColumn(
-        "rep_flags", _gopher_rep_flags_expr().cast("bigint")
-    ).withColumn("keep", F.col("rep_flags") == 0)
-
-
-def _gopher_rep_derived(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    extra_cols: tuple[Column, ...] = (),
-    extra_names: tuple[str, ...] = (),
-) -> DataFrame:
-    """The repetition gate's arrays -> stats -> ppm chain, shared by
-    :func:`gopher_repetition_stats` and :func:`gopher_combined_gate`.
-    ``extra_cols`` are additional per-row projections computed INSIDE the
-    same cached scan (the fused gate threads the quality base stats
-    through here — that is what makes the combined gate one corpus scan);
-    ``extra_names`` are their aliases, carried through each stage."""
-    raw = F.coalesce(F.col(text_col), F.lit(""))
-    norm = F.trim(F.regexp_replace(raw, r"\s+", " "))
-    # materialize the segment/token ARRAYS once: the metric projection
-    # below references lines 4x, paragraphs 4x and the token array 9x —
-    # without this boundary alias-substitution re-splits and re-normalizes
-    # the text per reference (the HOF re-inline trap; see
-    # simhash_signatures). One cache of three small arrays per row.
-    arrays = scoped_persist(
-        df.select(
-            F.col(id_col),
-            F.filter(F.split(raw, "\n"), lambda x: x != "").alias("_lines"),
-            F.filter(F.split(raw, "\n\n"), lambda x: x != "").alias("_paras"),
-            F.split(norm, " ").alias("_wt"),
-            F.length(norm).cast("bigint").alias("den_chars"),
-            *extra_cols,
-        )
-    )
-
-    def grams(n: int):
-        # token_shingles semantics inlined over the MATERIALIZED token
-        # array (one slice + join per gram; no re-split per metric)
-        wt = F.col("_wt")
-        upper = F.greatest(F.size(wt) - (n - 1), F.lit(0))
-        idx = F.when(upper > 0, F.sequence(F.lit(1), upper)).otherwise(
-            F.array().cast("array<int>")
-        )
-        return F.transform(idx, lambda i: F.array_join(F.slice(wt, i, n), " "))
-
-    lines, paras = F.col("_lines"), F.col("_paras")
-    stats = arrays.select(
-        F.col(id_col),
-        F.size(lines).cast("bigint").alias("n_lines"),
-        F.size(F.array_distinct(lines)).cast("bigint").alias("nd_lines"),
-        _sum_len(lines).alias("lc_tot"),
-        _sum_len(F.array_distinct(lines)).alias("lc_dist"),
-        F.size(paras).cast("bigint").alias("n_paras"),
-        F.size(F.array_distinct(paras)).cast("bigint").alias("nd_paras"),
-        _sum_len(paras).alias("pc_tot"),
-        _sum_len(F.array_distinct(paras)).alias("pc_dist"),
-        F.col("den_chars"),
-        *[
-            _top_gram_num(grams(n)).alias(f"top{n}_num")
-            for n in GOPHER_REP_MAX_TOP_NGRAM_CHAR_PPM
-        ],
-        *[
-            _dup_gram_chars(grams(n)).alias(f"dup{n}_chars")
-            for n in GOPHER_REP_MAX_DUP_NGRAM_CHAR_PPM
-        ],
-        *[F.col(c) for c in extra_names],
-    )
-    # second cache boundary: without it the chained selects below collapse
-    # into one projection and alias-substitution re-evaluates every fold
-    # ~6x (ppm num+den, the flag term, the keep term). ~15 bigints per doc.
-    stats = scoped_persist(stats)
-    derived = stats.select(
-        F.col(id_col),
-        "n_lines",
-        "n_paras",
-        _ppm_expr("(n_lines - nd_lines)", "n_lines").alias("dup_line_frac_ppm"),
-        _ppm_expr("(lc_tot - lc_dist)", "lc_tot").alias("dup_line_char_frac_ppm"),
-        _ppm_expr("(n_paras - nd_paras)", "n_paras").alias("dup_para_frac_ppm"),
-        _ppm_expr("(pc_tot - pc_dist)", "pc_tot").alias("dup_para_char_frac_ppm"),
-        *[
-            _ppm_expr(f"top{n}_num", "den_chars").alias(f"top{n}_char_frac_ppm")
-            for n in GOPHER_REP_MAX_TOP_NGRAM_CHAR_PPM
-        ],
-        *[
-            _ppm_expr(f"dup{n}_chars", "den_chars").alias(f"dup{n}_char_frac_ppm")
-            for n in GOPHER_REP_MAX_DUP_NGRAM_CHAR_PPM
-        ],
-        *[F.col(c) for c in extra_names],
-    )
-    return derived
-
-
-def _gopher_rep_flags_expr() -> Column:
-    """Repetition flag bitmask over the named ppm columns of
-    :func:`_gopher_rep_derived`'s output."""
-    flags = (
-        F.when(F.col("dup_line_frac_ppm") > GOPHER_REP_MAX_DUP_LINE_PPM, 1)
-        .otherwise(0)
-        + F.when(
-            F.col("dup_line_char_frac_ppm") > GOPHER_REP_MAX_DUP_LINE_CHAR_PPM, 2
-        ).otherwise(0)
-        + F.when(F.col("dup_para_frac_ppm") > GOPHER_REP_MAX_DUP_PARA_PPM, 4)
-        .otherwise(0)
-        + F.when(
-            F.col("dup_para_char_frac_ppm") > GOPHER_REP_MAX_DUP_PARA_CHAR_PPM, 8
-        ).otherwise(0)
-    )
-    bit = 16
-    for n, thr in GOPHER_REP_MAX_TOP_NGRAM_CHAR_PPM.items():
-        flags = flags + F.when(F.col(f"top{n}_char_frac_ppm") > thr, bit).otherwise(0)
-        bit *= 2
-    for n, thr in GOPHER_REP_MAX_DUP_NGRAM_CHAR_PPM.items():
-        flags = flags + F.when(F.col(f"dup{n}_char_frac_ppm") > thr, bit).otherwise(0)
-        bit *= 2
-    return flags
-
-
 def _gate_row_stats(raw: str, _stop=None, _alpha=None) -> tuple:
     """(gopher_flags, rep_flags, n_lines, n_paras, [13 rep ppms in flag-bit
     order]) of one document — the exact integer semantics of
     :func:`_gopher_quality_flags_expr` over
-    :func:`_gopher_quality_base_cols` and :func:`_gopher_rep_flags_expr`
-    over :func:`_gopher_rep_derived`, computed in one native pass.
+    :func:`_gopher_quality_base_cols` and of the repetition rules' flag
+    bitmask, computed in one native pass.
 
     Every statistic is an exact integer (counts, code-point lengths,
     truncating ppm divisions), so this agrees bit-for-bit with the JVM
-    fold chain (pinned by test_gopher_combined_gate_arrow_equals_hof):
+    fold chain in tests/reference_forms.py (pinned by
+    test_gopher_combined_gate_arrow_equals_hof):
 
     * quality tokens = ``raw.split(" ")`` (the ``tokens()`` convention:
       literal single-space split, trailing empties kept — identical to
@@ -1823,25 +1587,23 @@ def gopher_combined_gate(
     df: DataFrame, id_col: str, text_col: str, carry: tuple[str, ...] = ()
 ) -> DataFrame:
     """The Gopher quality gate AND the Gopher repetition gate fused into
-    ONE corpus scan: the quality base statistics (four folds over the
-    row's token array) are threaded through the repetition chain's cached
-    arrays projection, so the combined keep decision costs one read of
-    the text instead of two scans + a doc_id keep-set join — at 100 TB
-    the text scans dominate the gate stage, so this halves it. Returns
-    ``(id_col, gopher_flags, rep_flags, keep, *carry)`` with keep = both
-    bitmasks zero; every flag formula is the SAME shared expression the
-    standalone graded operators use (:func:`_gopher_quality_flags_expr` /
-    :func:`_gopher_rep_flags_expr`), so keep here ==
+    ONE corpus scan: both rule families' statistics come out of one
+    per-row pass (:func:`_gate_row_stats`), so the combined keep decision
+    costs one read of the text instead of two scans + a doc_id keep-set
+    join — at 100 TB the text scans dominate the gate stage, so this
+    halves it. Returns ``(id_col, gopher_flags, rep_flags, keep,
+    *carry)`` with keep = both bitmasks zero; the per-row stats are the
+    same ones :func:`gopher_repetition_stats` computes and the same
+    integers :func:`gopher_quality_flags` derives, so keep here ==
     ``gopher_quality_flags(...).keep AND gopher_repetition_stats(...).keep``
     row for row (pinned by test).
 
     ``carry`` names input columns to pass through (e.g. the text itself):
     a consumer that needs gated ROWS, not just gated ids, carries them
     here and skips the join back onto the corpus entirely — the id-keyed
-    exchange that join costs at scale never happens. Carried columns ride
-    BOTH internal cache boundaries (DataFrame.persist is
-    MEMORY_AND_DISK, so an executor under pressure spills rather than
-    OOMs) — carry what downstream actually needs, not the whole row."""
+    exchange that join costs at scale never happens. Carried columns
+    cross the Python boundary — carry what downstream actually needs,
+    not the whole row."""
     reserved = {
         "n_words", "total_word_chars", "alpha_words", "stop_hits",
         "mean_word_len_centi", "alpha_word_ppm", "gopher_flags",
@@ -1861,10 +1623,10 @@ def gopher_combined_gate(
     # are exact integers over per-row token/segment arrays, so the whole
     # gate is a map-side kernel — guide-§4.2 shape: Spark does the scan and
     # distribution, the per-batch loop runs native (numpy window-unique for
-    # the 9 gram metrics, C-level splits/sets for the rest). Replaces the
+    # the 9 gram metrics, C-level splits/sets for the rest). The
     # interpreted JVM HOF fold chain (9 array_sorts + struct-accumulator
-    # aggregates per row — measured 2.6x slower at sf0.1) with identical
-    # output, pinned bit-for-bit by
+    # aggregates per row — measured 2.6x slower at sf0.1) survives as the
+    # test reference, pinned bit-for-bit by
     # test_gopher_combined_gate_arrow_equals_hof. Only the columns the
     # consumer asked for cross the Python boundary.
     import pandas as pd
@@ -1903,42 +1665,3 @@ def gopher_combined_gate(
             yield out
 
     return df.select(*in_cols).mapInPandas(_gate_batches, out_schema)
-
-
-def gopher_combined_gate_hof(
-    df: DataFrame, id_col: str, text_col: str, carry: tuple[str, ...] = ()
-) -> DataFrame:
-    """The original all-JVM fused gate (HOF fold chain) — kept as the
-    independent reference implementation the Arrow kernel is pinned
-    against (test_gopher_combined_gate_arrow_equals_hof) and as the
-    fallback for environments without Arrow workers."""
-    derived = _gopher_rep_derived(
-        df,
-        id_col,
-        text_col,
-        extra_cols=tuple(_gopher_quality_base_cols(text_col))
-        + tuple(F.col(c) for c in carry),
-        extra_names=(
-            "n_words",
-            "total_word_chars",
-            "alpha_words",
-            "stop_hits",
-            *carry,
-        ),
-    )
-    return (
-        derived.withColumn(
-            "mean_word_len_centi",
-            F.expr("div(100 * total_word_chars, n_words)").cast("bigint"),
-        )
-        .withColumn(
-            "alpha_word_ppm",
-            F.expr("div(1000000 * alpha_words, n_words)").cast("bigint"),
-        )
-        .withColumn("gopher_flags", _gopher_quality_flags_expr().cast("bigint"))
-        .withColumn("rep_flags", _gopher_rep_flags_expr().cast("bigint"))
-        .withColumn(
-            "keep", (F.col("gopher_flags") == 0) & (F.col("rep_flags") == 0)
-        )
-        .select(id_col, "gopher_flags", "rep_flags", "keep", *carry)
-    )

@@ -203,7 +203,7 @@ simsigs AS (SELECT doc_id, {terms} AS simhash FROM sums)
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = fan_out(table(spark, sf_dir, "documents"))
-    return D.simhash_pairs_exhaustive(docs, "doc_id", "text", max_hamming=2).select(
+    return D.simhash_pairs(docs, "doc_id", "text", max_hamming=2).select(
         "d1", "d2", F.col("hamming").cast("int").alias("hamming")
     )
 

@@ -1585,7 +1585,7 @@ def _gopher_repetition_oracle_sql(constructed: bool = True) -> str:
     """Independent relational implementation of the Gopher repetition
     rules over the SAME constructed multi-line corpus the Spark head
     builds: unnest + GROUP BY per (doc, segment/gram) instead of the
-    operator's sorted-runs folds — a genuinely different algorithm
+    operator's per-row Arrow kernel — a genuinely different algorithm
     agreeing on every fixed-point fraction is the strongest form of the
     grade.
 
@@ -1792,7 +1792,7 @@ def documents_gopher_repetition_flags(spark: SparkSession, sf_dir: str) -> DataF
     duplicate-line / duplicate-paragraph fractions (row- and char-
     weighted), top-{2,3,4}-gram char share, duplicate-{5..10}-gram char
     share, flag bitmask + keep (operators/text.py:
-    gopher_repetition_stats — sorted-runs folds, zero exchanges; the
+    gopher_repetition_stats — one Arrow kernel pass, zero exchanges; the
     oracle recomputes everything relationally via unnest + GROUP BY).
 
     The corpus's documents are single-line, so the head grades the line/

@@ -20,6 +20,25 @@ def _cpus() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
 
+# Engine defaults that are settable at runtime: :func:`get_spark` builds
+# them into a new session and :func:`apply_runtime_conf` sets them on one
+# created elsewhere (an external harness).
+_RUNTIME_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # Let AQE convert shuffle joins to broadcast from RUNTIME stats up to
+    # 64MB: small-SF intermediates (e.g. the shingle table) broadcast;
+    # at 100 TB the same plan keeps sort-merge — stats decide, not code.
+    "spark.sql.autoBroadcastJoinThreshold": "64MB",
+    # Catalyst's runtime bloom filter: inject a bloom of a selective
+    # build side into the probe scan of large shuffle joins (the
+    # optimizer-internal cousin of operators/sketch.py's explicit form)
+    "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
+    "spark.sql.session.timeZone": "UTC",
+}
+
+
 def get_spark(
     app_name: str = "distributed-api-etl-spark",
     shuffle_partitions: int | None = None,
@@ -36,21 +55,12 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]"))
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-        # Catalyst's runtime bloom filter: inject a bloom of a selective
-        # build side into the probe scan of large shuffle joins (the
-        # optimizer-internal cousin of operators/sketch.py's explicit form)
-        .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**_RUNTIME_CONF, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
 
@@ -132,15 +142,7 @@ def apply_runtime_conf(spark: SparkSession) -> SparkSession:
     to us and we cannot control JVM-launch configs.
     """
     for k, v in {
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        # Let AQE convert shuffle joins to broadcast from RUNTIME stats up to
-        # 64MB: small-SF intermediates (e.g. the shingle table) broadcast;
-        # at 100 TB the same plan keeps sort-merge — stats decide, not code.
-        "spark.sql.autoBroadcastJoinThreshold": "64MB",
-        "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
-        "spark.sql.session.timeZone": "UTC",
+        **_RUNTIME_CONF,
         # Externally-created sessions often keep the 200 default; size the
         # shuffle to the actual cluster (AQE coalesces down, never up).
         "spark.sql.shuffle.partitions": str(spark.sparkContext.defaultParallelism),

@@ -16,7 +16,7 @@ quantities the pruning argument rests on:
   - distinct 5-grams (the table-growth exponent under real diversity —
     Heaps-law sub-linear expected, vs the tagged probe's exact 1.0),
   - the singleton share of distinct 5-grams (does it hold/rise?), and
-  - the post-prune score-table fraction (what prune_singletons keeps),
+  - the post-prune score-table fraction (what singleton pruning keeps),
 
 plus the shuffle volume of the SHIPPED pruned + suffix-aligned
 ngram_logprob_scores(order=5) plan, min-of-2, counters over walls.

@@ -51,7 +51,6 @@ ALLOW_BNLJ = {
     "events_hll_type_overlap": "type-pair enumeration over the category-bounded event-type set (|types|^2 rows, sf-invariant) against m-row register tables",
     # labeled exact/baseline tiers over bounded sides
     "dedup_embedding_cosine": "labeled exact all-pairs verifier tier (similarity.py:cosine_pairs)",
-    "dedup_simhash": "graded exact tier; the blocked variant is the scale path (dedup.py:simhash_pairs_blocked)",
     "ann_bruteforce_topk": "bounded broadcast query side (labeled baseline tier)",
     "ann_quantized_topk": "bounded broadcast query side + 1-row scale scalar",
     "ann_ivf_topk": "bounded broadcast centroid/query sides",

@@ -172,6 +172,7 @@ _POOL = [f"tok{i}" for i in range(12)]
 )
 def test_simhash_blocked_equals_exhaustive(spark_global, token_docs, max_hamming):
     from distributed_api_etl_spark.operators import dedup as D
+    from tests.reference_forms import simhash_pairs_exhaustive
 
     # docs drawn from a tiny token pool => many signature near-collisions,
     # exercising both qualifying and non-qualifying pairs at every distance
@@ -183,7 +184,7 @@ def test_simhash_blocked_equals_exhaustive(spark_global, token_docs, max_hamming
     }
     exact = {
         (r.d1, r.d2, r.hamming)
-        for r in D.simhash_pairs_exhaustive(
+        for r in simhash_pairs_exhaustive(
             df, "doc_id", "text", max_hamming=max_hamming
         ).collect()
     }

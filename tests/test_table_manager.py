@@ -299,40 +299,6 @@ def test_optimize_zorder_rewrites_in_place(spark, sf_dir, tmp_path):
     assert after.agg(F.sum("event_id")).first()[0] == sum_before
 
 
-def test_read_with_evolution_merges_schema_versions(spark, tmp_path):
-    from pyspark.sql import types as T
-
-    from distributed_api_etl_spark.core.table_manager import read_with_evolution
-
-    loc = str(tmp_path / "evolving")
-    v1 = spark.createDataFrame([(1, "a"), (2, "b")], "id bigint, name string")
-    v1.write.parquet(loc)
-    v2 = spark.createDataFrame(
-        [(3, "c", 9.5)], "id bigint, name string, score double"
-    )
-    v2.write.mode("append").parquet(loc)
-
-    # plain read: schema depends on which footer wins -> score may vanish
-    merged = read_with_evolution(spark, loc)
-    assert set(merged.columns) == {"id", "name", "score"}
-    rows = {r["id"]: r for r in merged.collect()}
-    assert rows[1]["score"] is None and rows[3]["score"] == 9.5
-
-    # expected-schema pinning: adds never-written columns as typed nulls
-    target = T.StructType(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField("name", T.StringType()),
-            T.StructField("score", T.DoubleType()),
-            T.StructField("source", T.StringType()),  # future column
-        ]
-    )
-    pinned = read_with_evolution(spark, loc, target)
-    assert pinned.columns == ["id", "name", "score", "source"]
-    assert pinned.schema["source"].dataType == T.StringType()
-    assert all(r["source"] is None for r in pinned.collect())
-
-
 def test_recover_scratch_restores_or_cleans(spark, tmp_path):
     import os
 
@@ -356,3 +322,42 @@ def test_recover_scratch_restores_or_cleans(spark, tmp_path):
 
     # idempotent no-op afterwards
     assert recover_scratch(spark, loc) == {"restored": [], "deleted": []}
+
+
+def test_swap_restores_original_when_second_rename_fails(monkeypatch):
+    """The two-rename swap's failure path: the live layout has been parked
+    at ``__old`` when renaming the new one into place fails. The original
+    must be back at the location before OSError is raised, and the stale
+    ``__tmp`` is then cleaned by recover_scratch."""
+    from distributed_api_etl_spark.core import table_manager as tm
+
+    class FakeFS:
+        def __init__(self):
+            self.dirs = {"/t": "original"}
+
+        def exists(self, p):
+            return p in self.dirs
+
+        def rename(self, src, dst):
+            if src == "/t__compact_tmp" or src not in self.dirs or dst in self.dirs:
+                return False
+            self.dirs[dst] = self.dirs.pop(src)
+            return True
+
+        def delete(self, p, recursive):
+            return self.dirs.pop(p, None) is not None
+
+    fs = FakeFS()
+    monkeypatch.setattr(tm, "hadoop_fs", lambda spark, location: (fs, str))
+
+    def write(tmp):
+        fs.dirs[tmp] = "rewritten"
+
+    with pytest.raises(OSError, match="rename /t__compact_tmp -> /t failed"):
+        tm.swap_in_rewrite(None, "/t", "compact", write)
+    assert fs.dirs == {"/t": "original", "/t__compact_tmp": "rewritten"}
+    assert tm.recover_scratch(None, "/t") == {
+        "restored": [],
+        "deleted": ["__compact_tmp"],
+    }
+    assert fs.dirs == {"/t": "original"}
