@@ -94,7 +94,28 @@ def main() -> None:
     # a shared box conflate the query's cost with GC pauses / first-touch
     # page faults / neighbor load; min-of-2 is the standard steady-state
     # estimator (JMH-style) and is declared in the output JSON.
-    from distributed_api_etl_spark.session import shuffle_bytes_snapshot
+    # shuffle bytes, job count and executor task seconds per head: the
+    # load-robust twins of each wall, read from the AppStatusStore with the
+    # readers the ingest benchmark uses
+    from perfbench.tracing import next_job_id, spark_counters
+
+    sc = spark.sparkContext._jsc.sc()  # noqa: SLF001
+
+    def counters():
+        sc.listenerBus().waitUntilEmpty()  # the status store is fed asynchronously
+        return spark_counters(spark), next_job_id(spark)
+
+    def task_seconds(first_job: int, last_job: int) -> float:
+        """Executor run time of the stages of jobs ``first_job ..
+        last_job - 1``. (The executor summary's ``totalDuration`` is no
+        substitute: in local mode it grows with wall time while no task
+        runs.)"""
+        stages = set()
+        for j in range(first_job, last_job):
+            ids = sc.statusStore().job(j).stageIds()
+            stages.update(ids.apply(i) for i in range(ids.size()))
+        store = sc.statusStore()
+        return sum(store.lastStageAttempt(st).executorRunTime() for st in stages) / 1000.0
 
     RUNS = 2
     # VERDICT r16 #8: when the first RUNS walls spread >30% the box was
@@ -107,6 +128,8 @@ def main() -> None:
     spread_pct: dict[str, float] = {}
     runs_done: dict[str, int] = {}
     shuffle_mb: dict[str, float] = {}
+    spark_jobs: dict[str, int] = {}
+    task_s: dict[str, float] = {}
     total = 0.0
     load_start = os.getloadavg()[0]
     for name, spec in bench_specs.items():
@@ -122,19 +145,22 @@ def main() -> None:
             # build inside the timed region: some operators (the API
             # pipeline) execute eagerly during build, and plan construction
             # is cheap anyway
-            w0, _ = shuffle_bytes_snapshot(spark)
+            c0, j0 = counters()
             t0 = time.perf_counter()
             df = spec.build(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             dt = time.perf_counter() - t0
-            w1, _ = shuffle_bytes_snapshot(spark)
+            c1, j1 = counters()
             best = dt if best is None else min(best, dt)
             worst = dt if worst is None else max(worst, dt)
             n_runs += 1
             if n_runs >= RUNS and 100.0 * (worst / best - 1.0) <= RESPREAD_PCT:
                 break
-        # bytes from the LAST run (deterministic modulo AQE; runs agree)
-        shuffle_mb[name] = round((w1 - w0) / 1e6, 2)
+        # counters from the LAST run (bytes and jobs are deterministic
+        # modulo AQE; runs agree)
+        shuffle_mb[name] = round(c1["shuffle_write_mb"] - c0["shuffle_write_mb"], 2)
+        spark_jobs[name] = j1 - j0
+        task_s[name] = round(task_seconds(j0, j1), 2)
         timings[name] = round(best, 3)
         # max/min - 1 across the runs: a large spread means the box was
         # loaded mid-query and the wall number is suspect even as a min
@@ -145,9 +171,10 @@ def main() -> None:
     # VERDICT r7 #1: the r7 official bench record was unparseable because one
     # giant JSON line (31 walls + shuffle counters + spread + loadavg) outgrew
     # the driver's tail capture and lost its head. Output framing is now:
-    #   line 1 (detail): shuffle_write_mb / run_spread_pct / loadavg — the
-    #     diagnostics a human reads; also written to docs/bench_detail_last.json
-    #     so the evidence survives even if the driver drops the line.
+    #   line 1 (detail): shuffle_write_mb / spark_jobs / task_s /
+    #     run_spread_pct / loadavg — the diagnostics a human reads; also
+    #     written to docs/bench_detail_last.json so the evidence survives
+    #     even if the driver drops the line.
     #   line 2 (LAST): the compact summary the driver parses — total +
     #     per-query walls rounded to 2 dp, nothing else. Tail-capture safe.
     try:
@@ -175,6 +202,8 @@ def main() -> None:
         "total_s": round(total, 2),
         "query_walls_s": timings,
         "shuffle_write_mb": shuffle_mb,
+        "spark_jobs": spark_jobs,
+        "task_s": task_s,
         "run_spread_pct": spread_pct,
         "loadavg_start": round(load_start, 2),
         "loadavg_end": round(os.getloadavg()[0], 2),

@@ -115,14 +115,25 @@ class ColumnMapping(BaseModel):
     transform: Literal["upper", "lower", "strip"] | None = None
 
 
-class SourceTableConfig(BaseModel):
+class _CatalogTable(BaseModel):
+    """A table addressed in the catalog as ``namespace.name``."""
+
+    namespace: str | None = None
+    name: str | None = None
+
+    @property
+    def full_name(self) -> str | None:
+        if self.name is None:
+            return None
+        return f"{self.namespace}.{self.name}" if self.namespace else self.name
+
+
+class SourceTableConfig(_CatalogTable):
     """Source: catalog table (``namespace.name``), file location, or a
     caller-supplied DataFrame — exactly one. The reference supports only
     catalog XOR DataFrame; ``location`` adds direct file reads (the
     Spark-native case: parquet/csv/json paths without a metastore)."""
 
-    namespace: str | None = None
-    name: str | None = None
     location: str | None = None
     # xml is Spark 4 native (set options.rowTag); avro needs the external
     # spark-avro jar, not deployed in this runtime — rejected eagerly here
@@ -138,23 +149,14 @@ class SourceTableConfig(BaseModel):
             raise ValueError("source: give namespace.name OR location, not both")
         return self
 
-    @property
-    def full_name(self) -> str | None:
-        if self.name is None:
-            return None
-        return f"{self.namespace}.{self.name}" if self.namespace else self.name
 
-
-class SinkConfig(BaseModel):
-    namespace: str | None = None
-    name: str | None = None
+class SinkConfig(_CatalogTable):
     format: Literal["delta", "parquet"] = "parquet"
     location: str | None = None
     # merge => exactly-once upsert on request_id: Delta MERGE when format is
     # delta, insert-only anti-join append for parquet
     mode: Literal["append", "merge"] = "append"
     partition_by: list[str] = Field(default_factory=list)
-    properties: dict[str, str] = Field(default_factory=dict)
 
     @model_validator(mode="after")
     def _check(self) -> "SinkConfig":

@@ -218,8 +218,16 @@ class TableManager:
 # ``<location>__<op>_old``, the new one is renamed into place and the old
 # one is deleted. recover_scratch resolves what a crash leaves behind.
 _SWAP_OPS = ("compact", "upsert", "zorder")
+
+
+def swap_scratch(location: str, op: str, stage: str) -> str:
+    """``<location>__<op>_<stage>``: where the ``op`` swap writes the new
+    layout (stage ``tmp``) or parks the live one (stage ``old``)."""
+    return location.rstrip("/") + f"__{op}_{stage}"
+
+
 SCRATCH_SUFFIXES = tuple(
-    f"__{op}_{stage}" for op in _SWAP_OPS for stage in ("tmp", "old")
+    swap_scratch("", op, stage) for op in _SWAP_OPS for stage in ("tmp", "old")
 )
 
 
@@ -230,6 +238,13 @@ def hadoop_fs(spark: SparkSession, location: str):
     jvm_path = sc._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
     fs = jvm_path(location).getFileSystem(sc._jsc.hadoopConfiguration())  # noqa: SLF001
     return fs, jvm_path
+
+
+def path_exists(spark: SparkSession, location: str) -> bool:
+    """Whether ``location`` exists — one Hadoop ``FileSystem.exists``
+    call, no Spark job."""
+    fs, jvm_path = hadoop_fs(spark, location)
+    return bool(fs.exists(jvm_path(location)))
 
 
 def swap_in_rewrite(spark: SparkSession, location: str, op: str, write) -> None:
@@ -244,8 +259,7 @@ def swap_in_rewrite(spark: SparkSession, location: str, op: str, write) -> None:
     """
     assert op in _SWAP_OPS, op
     fs, path = hadoop_fs(spark, location)
-    base = location.rstrip("/")
-    tmp, old = base + f"__{op}_tmp", base + f"__{op}_old"
+    tmp, old = swap_scratch(location, op, "tmp"), swap_scratch(location, op, "old")
     write(tmp)
     if not fs.rename(path(location), path(old)):
         raise OSError(f"{op} swap: rename {location} -> {old} failed")
@@ -365,8 +379,7 @@ def upsert_parquet(
     ``<location>__upsert_old`` with no live ``location`` — run
     :func:`recover_scratch` (both snapshots are complete, never a mix).
     """
-    fs, jvm_path = hadoop_fs(spark, location)
-    if not fs.exists(jvm_path(location)):
+    if not path_exists(spark, location):
         updates.write.format("parquet").mode("overwrite").save(location)
         n = updates.count()
         return {"rows_before": 0, "rows_after": n, "rows_updated": 0, "rows_inserted": n}

@@ -22,7 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from distributed_api_etl_spark.operators.driver_local import DRIVER_MAX_ROWS, bounded_collect
 
 
 def truncate_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
@@ -96,40 +97,14 @@ class _loop_shuffle_partitions:
         return False
 
 
-# Below this many edges the whole component computation happens on the
-# driver: ONE bounded collect (2 ints/edge — ~16 bytes, so the cap is a
-# few MB of driver memory) + exact union-find, instead of 3-8 distributed
-# label-propagation rounds of ~2 tiny shuffle jobs each. The iterative
-# loop's wall at small |E| is pure job-scheduling overhead (SCALE.md
-# round-6 profile); the collect is the same bounded-metadata class as the
-# probed-centroid / MMR collects. Dup graphs larger than the cap (a 100 TB
-# corpus can exceed it) take the distributed loop unchanged — the gate is
-# on MEASURED edge count, which connected_components computes anyway.
-DRIVER_CC_MAX_EDGES = 200_000
-
-# id types whose Python ordering equals Spark's ORDER BY (min-label must
-# agree with the distributed loop): integers trivially; strings because
-# UTF-8 byte order equals code-point order for valid UTF-8.
-_DRIVER_CC_SAFE_TYPES = (
-    "tinyint", "smallint", "int", "bigint", "string",
-)
-
-
-def _connected_components_driver(
-    edges: DataFrame, src: str, dst: str
-) -> DataFrame:
-    """Exact min-label components of a BOUNDED edge list via driver-side
-    union-find — identical output contract to the distributed loop
-    (pinned by test_connected_components_driver_equals_loop).
-
-    Returns None when a collected endpoint is null: the distributed loop
-    handles nulls via join semantics (a null node labels itself, nothing
-    propagates across it), which Python's ``<`` cannot mirror — the caller
-    falls back to the loop (ADVICE r16 #1).
-    """
-    rows = edges.collect()
-    if any(r[0] is None or r[1] is None for r in rows):
-        return None
+def _connected_components_driver(edges: DataFrame, table) -> DataFrame:
+    """Exact min-label components of a BOUNDED edge list (the Arrow
+    ``table`` of :func:`bounded_collect`) via driver-side union-find —
+    identical output contract to the distributed loop (pinned by
+    test_connected_components_driver_equals_loop). Below the cap one
+    collect replaces 3-8 label-propagation rounds of ~2 tiny shuffle jobs
+    each, whose wall at small |E| is pure job-scheduling overhead
+    (SCALE.md round-6 profile)."""
     parent: dict = {}
 
     def find(x):
@@ -140,8 +115,7 @@ def _connected_components_driver(
             parent[x], x = root, parent[x]
         return root
 
-    for r in rows:
-        a, b = r[0], r[1]
+    for a, b in zip(table.column(0).to_pylist(), table.column(1).to_pylist()):
         if a not in parent:
             parent[a] = a
         if b not in parent:
@@ -155,15 +129,9 @@ def _connected_components_driver(
         m = comp_min.get(r)
         if m is None or n < m:
             comp_min[r] = n
-    node_t = edges.schema[0].dataType
-    out_schema = T.StructType(
-        [
-            T.StructField("node", node_t),
-            T.StructField("cluster_id", node_t),
-        ]
-    )
+    node_t = edges.schema[0].dataType.simpleString()
     data = [(n, comp_min[r]) for n, r in roots.items()]
-    return edges.sparkSession.createDataFrame(data, out_schema)
+    return edges.sparkSession.createDataFrame(data, f"node {node_t}, cluster_id {node_t}")
 
 
 def connected_components(
@@ -171,34 +139,26 @@ def connected_components(
     src: str = "d1",
     dst: str = "d2",
     max_iter: int = 25,
-    driver_max_edges: int = DRIVER_CC_MAX_EDGES,
+    driver_max_rows: int = DRIVER_MAX_ROWS,
 ) -> DataFrame:
     """(node, cluster_id) for every node in ``edges``; cluster_id = min
-    node id reachable. Deterministic for any id type with a total order."""
-    # persist + materialize the incoming edge list FIRST: the symmetrization
-    # union below references it twice, and edges are typically the output of
-    # an entire LSH/minhash pipeline — lazy persist alone isn't enough, both
-    # union branches would race a cold cache inside one job and run the
-    # upstream DAG twice anyway. count() is one job over a frame that must
-    # be computed regardless; every later round then reads pure cache.
+    node id reachable. Deterministic for any id type with a total order.
+    An edge list the driver gate (:func:`bounded_collect` on both
+    endpoints) accepts runs as driver union-find; any other — larger than
+    the cap, a null endpoint, mixed endpoint types — takes the distributed
+    loop. ``driver_max_rows=0`` forces the loop."""
+    # persist the incoming edge list FIRST: edges are typically the output
+    # of an entire LSH/minhash pipeline, and both the gate's collect and
+    # the loop (whose symmetrization union references it twice) read it —
+    # the upstream DAG runs once
     edges = edges.select(F.col(src), F.col(dst)).persist()
+    table = bounded_collect(edges, (src, dst), driver_max_rows)
+    if table is not None:
+        out = _connected_components_driver(edges, table)
+        edges.unpersist()
+        return out
+    # the count sizes the loop's shuffle partitions
     n_edges = edges.count()
-    # driver gate requires BOTH endpoint columns to share one safe type:
-    # the union-find stamps both output columns with src's type, so a
-    # wider dst would silently narrow (the loop widens via unionByName) —
-    # and mixed-type Python comparisons diverge from Spark's (ADVICE r16 #1)
-    src_t = edges.schema[0].dataType
-    dst_t = edges.schema[1].dataType
-    if (
-        n_edges <= driver_max_edges
-        and src_t == dst_t
-        and src_t.simpleString() in _DRIVER_CC_SAFE_TYPES
-    ):
-        out = _connected_components_driver(edges, src, dst)
-        if out is not None:
-            edges.unpersist()
-            return out
-        # null endpoint collected: the loop's join semantics handle it
     with _loop_shuffle_partitions(edges.sparkSession, 2 * n_edges):
         return _connected_components_loop(edges, src, dst, max_iter)
 

@@ -29,6 +29,11 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from distributed_api_etl_spark.functions.vectors import cosine_fold_udf, cosine_similarity
+from distributed_api_etl_spark.operators.driver_local import (
+    DRIVER_MAX_ROWS,
+    bounded_collect,
+    vector_matrix,
+)
 from distributed_api_etl_spark.session import scoped_persist
 
 
@@ -1289,14 +1294,14 @@ def _collect_codebook(codebook: DataFrame) -> dict:
     return _group_codebook(codebook.select("s", "code", "cw").collect())
 
 
-def _seed_codebook(seed_rows, dim: int, m: int) -> dict:
+def _seed_codebook(seed_mat: np.ndarray, m: int) -> dict:
     """The iteration-0 codebook: the subvectors of the (lowest-id) seed
-    vectors, codes dense 0..k-1 by seed-id rank."""
-    d_sub = dim // m
-    seed_mat = np.array([list(r[1])[:dim] for r in seed_rows], dtype=np.float64)
+    vectors — the rows of ``seed_mat`` in id order — codes dense 0..k-1
+    by seed-id rank."""
+    d_sub = seed_mat.shape[1] // m
     return {
         s: (
-            np.arange(len(seed_rows), dtype=np.int64),
+            np.arange(len(seed_mat), dtype=np.int64),
             seed_mat[:, s * d_sub : (s + 1) * d_sub].copy(),
         )
         for s in range(m)
@@ -1319,41 +1324,28 @@ def _argmin_codes(V, codes, cents):
     return codes[np.argmin(acc, axis=1)]
 
 
-# Below this many VALID vectors the whole PQ training loop runs on the
-# driver: ONE bounded collect (rows x dim doubles — 100 MB at the cap for
-# dim=64) + numpy Lloyd's, instead of per-iteration distributed kernel
-# passes whose job/planning latency dominates at bench scale (profiled
-# r17: 2.3 s of iteration jobs + gaps for a 2k-vector corpus). Same
-# size-gate discipline as graph.py's DRIVER_CC_MAX_EDGES: the gate is on
-# a MEASURED count, larger corpora take the distributed loop unchanged —
-# and a 100 TB system trains PQ on a sample of about this size anyway.
-PQ_TRAIN_DRIVER_MAX_ROWS = 200_000
-
-# id types whose Python ordering equals Spark's ORDER BY (seed selection
-# must agree with the distributed path): the graph.py argument verbatim.
-_PQ_DRIVER_SAFE_ID_TYPES = ("tinyint", "smallint", "int", "bigint", "string")
-
-
 def _pq_train_driver(
     spark,
-    rows,
+    table,
     dim: int,
     m: int,
     k_codes: int,
     iters: int,
     round_decimals: int,
 ):
-    """Numpy Lloyd's over a BOUNDED collected corpus — identical output to
-    the distributed pq_train loop (same :func:`_argmin_codes` assignment
-    over the same float64 matrix, same seed rule). The per-centroid mean
-    is computed unrounded in numpy, then rounded BY SPARK's own round
-    expression via a LocalRelation projection (ConvertToLocalRelation
-    folds it on the driver — zero jobs), so the graded float grid is the
-    engine's, not a Python reimplementation of java's HALF_UP."""
+    """Numpy Lloyd's over a BOUNDED collected ``(id, vec)`` Arrow table —
+    identical output to the distributed pq_train loop (same
+    :func:`_argmin_codes` assignment over the same float64 matrix, same
+    seed rule: Arrow's ``sort_by`` orders ids as Spark's ORDER BY does,
+    strings by bytes). The per-centroid mean is computed unrounded in
+    numpy, then rounded BY SPARK's own round expression via a
+    LocalRelation projection (ConvertToLocalRelation folds it on the
+    driver — zero jobs), so the graded float grid is the engine's, not a
+    Python reimplementation of java's HALF_UP."""
     d_sub = dim // m
-    rows = sorted(rows, key=lambda r: r[0])
-    V = np.array([list(r[1])[:dim] for r in rows], dtype=np.float64)
-    cb = _seed_codebook(rows[:k_codes], dim, m)
+    table = table.sort_by(table.column_names[0])
+    _, V = vector_matrix(table.column(1), dim)
+    cb = _seed_codebook(V[:k_codes], m)
     cents_rows = None
     for _ in range(iters):
         raw = []  # (s, code, pos, unrounded mean)
@@ -1394,7 +1386,7 @@ def pq_train(
     k_codes: int = 16,
     iters: int = 2,
     round_decimals: int = 6,
-    driver_max_rows: int = PQ_TRAIN_DRIVER_MAX_ROWS,
+    driver_max_rows: int = DRIVER_MAX_ROWS,
 ) -> DataFrame:
     """Deterministic PQ codebook: per subspace s (the s-th ``dim//m``
     consecutive components), Lloyd's k-means with MIN-SQUARED-L2
@@ -1436,24 +1428,16 @@ def pq_train(
         F.col(vec_col).isNotNull() & (F.size(F.col(vec_col)) >= dim)
     )
     # driver gate (r17): ONE bounded collect replaces the seed collect plus
-    # per-iteration distributed kernel passes when the valid corpus fits —
-    # limit(cap+1) bounds driver memory without a separate count job; a
-    # larger corpus falls through to the distributed loop below, paying
-    # only this one truncated scan extra. So does a null id: Python cannot
-    # order None against ids, while the loop's ORDER BY puts nulls first
-    # (the graph.py CC driver gate's rule)
-    if (
-        driver_max_rows > 0
-        and emb.schema[id_col].dataType.simpleString()
-        in _PQ_DRIVER_SAFE_ID_TYPES
-    ):
-        bounded = valid.limit(driver_max_rows + 1).collect()
-        if len(bounded) <= driver_max_rows and all(
-            r[0] is not None for r in bounded
-        ):
-            return _pq_train_driver(
-                spark, bounded, dim, m, k_codes, iters, round_decimals
-            )
+    # per-iteration distributed kernel passes when the valid corpus fits
+    # (profiled r17: 2.3 s of iteration jobs + gaps for a 2k-vector
+    # corpus; a 100 TB system trains PQ on a sample of about the cap's
+    # size anyway). A larger corpus falls through to the distributed loop
+    # below, paying only this one truncated scan extra. So does a null id:
+    # Python cannot order None against ids, while the loop's ORDER BY puts
+    # nulls first
+    table = bounded_collect(valid, (id_col,), driver_max_rows, vec_width=dim)
+    if table is not None:
+        return _pq_train_driver(spark, table, dim, m, k_codes, iters, round_decimals)
 
     # seeds: the k_codes LOWEST-id VALID vectors (bounded collect), dense
     # codes 0..k-1 by id rank — identical to the rows the fold form
@@ -1461,7 +1445,8 @@ def pq_train(
     # (null/short vectors would crash the numpy seed matrix; the fold form
     # degrades to null codewords there — ADVICE r16 #2 picks the filter).
     # _sub_slice casts components to double; float32 widens exactly.
-    cb = _seed_codebook(_lowest_ids(valid, id_col, k_codes).collect(), dim, m)
+    _, seeds = vector_matrix(_lowest_ids(valid, id_col, k_codes).toArrow().column(1), dim)
+    cb = _seed_codebook(seeds, m)
     subv = _explode_subvectors(emb, id_col, vec_col, m, d_sub)
     cents_rows = None
     for _ in range(iters):
@@ -1518,61 +1503,44 @@ def _pq_assign_sum_kernel(subv: DataFrame, cb: dict) -> DataFrame:
     corpus x m x d_sub posexploded components. Rows whose subvector is
     null or shorter than the codeword width are skipped (the fold's
     null-code rows never contributed a mean component; ADVICE r16 #2).
-    The validity mask is computed ONCE per batch (ADVICE r16 #3), not per
-    subspace."""
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    # NOTE: StructType.add mutates in place — never .add() onto the input
-    # frame's cached .schema object (it corrupts DataFrame.columns)
-    out_schema = StructType(
-        [
-            StructField("s", IntegerType()),
-            StructField("code", IntegerType()),
-            StructField("cnt", LongType()),
-            StructField("sums", ArrayType(DoubleType())),
-        ]
-    )
+    The validity mask and the subvector matrix come out of ONE
+    :func:`vector_matrix` call per Arrow batch (``mapInArrow``: no pandas
+    conversion, no per-row Python)."""
+    out_schema = "s int, code int, cnt bigint, sums array<double>"
     # every subspace shares one codeword width (dim // m)
-    d_sub = next(iter(cb.values()))[1].shape[1] if cb else 0
+    d_sub = next(iter(cb.values()))[1].shape[1]
 
     def _batches(it):
         import numpy as np
-        import pandas as pd
+        import pyarrow as pa
 
-        for pdf in it:
-            svs = pdf["sv"]
-            s_arr = pdf["s"].to_numpy()
-            valid = svs.map(
-                lambda v: v is not None and len(v) >= d_sub
-            ).to_numpy()
+        for batch in it:
+            ok, V_all = vector_matrix(batch.column(1), d_sub)
+            s_ok = batch.column(0).to_numpy(zero_copy_only=False)[ok]
             out_s: list = []
             out_code: list = []
             out_cnt: list = []
             out_sums: list = []
             for s, (codes, cents) in cb.items():
-                ok = (s_arr == s) & valid
-                if not ok.any():
-                    continue
-                V = np.array([list(v[:d_sub]) for v in svs[ok]], dtype=np.float64)
+                V = V_all[s_ok == s]
                 assigned = _argmin_codes(V, codes, cents)
                 for c in np.unique(assigned):
                     sel = assigned == c
                     out_s.append(s)
                     out_code.append(int(c))
                     out_cnt.append(int(sel.sum()))
-                    out_sums.append(V[sel].sum(axis=0).tolist())
-            yield pd.DataFrame(
-                {"s": out_s, "code": out_code, "cnt": out_cnt, "sums": out_sums}
+                    out_sums.append(V[sel].sum(axis=0))
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(out_s, pa.int32()),
+                    pa.array(out_code, pa.int32()),
+                    pa.array(out_cnt, pa.int64()),
+                    pa.array(out_sums, pa.list_(pa.float64())),
+                ],
+                names=["s", "code", "cnt", "sums"],
             )
 
-    return subv.select("s", "sv").mapInPandas(_batches, out_schema)
+    return subv.select("s", "sv").mapInArrow(_batches, out_schema)
 
 
 def pq_encode(
@@ -1594,8 +1562,8 @@ def pq_encode(
     ``extra_cols`` so assignment + encode stay ONE scan). The m argmin
     searches per row run as ONE numpy pass per Arrow batch
     (:func:`_argmin_codes` — bit-identical distances and tie-breaks,
-    guide §4.2) against the collected codebook (bounded m x k_codes
-    rows). A null or
+    guide §4.2) over the :func:`vector_matrix` of the batch, against the
+    collected codebook (bounded m x k_codes rows). A null or
     shorter-than-``dim`` vector encodes to an all-null codes array (the
     fold's null-propagation contract). Only (id, vec, extra) columns
     cross the Python boundary."""
@@ -1611,31 +1579,26 @@ def pq_encode(
 
     def _batches(it):
         import numpy as np
+        import pyarrow as pa
 
-        for pdf in it:
-            vs = pdf[vec_col]
-            ok = vs.map(lambda v: v is not None and len(v) >= dim).to_numpy()
-            codes_out = [[None] * m] * len(pdf)
-            if ok.any():
-                V = np.array([list(v[:dim]) for v in vs[ok]], dtype=np.float64)
-                per_s = [
-                    _argmin_codes(
-                        V[:, s * d_sub : (s + 1) * d_sub], cbn[s][0], cbn[s][1]
-                    )
-                    for s in range(m)
-                ]
-                mat = np.stack(per_s, axis=1).astype(np.int32)
-                rows = iter(mat.tolist())
-                codes_out = [
-                    next(rows) if k else [None] * m for k in ok
-                ]
-            out = pdf[[id_col, *extra_cols]].copy()
-            out.insert(1, "codes", codes_out)
-            yield out
+        for batch in it:
+            n = batch.num_rows
+            ok, V = vector_matrix(batch.column(1), dim)
+            codes = np.zeros((n, m), dtype=np.int32)
+            codes[ok] = np.stack(
+                [_argmin_codes(V[:, s * d_sub : (s + 1) * d_sub], *cbn[s]) for s in range(m)],
+                axis=1,
+            )
+            codes_arr = pa.ListArray.from_arrays(
+                pa.array(np.arange(0, n * m + 1, m, dtype=np.int32)),
+                pa.array(codes.ravel(), mask=np.repeat(~ok, m)),
+            )
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0), codes_arr, *batch.columns[2:]],
+                names=[id_col, "codes", *extra_cols],
+            )
 
-    return emb.select(id_col, vec_col, *extra_cols).mapInPandas(
-        _batches, out_schema
-    )
+    return emb.select(id_col, vec_col, *extra_cols).mapInArrow(_batches, out_schema)
 
 
 #: LUT map key stride: key = s * PQ_KEY_STRIDE + code (codes < stride).

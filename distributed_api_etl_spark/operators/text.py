@@ -1604,20 +1604,16 @@ def gopher_combined_gate(
     exchange that join costs at scale never happens. Carried columns
     cross the Python boundary — carry what downstream actually needs,
     not the whole row."""
-    reserved = {
-        "n_words", "total_word_chars", "alpha_words", "stop_hits",
-        "mean_word_len_centi", "alpha_word_ppm", "gopher_flags",
-        "rep_flags", "keep", "den_chars", "_lines", "_paras", "_wt",
-    }
-    # the id column is already projected by the chain — carrying it again
-    # would duplicate it and fail later with AMBIGUOUS_REFERENCE instead
-    # of this actionable error (the build_ivf_*_index guard convention)
-    clash = reserved.union({id_col}).intersection(carry)
+    # the kernel outputs (id, gopher_flags, rep_flags, keep, *carry): a
+    # carried column named like one of the others would duplicate it and
+    # fail later with AMBIGUOUS_REFERENCE instead of this actionable error
+    # (the build_ivf_*_index guard convention)
+    clash = {id_col, "gopher_flags", "rep_flags", "keep"}.intersection(carry)
     if clash:
         raise ValueError(
             f"gopher_combined_gate: carry column(s) {sorted(clash)} collide "
-            "with the gate's internal stat names or the id column — rename "
-            "them upstream"
+            "with the gate's output columns or the id column — rename them "
+            "upstream"
         )
     # One Arrow pass over (id, text, carry): both rule families' statistics
     # are exact integers over per-row token/segment arrays, so the whole

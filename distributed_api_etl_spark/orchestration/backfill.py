@@ -22,48 +22,39 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from distributed_api_etl_spark.core.table_manager import path_exists
+
 STATE_SCHEMA = "unit string, status string, rows bigint, processed_at double"
 
 
 def completed_units(spark: SparkSession, state_location: str) -> set[str]:
     """Units with a committed 'done' bookmark (empty on first run).
 
-    First-run detection is deliberately two-pronged, corruption must raise:
-    - PATH_NOT_FOUND — the state table was never written.
-    - UNABLE_TO_INFER_SCHEMA — the directory exists but holds NO committed
-      parquet files (a crash during the very first bookmark append leaves
-      only ``_temporary/``). No bookmark ever committed, so "no units done"
-      is exact, and treating it as corruption would permanently block the
+    First run is exact, and corruption raises:
+    - a state location that does not exist was never written;
+    - a directory with NO committed parquet files (a crash during the very
+      first bookmark append leaves only ``_temporary/``, which the reader
+      skips as hidden) reads as zero rows under the declared
+      ``STATE_SCHEMA``: no bookmark ever committed, so "no units done" is
+      exact, and treating it as corruption would permanently block the
       resume path this module exists to provide.
-    Anything else (e.g. an unreadable footer on a committed part file) is
+    A committed part file that cannot be read (an unreadable footer) is
     genuine corruption: silently returning the empty set would restart the
-    whole backfill, so it propagates.
+    whole backfill, so the read error propagates.
 
     Accepted residual risk: externally deleting every committed part file
-    while leaving the directory also reads as UNABLE_TO_INFER_SCHEMA and
-    therefore as first-run — indistinguishable from the crash shape by
-    construction (an explicit init marker would not help: whatever deleted
-    the part files can delete the marker). The tradeoff is deliberate:
-    self-healing after a first-append crash (an expected failure mode of
-    this module) over detecting external state destruction (not one).
-    Unit writes are idempotent by contract, so the cost of the silent
-    restart is wasted work, never duplicated data.
+    while leaving the directory also reads as zero rows and therefore as
+    first-run — indistinguishable from the crash shape by construction (an
+    explicit init marker would not help: whatever deleted the part files
+    can delete the marker). The tradeoff is deliberate: self-healing after
+    a first-append crash (an expected failure mode of this module) over
+    detecting external state destruction (not one). Unit writes are
+    idempotent by contract, so the cost of the silent restart is wasted
+    work, never duplicated data.
     """
-    try:
-        state = spark.read.parquet(state_location)
-    except Exception as exc:  # Spark wraps missing-path errors; match by class/text
-        from pyspark.errors import AnalysisException
-
-        first_run_markers = (
-            "PATH_NOT_FOUND",
-            "Path does not exist",
-            "UNABLE_TO_INFER_SCHEMA",
-        )
-        if isinstance(exc, AnalysisException) and any(
-            m in str(exc) for m in first_run_markers
-        ):
-            return set()
-        raise
+    if not path_exists(spark, state_location):
+        return set()
+    state = spark.read.schema(STATE_SCHEMA).parquet(state_location)
     # Driver-side collect is bounded by the UNIT universe (dates/partitions
     # handed to run_backfill) — metadata cardinality, never row data; a
     # 100 TB backfill still collects only its few thousand unit ids.

@@ -12,12 +12,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from distributed_api_etl_spark.core.bronze import BRONZE_SCHEMA
+from distributed_api_etl_spark.core.table_manager import path_exists
 from distributed_api_etl_spark.orchestration.partition_executor import build_map_in_pandas_fn
 
 
-# Formats that bind columns by name: reading them with the one declared column
-# skips schema inference from file footers (a Spark job per read).
-_BY_NAME_FORMATS = frozenset({"parquet", "orc"})
 _SINK_ID_SCHEMA = T.StructType([BRONZE_SCHEMA["request_id"]])
 
 
@@ -28,22 +26,20 @@ def read_sink_ids(spark: SparkSession, sink: dict) -> DataFrame | None:
     Existence is asked directly (Hadoop ``FileSystem.exists`` for a location,
     ``catalog.tableExists`` for a name), so a read error on a sink that exists
     propagates: reading it as "nothing processed yet" would re-send the whole
-    source. parquet and orc are read with the fixed bronze type of
-    ``request_id`` instead of inferring a schema; csv binds columns by
-    position and delta reads its own log, so they keep their own resolution.
+    source. parquet binds columns by name, so it is read with the fixed
+    bronze type of ``request_id`` instead of inferring a schema from file
+    footers (a Spark job per read); delta reads its own log.
     """
     location = sink.get("location")
     if not location:
         if not spark.catalog.tableExists(sink["name"]):
             return None
         return spark.table(sink["name"]).select("request_id")
-    sc = spark.sparkContext
-    path = sc._jvm.org.apache.hadoop.fs.Path(location)  # noqa: SLF001
-    if not path.getFileSystem(sc._jsc.hadoopConfiguration()).exists(path):  # noqa: SLF001
+    if not path_exists(spark, location):
         return None
     fmt = sink.get("format", "parquet")
     reader = spark.read.format(fmt)
-    if fmt in _BY_NAME_FORMATS:
+    if fmt == "parquet":
         reader = reader.schema(_SINK_ID_SCHEMA)
     return reader.load(location).select("request_id")
 

@@ -143,13 +143,14 @@ class PipelineOrchestrator:
 
     # -- sink ----------------------------------------------------------------
     def sink_spec(self) -> dict:
-        """The configured bronze sink as a plain dict. Every run that writes
-        needs one: without it the batch loop's anti-join sees nothing done
-        and would re-send the whole source on every attempt."""
+        """The configured bronze sink as a plain dict, ``name`` qualified by
+        its namespace. Every run that writes needs one: without it the batch
+        loop's anti-join sees nothing done and would re-send the whole
+        source on every attempt."""
         sink = self.config.tables.sink
         if sink.name is None and sink.location is None:
             raise ValueError("a run that writes bronze requires tables.sink.{name,location}")
-        return sink.model_dump()
+        return {**sink.model_dump(), "name": sink.full_name}
 
     # -- run -----------------------------------------------------------------
     def run(

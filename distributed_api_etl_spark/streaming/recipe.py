@@ -91,6 +91,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from distributed_api_etl_spark.core.table_manager import swap_in_rewrite, swap_scratch
 from distributed_api_etl_spark.functions.portable import portable_hash32
 
 
@@ -190,11 +191,16 @@ class RecipeStore:
 
     @staticmethod
     def _heal(d: str) -> None:
-        # a crash between compact()'s two renames leaves the data under
-        # d__old and nothing at d: restore it (the compaction is lost, the
-        # data is not)
-        old = d + "__old"
-        if not os.path.isdir(d) and os.path.isdir(old):
+        # a crash between compact()'s two renames leaves the data parked at
+        # the swap's old name and nothing at d: restore it (the compaction
+        # is lost, the data is not). Next to a live d, the old copy is a
+        # finished swap's leftover.
+        old = swap_scratch(d, "compact", "old")
+        if not os.path.isdir(old):
+            return
+        if os.path.isdir(d):
+            shutil.rmtree(old)
+        else:
             os.rename(old, d)
 
     @staticmethod
@@ -274,9 +280,9 @@ class RecipeStore:
 
         Run BETWEEN micro-batches (foreachBatch is serial per query, so any
         point outside the sink callback is a committed boundary). Crash
-        contract: the rewrite lands in a tmp dir, then two renames swap it
-        in; a crash between the renames is healed on the next read
-        (:meth:`_heal` — the compaction is lost, the store is not).
+        contract: the rewrite is swapped in by the table manager's
+        two-rename swap; a crash between the renames is healed on the next
+        read (:meth:`_heal` — the compaction is lost, the store is not).
         Uncommitted partials are discarded first so a crashed attempt's
         rows can never be folded into the committed baseline. Returns a
         per-dir {files_before, files_after} census."""
@@ -293,14 +299,9 @@ class RecipeStore:
                 for p in inputs
             )
             df = spark.read.parquet(*inputs)
-            tmp = d + "__compact_tmp"
-            shutil.rmtree(tmp, ignore_errors=True)
-            df.coalesce(target_files).write.parquet(tmp)
-            old = d + "__old"
-            shutil.rmtree(old, ignore_errors=True)
-            os.rename(d, old)
-            os.rename(tmp, d)
-            shutil.rmtree(old, ignore_errors=True)
+            swap_in_rewrite(
+                spark, d, "compact", df.coalesce(target_files).write.mode("overwrite").parquet
+            )
             census[os.path.basename(d)] = {
                 "files_before": files_before,
                 "files_after": len(

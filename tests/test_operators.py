@@ -283,7 +283,7 @@ def test_connected_components_driver_equals_loop(spark):
     """The size-gated driver-side union-find (r16: one bounded collect
     instead of 3-8 label-propagation shuffle rounds for small dup graphs)
     must produce byte-identical labels to the distributed loop, which
-    ``driver_max_edges=0`` forces."""
+    ``driver_max_rows=0`` forces."""
     import random
 
     from distributed_api_etl_spark.operators.graph import connected_components
@@ -302,7 +302,7 @@ def test_connected_components_driver_equals_loop(spark):
         }
         loop = {
             r.node: r.cluster_id
-            for r in connected_components(df, driver_max_edges=0).collect()
+            for r in connected_components(df, driver_max_rows=0).collect()
         }
         assert drv == loop, f"trial {trial}: driver CC diverged from loop"
     # string ids: UTF-8 byte order == code-point order, so the driver min
@@ -315,7 +315,7 @@ def test_connected_components_driver_equals_loop(spark):
     # schema parity with the loop (consumers join on node/cluster_id)
     assert (
         connected_components(sdf).schema
-        == connected_components(sdf, driver_max_edges=0).schema
+        == connected_components(sdf, driver_max_rows=0).schema
     )
 
 
@@ -337,8 +337,8 @@ def test_connected_components_nonconvergence_falls_back(spark):
     def rows(df):
         return sorted((tuple(r) for r in df.collect()), key=repr)
 
-    got = rows(connected_components(chain, max_iter=3, driver_max_edges=0))
-    assert got == rows(connected_components(chain, driver_max_edges=0))
+    got = rows(connected_components(chain, max_iter=3, driver_max_rows=0))
+    assert got == rows(connected_components(chain, driver_max_rows=0))
     labels = dict(got)
     assert {i: labels[i] for i in range(n + 1)} == {i: 0 for i in range(n + 1)}
     assert (labels[100], labels[None], labels[50], labels[51]) == (100, None, 50, 50)
@@ -2472,6 +2472,70 @@ def test_pq_train_null_id_takes_distributed_loop(spark, sf_dir):
     )
 
 
+def test_vector_matrix_equals_per_row_lists():
+    """The Arrow list -> float64 matrix step equals the per-row
+    ``list(v[:w])`` form it replaces, on null, short, exact and long rows
+    of float32 and float64 lists, on a sliced (offset) array and on a
+    chunked array."""
+    import numpy as np
+    import pyarrow as pa
+
+    from distributed_api_etl_spark.operators.driver_local import vector_matrix
+
+    vals = [[1.5, 2.25, 3.0], None, [4.0], [0.1, 0.2, 0.3, 0.4], [], [7.0, 8.0]]
+    for typ in (pa.float32(), pa.float64()):
+        arr = pa.array(vals, pa.list_(typ))
+        rows_all = arr.to_pylist()  # float32 values as the column holds them
+        chunked = pa.chunked_array([arr.slice(0, 2), arr.slice(2)])
+        for a, rows in (
+            (arr, rows_all),
+            (arr.slice(1), rows_all[1:]),
+            (chunked, rows_all),
+        ):
+            for w in (1, 2, 3):
+                ok, V = vector_matrix(a, w)
+                want_ok = [v is not None and len(v) >= w for v in rows]
+                want = np.array(
+                    [list(v[:w]) for v, k in zip(rows, want_ok) if k], dtype=np.float64
+                ).reshape(-1, w)
+                assert ok.tolist() == want_ok
+                assert V.dtype == np.float64 and V.shape == want.shape
+                assert np.array_equal(V, want)
+
+
+def test_pq_train_byte_bound_takes_distributed_loop(spark, monkeypatch):
+    """The driver gate caps bytes as well as rows: a corpus under the row
+    cap whose estimated size (rows x 8*(dim+1) B) exceeds
+    DRIVER_MAX_BYTES never reaches the driver Lloyd's, and trains the
+    same codebook as the forced distributed loop."""
+    from distributed_api_etl_spark.operators import driver_local
+    from distributed_api_etl_spark.operators import similarity as sim
+
+    base = [float(x) for x in range(8)]
+    emb = spark.createDataFrame(
+        [(i, [v + (i % 5) for v in base]) for i in range(24)],
+        "vec_id bigint, embedding array<double>",
+    )
+    calls = []
+    driver = sim._pq_train_driver
+
+    def spy(*a, **k):
+        calls.append(1)
+        return driver(*a, **k)
+
+    def rows(df):
+        return sorted((r.s, r.code, tuple(r.cw)) for r in df.collect())
+
+    monkeypatch.setattr(sim, "_pq_train_driver", spy)
+    kw = dict(m=2, k_codes=4, iters=2)
+    assert rows(sim.pq_train(emb, "vec_id", "embedding", 8, **kw))
+    assert len(calls) == 1  # the default bound keeps this corpus on the driver
+    monkeypatch.setattr(driver_local, "DRIVER_MAX_BYTES", 24 * 8 * (8 + 1) - 1)
+    got = rows(sim.pq_train(emb, "vec_id", "embedding", 8, **kw))
+    assert len(calls) == 1
+    assert got == rows(sim.pq_train(emb, "vec_id", "embedding", 8, driver_max_rows=0, **kw))
+
+
 def test_pq_encode_kernel_equals_hof(spark, sf_dir):
     """The numpy PQ encode kernel (r16) must emit the exact codes of the
     m interpreted argmin folds it replaces — real corpus + a trained
@@ -2846,6 +2910,26 @@ def test_gopher_combined_gate_arrow_equals_hof(spark, sf_dir):
         )
         assert a.columns.tolist() == b.columns.tolist()
         assert a.equals(b), (a.compare(b) if a.shape == b.shape else (a, b))
+
+
+def test_gopher_combined_gate_carry_guard_names_only_outputs(spark):
+    """The carry guard refuses only names the gate outputs (the id and
+    gopher_flags / rep_flags / keep): a carried column named like a
+    per-row statistic passes through unchanged."""
+    import pytest
+
+    from distributed_api_etl_spark.operators.text import gopher_combined_gate
+
+    df = spark.createDataFrame(
+        [(1, "the cat sat on the mat", 7)], "doc_id long, text string, n_words int"
+    )
+    out = gopher_combined_gate(df, "doc_id", "text", carry=("n_words",))
+    assert out.columns == ["doc_id", "gopher_flags", "rep_flags", "keep", "n_words"]
+    assert [r.n_words for r in out.collect()] == [7]
+    with pytest.raises(ValueError, match="keep"):
+        gopher_combined_gate(
+            df.withColumnRenamed("n_words", "keep"), "doc_id", "text", carry=("keep",)
+        )
 
 
 def test_gopher_repetition_arrow_equals_hof(spark, sf_dir):

@@ -209,6 +209,27 @@ def test_partitioned_sink_rerun_is_noop(spark, source, tmp_path):
     assert spark.read.parquet(loc).count() == 100
 
 
+def test_namespaced_sink_lands_in_its_namespace(spark, source, tmp_path):
+    """``tables.sink.namespace`` qualifies the sink table: the rows land in
+    ``ns.t``, not ``default.t``, and a re-run finds them there and
+    processes 0 rows."""
+    ns, t = "bronze_ns", "bronze_named"
+    spark.sql(f"CREATE DATABASE {ns} LOCATION '{tmp_path / 'ns.db'}'")
+    try:
+        cfg = base_config()
+        cfg["tables"] = {"sink": {"namespace": ns, "name": t}}
+        r1 = run_pipeline(spark, cfg, source_df=source, source_id="tracking_id")
+        assert r1.stats.processed_rows == 100
+        assert spark.table(f"{ns}.{t}").count() == 100
+        assert not spark.catalog.tableExists(f"default.{t}")
+        r2 = run_pipeline(spark, cfg, source_df=source, source_id="tracking_id")
+        assert r2.stats.processed_rows == 0
+        assert spark.table(f"{ns}.{t}").count() == 100
+    finally:
+        spark.sql(f"DROP DATABASE IF EXISTS {ns} CASCADE")
+        spark.sql(f"DROP TABLE IF EXISTS default.{t}")
+
+
 def test_dry_run_num_partitions_binds_on_multipartition_source(spark):
     """`execution.num_partitions: 1` must hold even when the SOURCE arrives
     with many partitions (VERDICT r9 #2): the dry_run branch used to skip

@@ -1120,6 +1120,34 @@ def test_recipe_compaction_between_batches_is_noop(spark, tmp_path):
     assert all(r[0] != 203 for r in got["manifest"])  # standing-wins held
 
 
+def test_recipe_store_heals_a_crash_between_the_swap_renames(spark, tmp_path):
+    """A compaction that crashed between its two renames leaves a store
+    dir parked at ``<dir>__compact_old`` and nothing at ``<dir>``: the
+    next read restores it and returns the same rows. A parked copy next
+    to a live dir (the swap finished, its delete did not) is dropped."""
+    import os
+    import shutil
+
+    from distributed_api_etl_spark.streaming.recipe import (
+        RecipeStore,
+        process_recipe_batch,
+    )
+
+    b1, _ = _recipe_eo_batches(spark)
+    store = RecipeStore(str(tmp_path / "heal"))
+    store.reset()
+    process_recipe_batch(b1, store, _recipe_eo_cfg(), 0)
+    want = sorted(tuple(r) for r in store.read_manifest(spark).collect())
+    assert want
+    parked = store.manifest_dir + "__compact_old"
+    os.rename(store.manifest_dir, parked)
+    assert sorted(tuple(r) for r in store.read_manifest(spark).collect()) == want
+    assert os.path.isdir(store.manifest_dir) and not os.path.exists(parked)
+    shutil.copytree(store.manifest_dir, parked)
+    assert sorted(tuple(r) for r in store.read_manifest(spark).collect()) == want
+    assert not os.path.exists(parked)
+
+
 def test_recipe_stream_restart_from_checkpoint(spark, tmp_path):
     """END-TO-END restart: the sink crashes AFTER batch 0's commit (so the
     checkpoint never records batch 0 as done), the stream is restarted on
