@@ -262,8 +262,7 @@ class RetryConfig(BaseModel):
 
 
 class MiddlewareSpec(BaseModel):
-    type: str
-    options: dict[str, Any] = Field(default_factory=dict)
+    type: Literal["logging", "timing", "worker_identity"]
 
 
 class TransportConfig(BaseModel):

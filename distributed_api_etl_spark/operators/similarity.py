@@ -1422,6 +1422,8 @@ def pq_train(
     the final collected rows (exact doubles), so consumers read a 1-line
     LocalRelation instead of the whole training chain.
     """
+    if m < 1 or dim < m:
+        raise ValueError(f"pq_train needs 1 <= m <= dim, got m={m}, dim={dim}")
     spark = emb.sparkSession
     d_sub = dim // m
     valid = emb.select(id_col, vec_col).where(

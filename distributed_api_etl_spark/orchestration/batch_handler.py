@@ -63,6 +63,15 @@ class BronzeBatchHandler:
             return
         self._write(result)
 
+    def done_ids(self) -> DataFrame | None:
+        """The ``request_id`` of every row this handler's target already
+        holds, or ``None`` when it holds none: the sink's ids, or in a dry
+        run the ids of the batches collected so far."""
+        if self._sink is not None:
+            return read_sink_ids(self._spark, self._sink)
+        out = self.result_df()
+        return None if out is None else out.select("request_id")
+
     def _write(self, result: DataFrame) -> None:
         sink = self._sink
         fmt = sink.get("format", "parquet")

@@ -1,4 +1,6 @@
 """Idempotent batch engine: anti-join diff -> hash batches -> driver retry.
+The one per-batch loop of the batch run, the dry run and each streaming
+micro-batch.
 
 Reference parity: src/orchestration/batch_processor.py, with the fixes
 SURVEY.md calls for:
@@ -65,12 +67,11 @@ class BatchProcessor:
         self.id_column = id_column
 
     @staticmethod
-    def remaining(source_df: DataFrame, sink_df: DataFrame | None) -> DataFrame:
-        """Rows not yet in the sink — the idempotency diff (left_anti)."""
-        if sink_df is None:
+    def remaining(source_df: DataFrame, done: DataFrame | None) -> DataFrame:
+        """Rows whose id is not in ``done`` — the idempotency diff (left_anti)."""
+        if done is None:
             return source_df
-        processed = sink_df.select("request_id")
-        return source_df.join(processed, on="request_id", how="left_anti")
+        return source_df.join(done.select("request_id"), on="request_id", how="left_anti")
 
     def batches(self, df: DataFrame, total: int) -> Iterator[tuple[int, DataFrame]]:
         """Slice ``df`` (``total`` rows) into ``ceil(total / batch_size)``
@@ -91,33 +92,27 @@ class BatchProcessor:
                 df.where(F.col("batch_id") == batch_id).drop("batch_id").repartition(parts)
             )
 
-    def process_once(
-        self, source_df: DataFrame, handler: Callable[[DataFrame], None]
-    ) -> BatchRunStats:
-        """One pass over the source with no sink and no retry (the dry run):
-        the first failing batch raises."""
-        total = count_source(source_df, self.id_column)
-        stats = BatchRunStats(total_rows=total, processed_rows=total, attempts=1)
-        for _, batch_df in self.batches(source_df, total):
-            handler(batch_df)
-            stats.batches_ok += 1
-        return stats
-
     def process(
         self,
         source_df: DataFrame,
         handler: Callable[[DataFrame], None],
-        sink_reader: Callable[[], DataFrame | None],
+        done_ids: Callable[[], DataFrame | None],
     ) -> BatchRunStats:
+        """The one per-batch loop of every ingest run (batch, dry run and
+        each streaming micro-batch): diff ``source_df`` against
+        ``done_ids()`` (the ``request_id`` of every row already landed, or
+        ``None`` when nothing has), hand each hash batch of the rest to
+        ``handler``, and retry failed batches on the next attempt until a
+        re-read of ``done_ids()`` confirms nothing is left."""
         stats = BatchRunStats()
         stats.total_rows = count_source(source_df, self.id_column)
         initial_remaining: int | None = None
         for attempt in range(1, self.max_attempts + 1):
             stats.attempts = attempt
-            sink_df = sink_reader()
-            todo = self.remaining(source_df, sink_df)
-            # no sink yet: todo IS source_df, already counted above
-            total = stats.total_rows if sink_df is None else todo.count()
+            done = done_ids()
+            todo = self.remaining(source_df, done)
+            # nothing landed yet: todo IS source_df, already counted above
+            total = stats.total_rows if done is None else todo.count()
             if initial_remaining is None:
                 initial_remaining = total
             if total == 0:
@@ -136,7 +131,7 @@ class BatchProcessor:
                         raise PipelineExecutionError(
                             f"batch {batch_id} failed on final attempt: {exc}"
                         ) from exc
-        leftover = self.remaining(source_df, sink_reader()).count()
+        leftover = self.remaining(source_df, done_ids()).count()
         stats.processed_rows = max(0, (initial_remaining or 0) - leftover)
         if leftover > 0:
             raise PipelineExecutionError(

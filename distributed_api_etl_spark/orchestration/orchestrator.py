@@ -4,7 +4,8 @@ Entry point parity with the reference (run_pipeline, orchestrator.py:246-261):
 load/validate config, resolve source (catalog table XOR caller DataFrame),
 normalize the id column to ``request_id`` and prune to the columns the request
 builder needs (``prepare_source``, shared with the streaming front-end), then
-hand off to the batch engine.
+hand off to the batch engine through the one step every run shares
+(``_ingest_step``).
 
 Compile step: the validated pydantic tree is flattened to plain dicts —
 the only thing that crosses the driver->executor pickle boundary. No
@@ -13,18 +14,18 @@ SparkSession, no sockets, no live tokens in the closure (SURVEY §7.4 #3).
 
 from __future__ import annotations
 
+import threading
+from collections.abc import Callable
 from dataclasses import dataclass
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery, StreamingQueryListener
 
 from distributed_api_etl_spark.config.loader import load_config
 from distributed_api_etl_spark.config.models import PipelineConfig, validate_dataframe
-from distributed_api_etl_spark.orchestration.batch_handler import (
-    BronzeBatchHandler,
-    read_sink_ids,
-)
+from distributed_api_etl_spark.orchestration.batch_handler import BronzeBatchHandler
 from distributed_api_etl_spark.orchestration.batch_processor import (
     BatchProcessor,
     BatchRunStats,
@@ -152,6 +153,30 @@ class PipelineOrchestrator:
             raise ValueError("a run that writes bronze requires tables.sink.{name,location}")
         return {**sink.model_dump(), "name": sink.full_name}
 
+    # -- the one ingest step -------------------------------------------------
+    def _ingest_step(
+        self, source_id: str | None, sink: dict | None, fixed_time: str | None = None
+    ) -> Callable[[DataFrame], PipelineResult]:
+        """Compile the plan once and return the step that lands one source
+        frame: ``BatchProcessor.process`` over a ``BronzeBatchHandler``. A
+        batch or dry run calls it once, a stream once per micro-batch.
+        Called after the token RPC is up, so the plan carries its URL."""
+        compiled = self.compile(fixed_time=fixed_time)
+        ex = self.config.execution
+        processor = BatchProcessor(
+            batch_size=ex.batch_size,
+            num_partitions=ex.num_partitions,
+            max_attempts=ex.max_attempts,
+            id_column=source_id or self.config.tables.source.id_column,
+        )
+
+        def step(source: DataFrame) -> PipelineResult:
+            handler = BronzeBatchHandler(self.spark, compiled, sink)
+            stats = processor.process(source, handler.process, handler.done_ids)
+            return PipelineResult(stats=stats, bronze_df=handler.result_df())
+
+        return step
+
     # -- run -----------------------------------------------------------------
     def run(
         self,
@@ -164,25 +189,80 @@ class PipelineOrchestrator:
         sink = None if dry_run else self.sink_spec()
         self._start_auth_runtime()
         try:
-            compiled = self.compile(fixed_time=fixed_time)
-            handler = BronzeBatchHandler(self.spark, compiled, sink)
-            ex = self.config.execution
-            processor = BatchProcessor(
-                batch_size=ex.batch_size,
-                num_partitions=ex.num_partitions,
-                max_attempts=ex.max_attempts,
-                id_column=source_id or self.config.tables.source.id_column,
-            )
-            if dry_run:
-                # nothing is persisted, so there is nothing to resume from
-                stats = processor.process_once(source, handler.process)
-            else:
-                stats = processor.process(
-                    source, handler.process, lambda: read_sink_ids(self.spark, sink)
-                )
-            return PipelineResult(stats=stats, bronze_df=handler.result_df())
+            return self._ingest_step(source_id, sink, fixed_time)(source)
         finally:
             self._stop_auth_runtime()
+
+    def run_stream(
+        self,
+        source: DataFrame,
+        source_id: str,
+        checkpoint_dir: str,
+        trigger: dict[str, Any] | None = None,
+    ) -> StreamingQuery:
+        """Start ``source`` (a streaming frame after ``prepare_source``) as a
+        query whose every micro-batch goes through the batch run's step.
+        The token RPC is up before the query starts and stops when the query
+        terminates, normally or with an exception."""
+        sink = self.sink_spec()
+        self._start_auth_runtime()
+        listener = _OnTermination(self.spark, self._stop_auth_runtime)
+        try:
+            step = self._ingest_step(source_id, sink)
+            writer = (
+                source.writeStream.foreachBatch(lambda df, _batch_id: step(df))
+                .option("checkpointLocation", checkpoint_dir)
+                .outputMode("update")
+                .trigger(**(trigger or {"availableNow": True}))
+            )
+            self.spark.streams.addListener(listener)
+            query = writer.start()
+        except BaseException:
+            listener.close()
+            raise
+        listener.bind(query.id)
+        return query
+
+
+class _OnTermination(StreamingQueryListener):
+    """Removes itself and calls ``stop`` when the bound query terminates.
+    It is registered before ``start()`` and bound to the query's id after:
+    a query may end before ``start()`` returns, so ids that end before the
+    bind are remembered."""
+
+    def __init__(self, spark: SparkSession, stop: Callable[[], None]) -> None:
+        self._spark = spark
+        self._stop = stop
+        self._lock = threading.Lock()
+        self._query_id: str | None = None
+        self._ended: set[str] = set()
+
+    def bind(self, query_id: str) -> None:
+        with self._lock:
+            self._query_id = query_id
+            ended = query_id in self._ended
+        if ended:
+            self.close()
+
+    def close(self) -> None:
+        self._spark.streams.removeListener(self)
+        self._stop()
+
+    def onQueryTerminated(self, event) -> None:  # noqa: N802 - Spark API
+        query_id = str(event.id)
+        with self._lock:
+            if self._query_id is None:
+                self._ended.add(query_id)
+                return
+            if query_id != self._query_id:
+                return
+        self.close()
+
+    def onQueryStarted(self, event) -> None:  # noqa: N802
+        pass
+
+    def onQueryProgress(self, event) -> None:  # noqa: N802
+        pass
 
 
 def run_pipeline(

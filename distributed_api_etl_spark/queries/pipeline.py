@@ -225,8 +225,9 @@ def api_pipeline_paged(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_api_pipeline_bronze(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SAME HTTP pipeline as api_pipeline_bronze, driven as a Structured
     Streaming foreachBatch job: customer rows arrive as a file stream, each
-    micro-batch reuses the compiled partition executor + bronze writer, and
-    offsets/checkpoints give exactly-once source progress (restart test in
+    micro-batch goes through the batch run's loop (BatchProcessor.process
+    with the same compiled plan and bronze handler), and offsets/checkpoints
+    give exactly-once source progress (restart and redelivery tests in
     tests/test_streaming.py). The graded projection reads the parquet SINK
     back — proving the streamed bronze equals the batch pipeline's output
     row for row."""
@@ -296,8 +297,8 @@ def api_pipeline_rate_limited(spark: SparkSession, sf_dir: str) -> DataFrame:
     stamp lands a few microseconds after the acquire it observes) with
     ~75 ms of margin on the limited side. Aggregation is one tiny agg on
     a 25-row frame; monotonic stamps never compare across partitions:
-    ``execution.num_partitions: 1`` is applied by the orchestrator's
-    dry_run branch via the same repartition as BatchProcessor.process
+    ``execution.num_partitions: 1`` is applied to the dry run by
+    BatchProcessor.process's repartition, as to every run
     (tests/test_pipeline_e2e.py::test_dry_run_num_partitions_binds_on_multipartition_source
     proves the invariant survives a multi-partition source)."""
     from distributed_api_etl_spark.orchestration import run_pipeline

@@ -1,17 +1,21 @@
 """Structured Streaming front-end for the API-ETL pipeline.
 
-The reference's batch engine is morally a micro-batch stream (anti-join diff
--> process -> append, repeated). The Spark-native form IS Structured
-Streaming: ``readStream`` source -> ``foreachBatch`` that reuses the exact
-same compiled partition executor + bronze writer per micro-batch, with
-checkpointed offsets replacing the anti-join for incrementality (the
-anti-join remains as a safety net for at-least-once sinks).
+The batch engine is morally a micro-batch stream (anti-join diff -> process
+-> append, repeated); the Spark-native form is Structured Streaming: a
+``readStream`` source whose ``foreachBatch`` runs the batch run's own step
+(``PipelineOrchestrator.run_stream``). Each micro-batch goes through
+``BatchProcessor.process`` with the same compiled plan and bronze handler a
+batch run uses: the null-id check, the anti-join against the sink, hash
+batches repartitioned by the ``num_partitions`` rule, driver retries and the
+confirming re-read. OAuth2 workers ask the driver's token RPC, which runs
+from before the query starts until it terminates.
 
 100 TB / continuous-ingest design notes:
-  * offsets+checkpoint give exactly-once *source* progress; the sink stays
-    append + request_id dedup on read (or Delta MERGE when available);
-  * per-micro-batch repartition keeps the HTTP stage at the configured
-    fan-out regardless of source partitioning;
+  * offsets + checkpoint give exactly-once *source* progress, and the
+    anti-join makes a redelivered micro-batch (``foreachBatch`` is
+    at-least-once) send and land nothing twice;
+  * each micro-batch reads the sink's ``request_id`` column to diff against
+    it, as each attempt of a batch run does;
   * rate limiting is per partition x per micro-batch, so cluster-wide RPS =
     max_requests_per_second x num_partitions.
 """
@@ -23,7 +27,6 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from distributed_api_etl_spark.config.models import PipelineConfig
-from distributed_api_etl_spark.orchestration.batch_handler import BronzeBatchHandler
 from distributed_api_etl_spark.orchestration.orchestrator import (
     PipelineOrchestrator,
     prepare_source,
@@ -47,18 +50,5 @@ def run_streaming_pipeline(
     {"processingTime": "10 seconds"} for continuous micro-batches.
     """
     orch = PipelineOrchestrator.from_config(spark, config)
-    handler = BronzeBatchHandler(spark, orch.compile(), orch.sink_spec())
     source = prepare_source(stream_df, orch.config, source_id)
-    n = orch.config.execution.num_partitions or spark.sparkContext.defaultParallelism
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        handler.process(batch_df.repartition(n))
-
-    writer = (
-        source.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    trigger = trigger or {"availableNow": True}
-    writer = writer.trigger(**trigger)
-    return writer.start()
+    return orch.run_stream(source, source_id, checkpoint_dir, trigger)

@@ -125,6 +125,17 @@ def test_merge_requires_delta():
         )
 
 
+def test_unknown_middleware_rejected():
+    """A misspelled middleware name fails validation instead of silently
+    leaving that middleware out of the chain."""
+    with pytest.raises(ValueError, match="timng"):
+        PipelineConfig.model_validate({**MINIMAL, "middleware": [{"type": "timng"}]})
+    cfg = PipelineConfig.model_validate(
+        {**MINIMAL, "middleware": [{"type": t} for t in ("logging", "timing", "worker_identity")]}
+    )
+    assert [m.type for m in cfg.middleware] == ["logging", "timing", "worker_identity"]
+
+
 def test_all_example_configs_load(monkeypatch):
     """Every shipped example validates (secrets resolved from env)."""
     import glob

@@ -2536,6 +2536,22 @@ def test_pq_train_byte_bound_takes_distributed_loop(spark, monkeypatch):
     assert got == rows(sim.pq_train(emb, "vec_id", "embedding", 8, driver_max_rows=0, **kw))
 
 
+def test_pq_train_rejects_fewer_dims_than_subspaces(spark):
+    """``dim < m`` leaves each subspace zero components wide; it fails at
+    entry with a clear error, before any Spark job runs."""
+    import pytest
+
+    from distributed_api_etl_spark.operators.similarity import pq_train
+
+    emb = spark.createDataFrame([(1, [1.0, 2.0])], "vec_id bigint, embedding array<double>")
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    for dim, m in ((2, 4), (2, 0)):
+        with pytest.raises(ValueError, match=f"m={m}, dim={dim}"):
+            pq_train(emb, "vec_id", "embedding", dim, m=m)
+    assert set(tracker.getJobIdsForGroup(None)) == before
+
+
 def test_pq_encode_kernel_equals_hof(spark, sf_dir):
     """The numpy PQ encode kernel (r16) must emit the exact codes of the
     m interpreted argmin folds it replaces — real corpus + a trained

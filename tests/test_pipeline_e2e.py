@@ -52,6 +52,35 @@ def test_dry_run_returns_typed_bronze(spark, source):
     assert result.stats.total_rows == 100
 
 
+def test_dry_run_retries_a_failed_batch(spark, source, monkeypatch):
+    """The dry run goes through the batch run's loop: a batch whose handler
+    raises once is retried on the next attempt, diffed against the ids
+    already collected, so each id lands exactly once in ``bronze_df``."""
+    from distributed_api_etl_spark.orchestration.batch_handler import (
+        BronzeBatchHandler,
+    )
+
+    process = BronzeBatchHandler.process
+    calls = []
+
+    def fail_second_batch_once(self, batch_df):
+        calls.append(1)
+        if len(calls) == 2:
+            raise RuntimeError("injected batch failure")
+        process(self, batch_df)
+
+    monkeypatch.setattr(BronzeBatchHandler, "process", fail_second_batch_once)
+    result = run_pipeline(spark, base_config(), source_df=source,
+                          source_id="tracking_id", dry_run=True)
+    ids = [r.request_id for r in result.bronze_df.select("request_id").collect()]
+    assert sorted(ids) == sorted(str(i) for i in range(100))
+    # attempt 1 fails the batch, attempt 2 re-sends it, attempt 3 finds
+    # nothing left (a clean run reports 2: the send and the empty diff)
+    assert result.stats.attempts == 3
+    assert result.stats.errors == ["attempt 1 batch 1: injected batch failure"]
+    assert result.stats.processed_rows == 100
+
+
 def test_sink_write_and_idempotent_rerun(spark, source, tmp_path):
     loc = str(tmp_path / "bronze")
     cfg = base_config(sink_location=loc)

@@ -131,6 +131,187 @@ def test_streaming_pipeline_binds_mapping_on_id_column(spark, tmp_path, stream_s
     assert len(streamed) == 50
 
 
+@pytest.fixture
+def api():
+    from tests.http_server import MockApiServer
+
+    srv = MockApiServer().start()
+    yield srv
+    srv.stop()
+
+
+def _http_cfg(api, sink, path="/ok", **execution):
+    return {
+        "endpoint": {
+            "method": "GET",
+            "url": f"{api.base_url}{path}",
+            "param_mapping": [{"endpoint_param": "id", "source_column": "request_id"}],
+        },
+        "transport": {"engine": "requests", "base_timeout": 5.0},
+        "execution": {"num_partitions": 2, "max_concurrent_requests": 8, **execution},
+        "tables": {"sink": {"location": sink, "format": "parquet"}},
+    }
+
+
+def test_streaming_redelivered_micro_batch_is_not_resent(
+    spark, tmp_path, stream_source, api, monkeypatch
+):
+    """foreachBatch is at-least-once: a query that dies after micro-batch
+    0's sink append redelivers that batch when it restarts on the same
+    checkpoint. The micro-batch goes through the batch run's anti-join
+    against the sink, so the redelivery sends and lands nothing: one row
+    and one request per id."""
+    from pyspark.errors import StreamingQueryException
+
+    from distributed_api_etl_spark.orchestration.batch_handler import (
+        BronzeBatchHandler,
+    )
+
+    process = BronzeBatchHandler.process
+    crashed = []
+
+    def crash_after_append(self, batch_df):
+        process(self, batch_df)
+        if not crashed:
+            crashed.append(1)
+            raise RuntimeError("crash after the sink append")
+
+    monkeypatch.setattr(BronzeBatchHandler, "process", crash_after_append)
+    sink, ckpt = str(tmp_path / "bronze"), str(tmp_path / "ckpt")
+    cfg = _http_cfg(api, sink, max_attempts=1)
+    q = run_streaming_pipeline(
+        spark, cfg, stream_source, source_id="tracking_id", checkpoint_dir=ckpt
+    )
+    with pytest.raises(StreamingQueryException, match="crash after the sink append"):
+        q.awaitTermination(120)
+    assert spark.read.parquet(sink).count() == 50  # the append had landed
+
+    q2 = run_streaming_pipeline(
+        spark, cfg, stream_source, source_id="tracking_id", checkpoint_dir=ckpt
+    )
+    assert q2.awaitTermination(120)
+    bronze = spark.read.parquet(sink)
+    assert bronze.count() == 50
+    assert bronze.select("request_id").distinct().count() == 50
+    assert api.request_count == 50
+
+
+def test_streaming_oauth2_uses_the_driver_token_rpc(
+    spark, tmp_path, stream_source, api, monkeypatch
+):
+    """An OAuth2 stream asks the driver's token RPC, as a batch run does:
+    the RPC starts before the first micro-batch and stops once when the
+    query terminates, also when a micro-batch fails or the query cannot
+    start; the token endpoint sees the driver's one grant."""
+    import time
+
+    from pyspark.errors import StreamingQueryException
+
+    from distributed_api_etl_spark.auth.rpc import RpcBootstrapper
+    from distributed_api_etl_spark.orchestration.batch_handler import (
+        BronzeBatchHandler,
+    )
+    from distributed_api_etl_spark.orchestration.batch_processor import BatchProcessor
+
+    events = []
+    for owner, attr in ((RpcBootstrapper, "start"), (RpcBootstrapper, "stop"),
+                        (BatchProcessor, "process")):
+        def spy(*a, _fn=getattr(owner, attr), _attr=attr, **k):
+            events.append(_attr)
+            return _fn(*a, **k)
+
+        monkeypatch.setattr(owner, attr, spy)
+
+    def await_stop():
+        deadline = time.monotonic() + 30
+        while "stop" not in events and time.monotonic() < deadline:
+            time.sleep(0.05)
+
+    sink = str(tmp_path / "bronze")
+    cfg = _http_cfg(api, sink, path="/secured")
+    cfg["auth"] = {
+        "type": "oauth2_client_credentials",
+        "token_url": f"{api.base_url}/oauth/token",
+        "client_id": "cid",
+        "client_secret": "s3cret",
+    }
+    q = run_streaming_pipeline(
+        spark, cfg, stream_source, source_id="tracking_id",
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    assert q.awaitTermination(120)
+    await_stop()
+    assert events == ["start", "process", "stop"]
+    assert api.token_grants == 1
+    bronze = spark.read.parquet(sink)
+    assert bronze.where(F.col("status_code") == 200).count() == 50
+
+    def fail(self, batch_df):
+        raise RuntimeError("micro-batch failure")
+
+    events.clear()
+    monkeypatch.setattr(BronzeBatchHandler, "process", fail)
+    failing = _http_cfg(api, str(tmp_path / "bronze_failing"), path="/secured",
+                        max_attempts=1)
+    q = run_streaming_pipeline(
+        spark, {**failing, "auth": cfg["auth"]}, stream_source, source_id="tracking_id",
+        checkpoint_dir=str(tmp_path / "ckpt_failing"),
+    )
+    with pytest.raises(StreamingQueryException, match="micro-batch failure"):
+        q.awaitTermination(120)
+    await_stop()
+    assert events == ["start", "process", "stop"]
+
+    events.clear()  # a query that cannot start stops the RPC at once
+    batch_df = spark.range(3).select(F.col("id").cast("string").alias("tracking_id"))
+    with pytest.raises(Exception, match="writeStream"):
+        run_streaming_pipeline(spark, cfg, batch_df, source_id="tracking_id",
+                               checkpoint_dir=str(tmp_path / "ckpt_batch"))
+    assert events == ["start", "stop"]
+
+
+def test_stream_termination_before_bind_still_stops():
+    """The termination listener is registered before ``start()`` and bound
+    to the query's id after it returns: a query that ends in between still
+    stops the token RPC, and other queries' terminations never do."""
+    from types import SimpleNamespace
+
+    from distributed_api_etl_spark.orchestration.orchestrator import _OnTermination
+
+    removed, stops = [], []
+    spark = SimpleNamespace(streams=SimpleNamespace(removeListener=removed.append))
+    early = _OnTermination(spark, lambda: stops.append("early"))
+    early.onQueryTerminated(SimpleNamespace(id="other"))
+    early.onQueryTerminated(SimpleNamespace(id="q1"))
+    early.bind("q1")
+    assert stops == ["early"] and removed == [early]
+
+    late = _OnTermination(spark, lambda: stops.append("late"))
+    late.bind("q2")
+    late.onQueryTerminated(SimpleNamespace(id="other"))
+    assert stops == ["early"]
+    late.onQueryTerminated(SimpleNamespace(id="q2"))
+    assert stops == ["early", "late"] and removed == [early, late]
+
+
+def test_streaming_null_id_fails_before_any_request(spark, tmp_path, api):
+    """A streamed micro-batch holding a null id fails the query before any
+    request, as a batch run does (test_null_ids_fail_before_any_request)."""
+    from pyspark.errors import StreamingQueryException
+
+    src, sink = str(tmp_path / "null_src"), tmp_path / "bronze"
+    spark.createDataFrame([("a",), (None,), ("c",)], "tracking_id string").write.parquet(src)
+    stream = spark.readStream.schema("tracking_id string").parquet(src)
+    q = run_streaming_pipeline(
+        spark, _http_cfg(api, str(sink)), stream, source_id="tracking_id",
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    with pytest.raises(StreamingQueryException, match="'tracking_id' is null in 1 of 3 rows"):
+        q.awaitTermination(120)
+    assert api.request_count == 0
+    assert not sink.exists()
+
+
 def _events_stream(spark, sf_dir, tmp_path):
     # re-materialize events (ts normalized) as a file stream source
     from distributed_api_etl_spark.queries.registry import table
