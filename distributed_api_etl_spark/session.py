@@ -20,6 +20,15 @@ def _cpus() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
 
+def _driver_memory() -> str:
+    """``SPARK_DRIVER_MEMORY``, else a quarter of physical memory capped at
+    8g: a fixed 8g runs a small box out of memory once a few sessions share
+    it."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    mb = min(8192, phys // 4 // 2**20)
+    return os.environ.get("SPARK_DRIVER_MEMORY", f"{mb}m")
+
+
 # Engine defaults that are settable at runtime: :func:`get_spark` builds
 # them into a new session and :func:`apply_runtime_conf` sets them on one
 # created elsewhere (an external harness).
@@ -57,7 +66,7 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
     )
     for k, v in {**_RUNTIME_CONF, **(extra_conf or {})}.items():

@@ -22,13 +22,15 @@ cross-batch state each stage needs held in a parquet/JSON RecipeStore:
 - **manifest/** (parquet, batch-keyed subdirs) — the shipped-document
   manifest, one row per packed document: the recipe's loader-facing
   output.
-- **commit.json** — the store's single ATOMIC commit point (tmp+rename):
-  the high-water mark of the last applied micro-batch plus the two
-  bounded per-group states — per-language (admitted tokens, closed)
-  pairs (the streaming_token_budget_admission contract: first rejection
-  closes the group for the stream's lifetime; O(languages)) and the
-  per-shard token base so pack ids/offsets continue across batches
-  (O(shards)).
+- **commits/** — the single ATOMIC commit point, shaped like Structured
+  Streaming's own ``commits/`` log: one small JSON file per committed
+  batch id, written under a hidden name and renamed into place. The
+  largest id is the high-water mark; its file also holds the two bounded
+  per-group states — per-language (admitted tokens, closed) pairs (the
+  streaming_token_budget_admission contract: first rejection closes the
+  group for the stream's lifetime; O(languages)) and the per-shard token
+  base so pack ids/offsets continue across batches (O(shards)).
+- **checkpoint/** — the stream checkpoint (run_streaming_training_recipe).
 
 Exactly-once per batch_id (the backfill-bookmark pattern,
 orchestration/backfill.py, applied at the foreachBatch grain):
@@ -42,7 +44,7 @@ store makes the replay a no-op or a clean redo:
 - readers enumerate COMMITTED inputs only (subdirs with id <= the
   high-water mark, plus the flat compacted baseline) — a crashed
   attempt's partial subdir is invisible to the batch that redoes it;
-- ``commit.json`` (mark + budget + pack state together) is written LAST
+- the commit mark (mark + budget + pack state together) is written LAST
   and atomically, so the budget/pack state a redo reads is always the
   PRE-batch state;
 - a re-delivered ``batch_id <=`` the mark returns immediately.
@@ -52,7 +54,8 @@ the stream recovers — the same contract the batch loop gets from its
 sink anti-join (reference batch_processor.py:36-40) and the backfill
 driver from its bookmark. The store and the stream's checkpoint must
 live and die together (reset() both or neither): batch ids are
-checkpoint-scoped.
+checkpoint-scoped, so the runner keeps the checkpoint under the store
+root and reset() drops both.
 
 Semantics contract (the same split the graded streaming family uses):
 
@@ -81,17 +84,18 @@ Spark-first extension of its ingest pipeline to continuous arrival.
 from __future__ import annotations
 
 import json
-import os
 import re
-import shutil
-import tempfile
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from distributed_api_etl_spark.core.table_manager import swap_in_rewrite, swap_scratch
+from distributed_api_etl_spark.core.table_manager import (
+    hadoop_fs,
+    recover_scratch,
+    swap_in_rewrite,
+)
 from distributed_api_etl_spark.functions.portable import portable_hash32
 
 
@@ -117,60 +121,85 @@ class RecipeConfig:
 
 
 class RecipeStore:
-    """Filesystem state of the streaming recipe (layout + exactly-once
+    """Stored state of the streaming recipe (layout + exactly-once
     contract in the module doc).
 
-    ``commit.json`` is written atomically (tmp + rename) so a crashed
-    batch can never leave a torn commit; parquet stores hold one
-    ``b{batch_id:09d}/`` subdir per committed batch plus an optional flat
-    compacted baseline (:meth:`compact`). The JSON state is bounded by
-    construction (O(languages) + O(shards)); only the parquet stores
-    scale with the corpus, and they are only ever scanned, never
-    collected. The store's paths are driver-visible filesystem paths (a
-    POSIX path or a mounted object store) — the same deployment
-    constraint as a Structured Streaming checkpoint dir.
+    Every filesystem operation goes through the Hadoop FileSystem that
+    resolves ``root`` (core/table_manager.py:hadoop_fs), so a bare path,
+    ``file://``, ``hdfs://`` or ``s3a://`` root behaves the same. Parquet
+    stores hold one ``b{batch_id:09d}/`` subdir per committed batch plus an
+    optional flat compacted baseline (:meth:`compact`). The JSON state is
+    bounded by construction (O(languages) + O(shards)); only the parquet
+    stores scale with the corpus, and they are only ever scanned, never
+    collected.
     """
 
-    def __init__(self, root: str) -> None:
-        self.root = root
-        self.feats_dir = os.path.join(root, "keeper_feats")
-        self.bands_dir = os.path.join(root, "keeper_bands")
-        self.pfps_dir = os.path.join(root, "passage_fps")
-        self.manifest_dir = os.path.join(root, "manifest")
-        self.commit_path = os.path.join(root, "commit.json")
+    def __init__(self, spark: SparkSession, root: str) -> None:
+        self.spark = spark
+        self.root = root.rstrip("/")
+        self.fs, self._path = hadoop_fs(spark, self.root)
+        self.feats_dir = f"{self.root}/keeper_feats"
+        self.bands_dir = f"{self.root}/keeper_bands"
+        self.pfps_dir = f"{self.root}/passage_fps"
+        self.manifest_dir = f"{self.root}/manifest"
+        self.commits_dir = f"{self.root}/commits"
+        self.checkpoint_dir = f"{self.root}/checkpoint"
 
     def reset(self) -> None:
-        shutil.rmtree(self.root, ignore_errors=True)
-        os.makedirs(self.root, exist_ok=True)
+        """Drop the whole store, the stream checkpoint under it included."""
+        self.fs.delete(self._path(self.root), True)
+        self.fs.mkdirs(self._path(self.root))
 
     def _parquet_dirs(self) -> tuple[str, ...]:
         return (self.feats_dir, self.bands_dir, self.pfps_dir, self.manifest_dir)
 
-    # -- commit marker ------------------------------------------------------
+    # -- commit log ----------------------------------------------------------
+
+    def _marks(self) -> list[int]:
+        return [
+            int(st.getPath().getName())
+            for st in self.fs.globStatus(self._path(f"{self.commits_dir}/[0-9]*"))
+        ]
 
     def _read_commit(self) -> dict:
-        if not os.path.exists(self.commit_path):
+        marks = self._marks()
+        if not marks:
             return {}
-        with open(self.commit_path) as f:
-            return json.load(f)
+        io = self.spark.sparkContext._jvm.org.apache.hadoop.io.IOUtils  # noqa: SLF001
+        stream = self.fs.open(self._path(f"{self.commits_dir}/{max(marks)}"))
+        try:
+            return json.loads(bytes(io.readFullyToByteArray(stream)))
+        finally:
+            stream.close()
 
     def last_committed(self) -> int:
         """High-water mark: the largest batch_id whose effects are fully
         applied, or -1 before the first commit."""
-        return int(self._read_commit().get("batch_id", -1))
+        marks = self._marks()
+        return max(marks) if marks else -1
 
     def commit(self, batch_id: int, budget_state: dict, pack_state: dict) -> None:
         """Atomically publish a batch: mark + both bounded states in ONE
-        rename, so a redo always reads the pre-batch state."""
+        file, written under a hidden name and renamed to ``commits/<id>``,
+        so a redo always reads the pre-batch state. Older marks are
+        deleted once the new one has landed."""
         obj = {
             "batch_id": int(batch_id),
             "budget": {k: list(v) for k, v in budget_state.items()},
             "pack": {str(k): int(v) for k, v in pack_state.items()},
         }
-        tmp = self.commit_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(obj, f)
-        os.replace(tmp, self.commit_path)
+        tmp = self._path(f"{self.commits_dir}/.{int(batch_id)}.tmp")
+        out = self.fs.create(tmp, True)
+        try:
+            out.write(json.dumps(obj).encode())
+        finally:
+            out.close()
+        # Hadoop rename never overwrites: an existing mark fails it
+        if not self.fs.rename(tmp, self._path(f"{self.commits_dir}/{int(batch_id)}")):
+            raise OSError(f"recipe store {self.root!r}: commit of batch {batch_id} failed")
+        for old in self._marks():
+            if old < batch_id:
+                self.fs.delete(self._path(f"{self.commits_dir}/{old}"), False)
 
     def read_budget_state(self) -> dict[str, tuple[int, bool]]:
         return {
@@ -187,53 +216,29 @@ class RecipeStore:
 
     @staticmethod
     def batch_subdir(d: str, batch_id: int) -> str:
-        return os.path.join(d, f"b{batch_id:09d}")
-
-    @staticmethod
-    def _heal(d: str) -> None:
-        # a crash between compact()'s two renames leaves the data parked at
-        # the swap's old name and nothing at d: restore it (the compaction
-        # is lost, the data is not). Next to a live d, the old copy is a
-        # finished swap's leftover.
-        old = swap_scratch(d, "compact", "old")
-        if not os.path.isdir(old):
-            return
-        if os.path.isdir(d):
-            shutil.rmtree(old)
-        else:
-            os.rename(old, d)
-
-    @staticmethod
-    def _dir_has_parquet(p: str) -> bool:
-        return os.path.isdir(p) and any(
-            f.endswith(".parquet") for f in os.listdir(p)
-        )
+        return f"{d}/b{batch_id:09d}"
 
     def _committed_inputs(self, d: str) -> list[str]:
         """Readable inputs under ``d``: the flat compacted baseline (only
         ever produced from committed batches) + committed batch subdirs.
         An in-flight or crashed batch's subdir (id > mark) is excluded —
-        that is what makes a redo read exactly the pre-batch corpus."""
-        self._heal(d)
-        if not os.path.isdir(d):
-            return []
+        that is what makes a redo read exactly the pre-batch corpus. A
+        crashed compaction's swap leftovers are resolved first
+        (table_manager.recover_scratch)."""
+        recover_scratch(self.spark, d)
         hwm = self.last_committed()
-        out = []
-        for name in sorted(os.listdir(d)):
-            p = os.path.join(d, name)
-            if name.endswith(".parquet") and os.path.isfile(p):
-                out.append(p)
-            elif (
-                (m := re.fullmatch(r"b(\d{9})", name))
-                and int(m.group(1)) <= hwm
-                and self._dir_has_parquet(p)
-            ):
-                out.append(p)
-        return out
+        name = d.rsplit("/", 1)[-1]
+        out = set()
+        for st in self.fs.globStatus(self._path(f"{d}/{{*.parquet,b*/*.parquet}}")):
+            parent = st.getPath().getParent()
+            m = re.fullmatch(r"b(\d{9})", parent.getName())
+            if m is None and parent.getName() == name:
+                out.add(st.getPath().toString())
+            elif m is not None and int(m.group(1)) <= hwm:
+                out.add(parent.toString())
+        return sorted(out)
 
-    def read_dedup_state(
-        self, spark: SparkSession
-    ) -> tuple[DataFrame, DataFrame, DataFrame] | None:
+    def read_dedup_state(self) -> tuple[DataFrame, DataFrame, DataFrame] | None:
         """(keeper features, keeper bands, passage fingerprints) of every
         COMMITTED batch, or None while no committed batch holds keepers."""
         feats = self._committed_inputs(self.feats_dir)
@@ -241,20 +246,17 @@ class RecipeStore:
         pfps = self._committed_inputs(self.pfps_dir)
         if not (feats and bands and pfps):
             return None
-        return (
-            spark.read.parquet(*feats),
-            spark.read.parquet(*bands),
-            spark.read.parquet(*pfps),
-        )
+        read = self.spark.read.parquet
+        return read(*feats), read(*bands), read(*pfps)
 
-    def read_manifest(self, spark: SparkSession) -> DataFrame:
+    def read_manifest(self) -> DataFrame:
         inputs = self._committed_inputs(self.manifest_dir)
         if not inputs:
             raise ValueError(
                 f"recipe store {self.root!r} has no committed manifest — did "
                 "the stream produce zero admitted documents?"
             )
-        return spark.read.parquet(*inputs)
+        return self.spark.read.parquet(*inputs)
 
     # -- maintenance --------------------------------------------------------
 
@@ -264,15 +266,13 @@ class RecipeStore:
         checkpoint will re-deliver that batch."""
         hwm = self.last_committed()
         for d in self._parquet_dirs():
-            self._heal(d)
-            if not os.path.isdir(d):
-                continue
-            for name in os.listdir(d):
-                m = re.fullmatch(r"b(\d{9})", name)
+            recover_scratch(self.spark, d)
+            for st in self.fs.globStatus(self._path(f"{d}/b*")):
+                m = re.fullmatch(r"b(\d{9})", st.getPath().getName())
                 if m and int(m.group(1)) > hwm:
-                    shutil.rmtree(os.path.join(d, name), ignore_errors=True)
+                    self.fs.delete(st.getPath(), True)
 
-    def compact(self, spark: SparkSession, target_files: int = 4) -> dict:
+    def compact(self, target_files: int = 4) -> dict:
         """Merge each store dir's committed content into a flat baseline of
         ``target_files`` files — the per-batch-subdir file-listing tax
         (O(batches) dirs) goes back to O(1) while results are byte-identical
@@ -282,31 +282,23 @@ class RecipeStore:
         point outside the sink callback is a committed boundary). Crash
         contract: the rewrite is swapped in by the table manager's
         two-rename swap; a crash between the renames is healed on the next
-        read (:meth:`_heal` — the compaction is lost, the store is not).
-        Uncommitted partials are discarded first so a crashed attempt's
-        rows can never be folded into the committed baseline. Returns a
-        per-dir {files_before, files_after} census."""
+        read (table_manager.recover_scratch — the compaction is lost, the
+        store is not). Uncommitted partials are discarded first so a
+        crashed attempt's rows can never be folded into the committed
+        baseline. Returns a per-dir {files_before, files_after} census."""
         self.discard_uncommitted()
         census: dict[str, dict[str, int]] = {}
         for d in self._parquet_dirs():
             inputs = self._committed_inputs(d)
             if not inputs:
                 continue
-            files_before = sum(
-                len([f for f in os.listdir(p) if f.endswith(".parquet")])
-                if os.path.isdir(p)
-                else 1
-                for p in inputs
-            )
-            df = spark.read.parquet(*inputs)
-            swap_in_rewrite(
-                spark, d, "compact", df.coalesce(target_files).write.mode("overwrite").parquet
-            )
-            census[os.path.basename(d)] = {
+            df = self.spark.read.parquet(*inputs)
+            files_before = len(df.inputFiles())
+            write = df.coalesce(target_files).write.mode("overwrite").parquet
+            swap_in_rewrite(self.spark, d, "compact", write)
+            census[d.rsplit("/", 1)[-1]] = {
                 "files_before": files_before,
-                "files_after": len(
-                    [f for f in os.listdir(d) if f.endswith(".parquet")]
-                ),
+                "files_after": len(self.spark.read.parquet(d).inputFiles()),
             }
         return census
 
@@ -388,7 +380,7 @@ def _process_recipe_batch_inner(
     )
 
     # -- stage 2: near-dup keep-set (standing-wins across batches) ---------
-    standing = store.read_dedup_state(spark)
+    standing = store.read_dedup_state()
     if standing is None:
         survivors0 = gated
         within = minhash_lsh_pairs(
@@ -694,10 +686,11 @@ def run_streaming_training_recipe(
     """Drain ``stream`` (doc_id, lang, text) through the recipe sink with a
     fresh store, and return (manifest DataFrame, executed micro-batch plan).
 
-    The store is RESET — this runner is the graded/oracle entry point (one
-    deterministic replay); a production deployment would keep the store and
-    checkpoint across runs instead (they must live and die together —
-    exactly-once hinges on checkpoint-scoped batch ids, see module doc).
+    The store is RESET, its checkpoint (``<store_dir>/checkpoint``) with
+    it — this runner is the graded/oracle entry point (one deterministic
+    replay); a production deployment would keep the store and checkpoint
+    across runs instead (they must live and die together — exactly-once
+    hinges on checkpoint-scoped batch ids, see module doc).
 
     ``crash_after_batch=N`` exercises the RECOVERY path under the same
     oracle: the sink raises AFTER batch N's store commit but BEFORE the
@@ -709,7 +702,7 @@ def run_streaming_training_recipe(
     head's batch-replay oracle asserts."""
     from pyspark.errors import StreamingQueryException
 
-    store = RecipeStore(store_dir)
+    store = RecipeStore(spark, store_dir)
     store.reset()
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -725,7 +718,7 @@ def run_streaming_training_recipe(
     def _drain(sink) -> str | None:
         q = (
             stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
+            .option("checkpointLocation", store.checkpoint_dir)
             .trigger(availableNow=True)
             .start()
         )
@@ -740,25 +733,21 @@ def run_streaming_training_recipe(
         except Exception:
             return None
 
-    ckpt = tempfile.mkdtemp(prefix="recipe_stream_ckpt_")
-    try:
-        if crash_after_batch is None:
-            plan = _drain(_sink)
-        else:
-            try:
-                _drain(_sink)
-                raise AssertionError(
-                    "injected crash did not fire — the restart path was "
-                    "not exercised"
-                )
-            except StreamingQueryException:
-                pass  # the injected at-least-once window: batch N committed
-                # to the store, not to the checkpoint
-            if store.last_committed() < crash_after_batch:
-                raise AssertionError(
-                    "crash fired before the store commit it must follow"
-                )
-            plan = _drain(_clean_sink)  # restart: engine redelivers batch N
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return store.read_manifest(spark), plan
+    if crash_after_batch is None:
+        plan = _drain(_sink)
+    else:
+        try:
+            _drain(_sink)
+            raise AssertionError(
+                "injected crash did not fire — the restart path was "
+                "not exercised"
+            )
+        except StreamingQueryException:
+            pass  # the injected at-least-once window: batch N committed
+            # to the store, not to the checkpoint
+        if store.last_committed() < crash_after_batch:
+            raise AssertionError(
+                "crash fired before the store commit it must follow"
+            )
+        plan = _drain(_clean_sink)  # restart: engine redelivers batch N
+    return store.read_manifest(), plan

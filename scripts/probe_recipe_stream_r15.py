@@ -36,7 +36,7 @@ def main(sf_dir: str, n_batches: int) -> None:
     spark = (
         SparkSession.builder.master("local[8]")
         .config("spark.sql.shuffle.partitions", "32")
-        # the engine default (session.py) — the 1g JVM default GC-thrashes
+        # pinned: the 1g JVM default GC-thrashes
         # the multi-batch drain into superlinear per-batch walls
         .config("spark.driver.memory", "8g")
         .config("spark.ui.enabled", "false")
@@ -88,7 +88,7 @@ def main(sf_dir: str, n_batches: int) -> None:
             if f.endswith(".parquet") and f not in seen:
                 seen.add(f)
                 os.utime(path, (t, t))
-    store = RecipeStore(tempfile.mkdtemp(prefix="recipe_probe_store_"))
+    store = RecipeStore(spark, tempfile.mkdtemp(prefix="recipe_probe_store_"))
     store.reset()
     walls: list[dict] = []
 
@@ -108,7 +108,6 @@ def main(sf_dir: str, n_batches: int) -> None:
             }
         )
 
-    ckpt = tempfile.mkdtemp(prefix="recipe_probe_ckpt_")
     stream = (
         spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 1)
@@ -116,12 +115,12 @@ def main(sf_dir: str, n_batches: int) -> None:
     )
     q = (
         stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", ckpt)
+        .option("checkpointLocation", store.checkpoint_dir)
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination(1800)
-    manifest = store.read_manifest(spark).count()
+    manifest = store.read_manifest().count()
     print(
         json.dumps(
             {
@@ -134,7 +133,6 @@ def main(sf_dir: str, n_batches: int) -> None:
             indent=2,
         )
     )
-    shutil.rmtree(ckpt, ignore_errors=True)
     shutil.rmtree(src, ignore_errors=True)
 
 

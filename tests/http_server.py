@@ -19,7 +19,9 @@ class MockApiServer:
         self.flaky_seen: dict[str, int] = {}
         self.auth_headers: list[str] = []
         self.token_grants = 0
-        self._lock = threading.Lock()
+        self.hold_expired = False
+        # a Condition so /slow's ``hold`` can wait for the in-flight count
+        self._lock = threading.Condition()
         outer = self
 
         class Handler(BaseHTTPRequestHandler):
@@ -48,6 +50,7 @@ class MockApiServer:
                     outer.request_count += 1
                     outer.in_flight += 1
                     outer.max_in_flight = max(outer.max_in_flight, outer.in_flight)
+                    outer._lock.notify_all()
                     if auth := self.headers.get("Authorization"):
                         outer.auth_headers.append(auth)
                 try:
@@ -55,6 +58,19 @@ class MockApiServer:
                         time.sleep(0.002)
                         self._reply(200, {"echo": params})
                     elif parsed.path == "/slow":
+                        # ``hold=N``: park each request until N have been in
+                        # flight at once, or until one has waited 2 s, then
+                        # release everything — the overlap a test reads then
+                        # measures the client's cap, not how its first sends
+                        # happened to be scheduled
+                        hold = int(params.get("hold", 0))
+                        with outer._lock:
+                            if not outer._lock.wait_for(
+                                lambda: outer.hold_expired or outer.max_in_flight >= hold,
+                                timeout=2.0,
+                            ):
+                                outer.hold_expired = True
+                                outer._lock.notify_all()
                         # I/O-bound API emulation: latency from the ms param
                         time.sleep(float(params.get("ms", "50")) / 1000.0)
                         self._reply(200, {"echo": params})

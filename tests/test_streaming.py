@@ -1146,11 +1146,12 @@ def _recipe_eo_batches(spark):
     return spark.createDataFrame(b1, schema), spark.createDataFrame(b2, schema)
 
 
-def _recipe_census(spark, store):
+def _recipe_census(store):
     """Logical store content: manifest rows, dedup-state cardinalities,
-    and the full commit JSON — everything a replay could corrupt."""
-    manifest = sorted(tuple(r) for r in store.read_manifest(spark).collect())
-    standing = store.read_dedup_state(spark)
+    and the committed mark with its budget and pack state — everything a
+    replay could corrupt."""
+    manifest = sorted(tuple(r) for r in store.read_manifest().collect())
+    standing = store.read_dedup_state()
     feats, bands, pfps = (
         (d.count() for d in standing) if standing else (0, 0, 0)
     )
@@ -1159,8 +1160,40 @@ def _recipe_census(spark, store):
         "feats": feats,
         "bands": bands,
         "pfps": pfps,
-        "commit": store._read_commit(),
+        "mark": store.last_committed(),
+        "budget": store.read_budget_state(),
+        "pack": store.read_pack_state(),
     }
+
+
+def test_recipe_store_bare_and_uri_roots_are_one_store(spark, tmp_path, monkeypatch):
+    """A bare path and its ``file://`` form name ONE store: both views read
+    the same mark, state and committed inputs, and a ``file://`` root never
+    lands under the working directory."""
+    from distributed_api_etl_spark.streaming.recipe import RecipeStore
+
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    root = str(tmp_path / "one_store")
+    uri = RecipeStore(spark, "file://" + root)
+    uri.reset()
+    spark.range(3).write.parquet(uri.batch_subdir(uri.manifest_dir, 0))
+    uri.commit(0, {"en": (5, False)}, {0: 5})
+    assert not any(cwd.iterdir())
+    bare = RecipeStore(spark, root)
+    views = [
+        (
+            s.last_committed(),
+            s.read_budget_state(),
+            s.read_pack_state(),
+            sorted(s.read_manifest().inputFiles()),
+        )
+        for s in (bare, uri)
+    ]
+    assert views[0] == views[1]
+    assert views[0][:3] == (0, {"en": (5, False)}, {0: 5})
+    assert views[0][3] and all("/one_store/manifest/b000000000/" in f for f in views[0][3])
 
 
 def test_recipe_redelivery_of_committed_batch_is_noop(spark, tmp_path):
@@ -1175,15 +1208,17 @@ def test_recipe_redelivery_of_committed_batch_is_noop(spark, tmp_path):
 
     b1, b2 = _recipe_eo_batches(spark)
     cfg = _recipe_eo_cfg()
-    store = RecipeStore(str(tmp_path / "eo_store"))
+    # a URI root: every store operation must resolve it like Spark does
+    store = RecipeStore(spark, "file://" + str(tmp_path / "eo_store"))
     store.reset()
     process_recipe_batch(b1, store, cfg, 0)
     process_recipe_batch(b2, store, cfg, 1)
-    snap = _recipe_census(spark, store)
+    snap = _recipe_census(store)
+    assert snap["mark"] == 1 and snap["feats"] > 0
     # redeliver BOTH committed batches, out of order for good measure
     process_recipe_batch(b2, store, cfg, 1)
     process_recipe_batch(b1, store, cfg, 0)
-    assert _recipe_census(spark, store) == snap
+    assert _recipe_census(store) == snap
 
 
 def test_recipe_crash_before_commit_redoes_cleanly(spark, tmp_path):
@@ -1200,35 +1235,34 @@ def test_recipe_crash_before_commit_redoes_cleanly(spark, tmp_path):
     b1, b2 = _recipe_eo_batches(spark)
     cfg = _recipe_eo_cfg()
 
-    clean = RecipeStore(str(tmp_path / "eo_clean"))
+    clean = RecipeStore(spark, str(tmp_path / "eo_clean"))
     clean.reset()
     process_recipe_batch(b1, clean, cfg, 0)
     process_recipe_batch(b2, clean, cfg, 1)
-    want = _recipe_census(spark, clean)
+    want = _recipe_census(clean)
 
     class _CrashBeforeCommit(RecipeStore):
         def commit(self, batch_id, budget_state, pack_state):
             raise RuntimeError("injected crash between appends and commit")
 
-    root = str(tmp_path / "eo_crash")
-    store = RecipeStore(root)
+    # the store under test sits on a URI root, the clean reference on a
+    # bare path: the census equality also proves the two land alike
+    root = "file://" + str(tmp_path / "eo_crash")
+    store = RecipeStore(spark, root)
     store.reset()
     process_recipe_batch(b1, store, cfg, 0)
-    after_b1 = _recipe_census(spark, store)
-    import pytest as _pytest
+    after_b1 = _recipe_census(store)
 
-    with _pytest.raises(RuntimeError, match="injected crash"):
-        process_recipe_batch(b2, _CrashBeforeCommit(root), cfg, 1)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        process_recipe_batch(b2, _CrashBeforeCommit(spark, root), cfg, 1)
     # between crash and recovery: batch 1's partial subdirs exist on disk
     # but every read exposes ONLY batch 0 — no double admission
-    import os as _os
-
-    assert _os.path.isdir(store.batch_subdir(store.manifest_dir, 1))
-    assert _recipe_census(spark, store) == after_b1
+    assert (tmp_path / "eo_crash" / "manifest" / "b000000001").is_dir()
+    assert _recipe_census(store) == after_b1
     # recovery: the checkpoint re-delivers batch 1; the redo overwrites the
     # partials and lands on the crash-free state
     process_recipe_batch(b2, store, cfg, 1)
-    assert _recipe_census(spark, store) == want
+    assert _recipe_census(store) == want
 
 
 def test_recipe_partial_dedup_subdir_is_ignored_and_overwritten(spark, tmp_path):
@@ -1243,18 +1277,18 @@ def test_recipe_partial_dedup_subdir_is_ignored_and_overwritten(spark, tmp_path)
 
     b1, b2 = _recipe_eo_batches(spark)
     cfg = _recipe_eo_cfg()
-    store = RecipeStore(str(tmp_path / "eo_partial"))
+    store = RecipeStore(spark, "file://" + str(tmp_path / "eo_partial"))
     store.reset()
     # simulate a first-batch crash that got as far as writing feats only
     b1.limit(3).write.parquet(store.batch_subdir(store.feats_dir, 0))
-    assert store.read_dedup_state(spark) is None  # uncommitted => invisible
+    assert store.read_dedup_state() is None  # uncommitted => invisible
     process_recipe_batch(b1, store, cfg, 0)
     process_recipe_batch(b2, store, cfg, 1)
-    clean = RecipeStore(str(tmp_path / "eo_partial_clean"))
+    clean = RecipeStore(spark, str(tmp_path / "eo_partial_clean"))
     clean.reset()
     process_recipe_batch(b1, clean, cfg, 0)
     process_recipe_batch(b2, clean, cfg, 1)
-    assert _recipe_census(spark, store) == _recipe_census(spark, clean)
+    assert _recipe_census(store) == _recipe_census(clean)
 
 
 def test_recipe_compaction_between_batches_is_noop(spark, tmp_path):
@@ -1274,59 +1308,68 @@ def test_recipe_compaction_between_batches_is_noop(spark, tmp_path):
     )
     cfg = _recipe_eo_cfg()
 
-    plain = RecipeStore(str(tmp_path / "cmp_plain"))
+    plain = RecipeStore(spark, str(tmp_path / "cmp_plain"))
     plain.reset()
     for i, b in enumerate((b1, b2, b3)):
         process_recipe_batch(b, plain, cfg, i)
-    want = _recipe_census(spark, plain)
+    want = _recipe_census(plain)
 
-    compacted = RecipeStore(str(tmp_path / "cmp_compact"))
+    compacted = RecipeStore(spark, "file://" + str(tmp_path / "cmp_compact"))
     compacted.reset()
     process_recipe_batch(b1, compacted, cfg, 0)
     process_recipe_batch(b2, compacted, cfg, 1)
-    pre = _recipe_census(spark, compacted)
-    census = compacted.compact(spark, target_files=1)
+    pre = _recipe_census(compacted)
+    census = compacted.compact(target_files=1)
     assert census, "two committed batches must leave something to compact"
     for d, c in census.items():
         assert c["files_after"] <= 1, (d, c)
         assert c["files_after"] < c["files_before"], (d, c)
     # committed reads unchanged by the rewrite...
-    assert _recipe_census(spark, compacted) == pre
+    assert _recipe_census(compacted) == pre
     # ...and the NEXT batch over the compacted baseline lands exactly where
     # the uncompacted store does (near-dup 203 still collides with standing
     # keeper 102 through the compacted feats/bands)
     process_recipe_batch(b3, compacted, cfg, 2)
-    got = _recipe_census(spark, compacted)
+    got = _recipe_census(compacted)
     assert got == want
     assert all(r[0] != 203 for r in got["manifest"])  # standing-wins held
 
 
-def test_recipe_store_heals_a_crash_between_the_swap_renames(spark, tmp_path):
+@pytest.mark.parametrize("scheme", ["", "file://"], ids=["bare", "file_uri"])
+def test_recipe_store_heals_a_crash_between_the_swap_renames(spark, tmp_path, scheme):
     """A compaction that crashed between its two renames leaves a store
     dir parked at ``<dir>__compact_old`` and nothing at ``<dir>``: the
     next read restores it and returns the same rows. A parked copy next
-    to a live dir (the swap finished, its delete did not) is dropped."""
-    import os
-    import shutil
-
+    to a live dir (the swap finished, its delete did not) and a rewrite
+    left at ``<dir>__compact_tmp`` (the crash hit before the first
+    rename) are dropped."""
     from distributed_api_etl_spark.streaming.recipe import (
         RecipeStore,
         process_recipe_batch,
     )
 
     b1, _ = _recipe_eo_batches(spark)
-    store = RecipeStore(str(tmp_path / "heal"))
+    store = RecipeStore(spark, scheme + str(tmp_path / "heal"))
     store.reset()
     process_recipe_batch(b1, store, _recipe_eo_cfg(), 0)
-    want = sorted(tuple(r) for r in store.read_manifest(spark).collect())
+
+    def manifest():
+        return sorted(tuple(r) for r in store.read_manifest().collect())
+
+    want = manifest()
     assert want
-    parked = store.manifest_dir + "__compact_old"
-    os.rename(store.manifest_dir, parked)
-    assert sorted(tuple(r) for r in store.read_manifest(spark).collect()) == want
-    assert os.path.isdir(store.manifest_dir) and not os.path.exists(parked)
-    shutil.copytree(store.manifest_dir, parked)
-    assert sorted(tuple(r) for r in store.read_manifest(spark).collect()) == want
-    assert not os.path.exists(parked)
+    fs, path = store.fs, store._path
+    live = path(store.manifest_dir)
+    parked = path(store.manifest_dir + "__compact_old")
+    assert fs.rename(live, parked)
+    assert manifest() == want
+    assert fs.exists(live) and not fs.exists(parked)
+    jvm, conf = spark.sparkContext._jvm, spark.sparkContext._jsc.hadoopConfiguration()
+    for stage in ("old", "tmp"):
+        scratch = path(f"{store.manifest_dir}__compact_{stage}")
+        assert jvm.org.apache.hadoop.fs.FileUtil.copy(fs, live, fs, scratch, False, conf)
+        assert manifest() == want
+        assert not fs.exists(scratch), stage
 
 
 def test_recipe_stream_restart_from_checkpoint(spark, tmp_path):
@@ -1349,13 +1392,13 @@ def test_recipe_stream_restart_from_checkpoint(spark, tmp_path):
 
     # clean reference: both batches through a fresh store, no interruption
     b1, b2 = _recipe_eo_batches(spark)
-    clean = RecipeStore(str(tmp_path / "restart_clean"))
+    clean = RecipeStore(spark, str(tmp_path / "restart_clean"))
     clean.reset()
     process_recipe_batch(b1, clean, cfg, 0)
     process_recipe_batch(b2, clean, cfg, 1)
-    want = _recipe_census(spark, clean)
+    want = _recipe_census(clean)
 
-    store = RecipeStore(str(tmp_path / "restart_store"))
+    store = RecipeStore(spark, str(tmp_path / "restart_store"))
     store.reset()
     ckpt = str(tmp_path / "restart_ckpt")
     schema = "doc_id bigint, lang string, text string"
@@ -1402,4 +1445,4 @@ def test_recipe_stream_restart_from_checkpoint(spark, tmp_path):
     assert q2.awaitTermination(600)
     # the engine re-delivered the uncommitted batch 0; the store skipped it
     assert replayed[0] == 0 and replayed[-1] == 1
-    assert _recipe_census(spark, store) == want
+    assert _recipe_census(store) == want

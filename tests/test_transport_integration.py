@@ -364,6 +364,7 @@ def test_concurrency_hides_io_latency():
                     "param_mapping": [
                         {"endpoint_param": "id", "source_column": "request_id"},
                         {"endpoint_param": "ms", "source_column": "ms"},
+                        {"endpoint_param": "hold", "source_column": "hold"},
                     ],
                 },
                 "transport": {"engine": "auto"},
@@ -376,18 +377,22 @@ def test_concurrency_hides_io_latency():
                 },
             }
 
-        rows = [{"request_id": str(i), "ms": "30"} for i in range(60)]
-
-        def run(conc):
+        def run(conc, hold=0):
+            rows = [
+                {"request_id": str(i), "ms": "30", "hold": str(hold)} for i in range(60)
+            ]
             ProcessScope.clear()
             t0 = _time.perf_counter()
-            out = list(run_rows(list(rows), cfg(conc)))
+            out = list(run_rows(rows, cfg(conc)))
             assert len(out) == 60 and all(r["status_code"] == 200 for r in out)
             return _time.perf_counter() - t0
 
         run(4)  # warm transport + event loop machinery
         seq = run(1)
-        conc = run(12)
+        # the server holds the first sends until 12 are in flight at once
+        # (2 s at most): a cap below 12 shows as max_in_flight < 12 and a
+        # slow run, never as first sends that merely arrived spread out
+        conc = run(12, hold=12)
         assert seq / conc > 2.5, (seq, conc)
         # the engine's own pool, not the loop's min(32, cores + 4) default
         # executor, bounds the sends: all 12 consumers are in flight at once
