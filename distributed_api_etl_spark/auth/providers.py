@@ -34,11 +34,16 @@ def _post_form(url: str, fields: dict[str, str], timeout: float = 10.0) -> dict:
         return json.loads(resp.read().decode())
 
 
-def _get_json(
-    url: str, timeout: float = 10.0, headers: dict[str, str] | None = None
-) -> dict:
-    req = urllib.request.Request(url, headers=headers or {})
-    with urllib.request.urlopen(req, timeout=timeout) as resp:
+# The driver's token RPC is fetched directly, never through ``*_proxy``
+# from the environment: a proxy would see the per-run X-Rpc-Auth secret and
+# the live bearer token in plain HTTP, and an unreachable one fails every
+# fetch. The OAuth grant to the external token_url keeps env proxies.
+_DIRECT = urllib.request.build_opener(urllib.request.ProxyHandler({}))
+
+
+def _get_rpc_json(url: str, timeout: float, headers: dict[str, str]) -> dict:
+    req = urllib.request.Request(url, headers=headers)
+    with _DIRECT.open(req, timeout=timeout) as resp:
         return json.loads(resp.read().decode())
 
 
@@ -91,7 +96,7 @@ class WorkerTokenProvider:
                 if self._rpc_url:
                     try:
                         return Token.from_json(
-                            _get_json(
+                            _get_rpc_json(
                                 self._rpc_url,
                                 timeout=10.0,
                                 headers={"X-Rpc-Auth": self._rpc_secret},

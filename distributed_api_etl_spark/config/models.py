@@ -266,7 +266,7 @@ class MiddlewareSpec(BaseModel):
 
 
 class TransportConfig(BaseModel):
-    engine: Literal["auto", "aiohttp", "requests", "mock"] = "auto"
+    engine: Literal["auto", "aiohttp", "asyncio", "mock"] = "auto"
     base_timeout: float = 30.0
     warmup: bool = False
     warmup_timeout: float = 10.0

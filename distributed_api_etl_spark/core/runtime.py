@@ -1,10 +1,11 @@
 """Worker-process-scoped resource cache + token-bucket rate limiter.
 
-``ProcessScope`` amortizes expensive resources (HTTP connection pools)
-across Spark tasks within one Python worker process — effective because
-``spark.python.worker.reuse`` defaults to true. Loop-bound resources
-(aiohttp sessions) must NOT live here; the partition executor keeps those
-task-scoped (see transport/base.py docstring).
+``ProcessScope`` keeps per-process resources (token providers, the mock
+transport engine) across Spark tasks within one Python worker process —
+effective because ``spark.python.worker.reuse`` defaults to true. Loop-bound
+resources (HTTP connection pools: sockets belong to the event loop) must NOT
+live here; the partition executor keeps those task-scoped (see
+transport/base.py docstring).
 
 ``RateLimiter`` implements ``execution.max_requests_per_second`` for real
 (documented-but-absent in the reference, docs/configuration.md:23,86).
@@ -51,15 +52,10 @@ class ProcessScope:
 
     @classmethod
     def clear(cls) -> None:
-        """Drop every instance, closing those that hold resources (transport
-        engines: sessions, sockets, thread pools) through their ``aclose``.
-        Call it outside a running event loop."""
+        """Drop every instance. None holds a socket or a thread: engines
+        that own connections are loop-bound and never cached here."""
         with cls._lock:
-            dropped = list(cls._instances.values())
             cls._instances.clear()
-        for inst in dropped:
-            if hasattr(inst, "aclose"):
-                asyncio.run(inst.aclose())
 
 
 class RateLimiter:
@@ -79,8 +75,6 @@ class RateLimiter:
         self._lock = None  # created lazily inside the running loop
 
     async def acquire(self) -> None:
-        import asyncio
-
         if self._lock is None:
             self._lock = asyncio.Lock()
         async with self._lock:

@@ -12,9 +12,9 @@ are yielded incrementally — the whole partition is never materialized (the
 reference returns ``list[Row]``; at 100 TB that's an OOM).
 
 Event-loop lifecycle: ``asyncio.run`` per chunk. Engines that are
-``loop_bound`` (aiohttp) are created/closed inside the loop; thread-based
-engines are process-scoped via ``ProcessScope`` and reused across tasks
-(``spark.python.worker.reuse`` makes this pay off).
+``loop_bound`` (asyncio, aiohttp: their sockets belong to the loop) are
+created and closed inside it; the mock engine is process-scoped via
+``ProcessScope`` and reused across tasks.
 
 Everything captured by the returned closure is a plain picklable dict.
 """

@@ -41,8 +41,8 @@ class AiohttpEngine(TransportEngine):
     ) -> None:
         if not aiohttp_available():  # pragma: no cover - env dependent
             raise ImportError(
-                "aiohttp is not installed; use transport.engine='requests' "
-                "(thread-bridged) or install aiohttp"
+                "aiohttp is not installed; use transport.engine='asyncio' "
+                "(stdlib) or install aiohttp"
             )
         self._base_timeout = base_timeout
         self._pool_limit = pool_limit

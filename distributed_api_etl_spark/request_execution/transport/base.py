@@ -5,10 +5,10 @@
 parity: engine.py:123-148, docs/transport.md:87-100).
 
 ``loop_bound`` tells the partition executor whether the engine holds
-event-loop-affine state (aiohttp sessions): loop-bound engines are created
-and closed inside each ``asyncio.run``; thread-based and mock engines are
-process-scoped and reused across tasks (SURVEY §7.4 hard-part #1, decided
-deliberately here).
+event-loop-affine state (sockets, aiohttp sessions): loop-bound engines are
+created and closed inside each ``asyncio.run``; the mock engine holds none
+and is process-scoped, reused across tasks (SURVEY §7.4 hard-part #1,
+decided deliberately here).
 """
 
 from __future__ import annotations
@@ -26,7 +26,9 @@ class TransportEngine(abc.ABC):
     loop_bound: bool = False
 
     async def warmup(self, base_url: str, timeout: float) -> dict:
-        """Prime DNS/TCP/TLS; failures are non-fatal diagnostics."""
+        """Prime the engine before the first row; failures are non-fatal
+        diagnostics. This default sends one GET to ``base_url``; engines
+        with a connection pool open a connection instead."""
         req = TransportRequest(method="GET", url=base_url, timeout=timeout)
         resp = await self.send(req)
         return {"warmed_up": resp.error is None, "warmup_error": resp.error}

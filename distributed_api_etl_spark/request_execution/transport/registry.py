@@ -1,14 +1,15 @@
 """Engine selection: config dict -> TransportEngine instance.
 
-``auto`` prefers aiohttp (native async) and falls back to the thread-bridged
-requests engine; ``mock`` is the deterministic in-process responder.
+``auto`` prefers aiohttp and falls back to the stdlib asyncio engine; both
+run their sockets on the chunk's event loop. ``mock`` is the deterministic
+in-process responder.
 """
 
 from __future__ import annotations
 
+from distributed_api_etl_spark.request_execution.transport.asyncio_engine import AsyncioEngine
 from distributed_api_etl_spark.request_execution.transport.base import TransportEngine
 from distributed_api_etl_spark.request_execution.transport.mock import MockEngine
-from distributed_api_etl_spark.request_execution.transport.threaded import RequestsEngine
 
 
 def build_engine(transport: dict) -> TransportEngine:
@@ -20,7 +21,7 @@ def build_engine(transport: dict) -> TransportEngine:
             aiohttp_available,
         )
 
-        name = "aiohttp" if aiohttp_available() else "requests"
+        name = "aiohttp" if aiohttp_available() else "asyncio"
 
     if name == "mock":
         return MockEngine(
@@ -33,23 +34,18 @@ def build_engine(transport: dict) -> TransportEngine:
     cert = None
     if transport.get("client_cert") and transport.get("client_key"):
         cert = (transport["client_cert"], transport["client_key"])
-    if name == "requests":
-        return RequestsEngine(
-            base_timeout=transport.get("base_timeout", 30.0),
-            pool_limit=transport.get("pool_limit", 100),
-            verify_tls=(ca_bundle or verify) if verify else False,
-            client_cert=cert,
-        )
-    if name == "aiohttp":
+    if name == "asyncio":
+        engine_cls = AsyncioEngine
+    elif name == "aiohttp":
         from distributed_api_etl_spark.request_execution.transport.aiohttp_engine import (
-            AiohttpEngine,
+            AiohttpEngine as engine_cls,
         )
-
-        return AiohttpEngine(
-            base_timeout=transport.get("base_timeout", 30.0),
-            pool_limit=transport.get("pool_limit", 100),
-            verify_tls=verify,
-            ca_bundle=ca_bundle,
-            client_cert=cert,
-        )
-    raise ValueError(f"unknown transport engine {name!r}")
+    else:
+        raise ValueError(f"unknown transport engine {name!r}")
+    return engine_cls(
+        base_timeout=transport.get("base_timeout", 30.0),
+        pool_limit=transport.get("pool_limit", 100),
+        verify_tls=verify,
+        ca_bundle=ca_bundle,
+        client_cert=cert,
+    )

@@ -67,7 +67,7 @@ def main() -> None:
     latency_ms = int(sys.argv[2]) if len(sys.argv) > 2 else 50
     srv = MockApiServer().start()
     try:
-        # warm the transport/thread pool outside the timed region
+        # warm the interpreter and the server outside the timed region
         run_once(srv.base_url, 5, 1, 4)
         seq = run_once(srv.base_url, n, latency_ms, 1)
         srv.max_in_flight = 0

@@ -3,7 +3,7 @@
 
 Boots the mock API server (a real ThreadingHTTPServer on an ephemeral
 port — the same one the transport integration tests use), then runs the
-complete orchestration path with the real aiohttp engine, OAuth2
+complete orchestration path with the real HTTP engine, OAuth2
 client-credentials auth (driver token manager + worker RPC), retry-after-503
 flakiness, and a parquet merge sink. Asserts end-state and prints a one-line
 JSON summary.
@@ -52,8 +52,8 @@ def main() -> int:
                     {"endpoint_param": "id", "source_column": "request_id"}
                 ],
             },
-            # "auto" picks aiohttp when installed, else the thread-bridged
-            # requests engine (what this runtime has)
+            # "auto" picks aiohttp when installed, else the stdlib asyncio
+            # engine; warmup opens one connection per chunk, sending nothing
             "transport": {"engine": "auto", "warmup": True},
             "auth": {
                 "type": "oauth2_client_credentials",

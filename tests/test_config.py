@@ -136,6 +136,16 @@ def test_unknown_middleware_rejected():
     assert [m.type for m in cfg.middleware] == ["logging", "timing", "worker_identity"]
 
 
+def test_transport_engine_names():
+    """The stdlib HTTP engine is ``asyncio``; the removed thread-pool
+    engine's name ``requests`` fails validation instead of resolving."""
+    for name in ("auto", "aiohttp", "asyncio", "mock"):
+        cfg = PipelineConfig.model_validate({**MINIMAL, "transport": {"engine": name}})
+        assert cfg.transport.engine == name
+    with pytest.raises(ValueError, match="requests"):
+        PipelineConfig.model_validate({**MINIMAL, "transport": {"engine": "requests"}})
+
+
 def test_all_example_configs_load(monkeypatch):
     """Every shipped example validates (secrets resolved from env)."""
     import glob

@@ -6,8 +6,6 @@ from __future__ import annotations
 import asyncio
 import time
 
-import pytest
-
 from distributed_api_etl_spark.core.bronze import BRONZE_COLUMNS
 from distributed_api_etl_spark.core.runtime import ProcessScope, RateLimiter
 from distributed_api_etl_spark.orchestration.partition_executor import (
@@ -145,24 +143,3 @@ def test_partition_fn_emits_bronze_tuples():
     assert set(out["status_code"]) == {200}
     params = dict(zip(out["request_id"], out["request_params"]))
     assert params == {str(i): {"id": str(i), "n": str(10 * i)} for i in range(5)}
-
-
-def test_clear_closes_process_scoped_engines():
-    """ProcessScope.clear() closes what it drops: a used RequestsEngine ends
-    with its session closed and its thread pool shut down."""
-    from distributed_api_etl_spark.request_execution.models import TransportRequest
-    from distributed_api_etl_spark.request_execution.transport.threaded import (
-        RequestsEngine,
-    )
-
-    engine = ProcessScope.get("transport:test", RequestsEngine)
-    # a refused connection still opens the session and the pool
-    resp = asyncio.run(engine.send(TransportRequest(method="GET", url="http://127.0.0.1:9/")))
-    assert resp.error is not None
-    session, pool = engine._session, engine._pool
-    assert session is not None and pool is not None
-    ProcessScope.clear()
-    assert engine._session is None and engine._pool is None
-    assert all(not a.poolmanager.pools for a in session.adapters.values())
-    with pytest.raises(RuntimeError, match="shutdown"):
-        pool.submit(print)

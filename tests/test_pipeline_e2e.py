@@ -170,7 +170,7 @@ def api():
 def http_config(api, sink_location=None, **execution):
     cfg = base_config(sink_location, **execution)
     cfg["endpoint"]["url"] = f"{api.base_url}/ok"
-    cfg["transport"] = {"engine": "requests", "base_timeout": 5.0}
+    cfg["transport"] = {"engine": "asyncio", "base_timeout": 5.0}
     return cfg
 
 

@@ -147,7 +147,7 @@ def _http_cfg(api, sink, path="/ok", **execution):
             "url": f"{api.base_url}{path}",
             "param_mapping": [{"endpoint_param": "id", "source_column": "request_id"}],
         },
-        "transport": {"engine": "requests", "base_timeout": 5.0},
+        "transport": {"engine": "asyncio", "base_timeout": 5.0},
         "execution": {"num_partitions": 2, "max_concurrent_requests": 8, **execution},
         "tables": {"sink": {"location": sink, "format": "parquet"}},
     }
